@@ -302,34 +302,32 @@ TFIDF_QUERY = "join hash batch"
 BM25_QUERY = "spark data join"
 
 
-def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _docs_scores(
+    spark: SparkSession, sf_dir: str, scorer: str, queries: dict[str, str]
+) -> DataFrame:
+    """(query_id, doc_id, score) from the documents front-end: one tokenize
+    Generate carrying doc_len over the spread scan. N rides IN-PLAN as a
+    broadcast 1-row count over the raw scan (no blocking count job; the
+    spread shuffle never pays for it); avgdl aggregates over the same spread
+    scan subtree as the postings, so AQE reuses that one shuffle."""
     docs = _docs_spread(spark, sf_dir)
-    # fused single-pass scorer (r6): one tokenize Generate carrying doc_len
-    # instead of separate postings + doc_stats passes — same scores, same
-    # oracle (ranking.tfidf_scores_docs docstring has the equivalence note).
-    # N rides IN-PLAN as a broadcast 1-row count over the raw scan (no
-    # blocking count job; the spread shuffle never pays for it)
-    scored = ranking.tfidf_scores_docs(
-        spark,
-        docs,
-        ranking.count_df(_docs(spark, sf_dir)),
-        TFIDF_QUERY,
-        text_col="text",
-    )
+    qpost = ranking.docs_query_postings(docs, queries, text_col="text")
+    n = ranking.count_df(_docs(spark, sf_dir))
+    if scorer == "bm25":
+        avgdl = ranking.avgdl_df(ranking.build_doc_stats(docs, text_col="text"))
+        return ranking.bm25_scores(qpost, queries, n, avgdl)
+    return ranking.tfidf_scores(qpost, queries, n)
+
+
+def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    scored = _docs_scores(spark, sf_dir, "tfidf", {"q": TFIDF_QUERY})
     return scored.select("doc_id", F.round("score", 4).alias("score")).orderBy(
         F.col("score").desc(), "doc_id"
     )
 
 
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_spread(spark, sf_dir)
-    scored = ranking.bm25_scores_docs(
-        spark,
-        docs,
-        ranking.count_df(_docs(spark, sf_dir)),
-        BM25_QUERY,
-        text_col="text",
-    )
+    scored = _docs_scores(spark, sf_dir, "bm25", {"q": BM25_QUERY})
     return scored.select("doc_id", F.round("score", 4).alias("score")).orderBy(
         F.col("score").desc(), "doc_id"
     )
@@ -345,15 +343,8 @@ BATCH_QUERIES = {
 
 
 def q_tfidf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF twin of bm25_batch — same one-pass batch serving shape
-    (fused single-pass postings since r6; same scores, same oracle)."""
-    scored = ranking.tfidf_scores_batch_docs(
-        spark,
-        _docs_spread(spark, sf_dir),
-        ranking.count_df(_docs(spark, sf_dir)),
-        BATCH_QUERIES,
-        text_col="text",
-    )
+    """TF-IDF twin of bm25_batch — same one-pass batch serving shape."""
+    scored = _docs_scores(spark, sf_dir, "tfidf", BATCH_QUERIES)
     return scored.select(
         "query_id", "doc_id", F.round("score", 4).alias("score")
     ).orderBy("query_id", "doc_id")
@@ -361,15 +352,8 @@ def q_tfidf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N queries scored in ONE postings pass (the serving shape: one
-    broadcast of all query terms, one scan, (query_id, doc_id, score));
-    fused single-pass postings since r6 — same scores, same oracle."""
-    scored = ranking.bm25_scores_batch_docs(
-        spark,
-        _docs_spread(spark, sf_dir),
-        ranking.count_df(_docs(spark, sf_dir)),
-        BATCH_QUERIES,
-        text_col="text",
-    )
+    broadcast of all query terms, one scan, (query_id, doc_id, score))."""
+    scored = _docs_scores(spark, sf_dir, "bm25", BATCH_QUERIES)
     return scored.select(
         "query_id", "doc_id", F.round("score", 4).alias("score")
     ).orderBy("query_id", "doc_id")

@@ -370,12 +370,6 @@ def make_fetcher(n: int, fuse_parse: bool = True):
         # lists was measured ~2x cheaper on the serialization half of the
         # fetch wave (guide §4.2: hand whole batches to vectorized native
         # code; the values are bit-identical, only the writer changes).
-        # Worker-side busy-time accounting (perf diagnosis only): append
-        # "pid elapsed rows" per task so python CPU share of the fetch wave
-        # can be split from JVM/scheduling overhead.
-        import os as _os
-        import time as _time
-
         import pyarrow as pa
 
         span_struct = pa.struct(
@@ -395,15 +389,11 @@ def make_fetcher(n: int, fuse_parse: bool = True):
                 ("spans", pa.list_(span_struct)),
             ]
         )
-        _timing = _os.environ.get("GOPROWL_WORKER_TIMING")
-        _busy = 0.0
-        _rows = 0
         # canonical heads by host id: "https://hK.test" == url(i) up to
         # "/p/", so `head == heads[host_id(i)]` validates the URL without
         # re-building the whole canonical string per row
         heads = [f"https://h{k}.test" for k in range(N_HOSTS)]
         for rb in batches:
-            _t0 = _time.time() if _timing else 0.0
             urls = rb.column(0).to_pylist()
             statuses, lats = [], []
             kinds: list[str] = []
@@ -461,13 +451,7 @@ def make_fetcher(n: int, fuse_parse: bool = True):
                 ],
                 schema=out_schema,
             )
-            if _timing:
-                _busy += _time.time() - _t0
-                _rows += len(urls)
             yield out
-        if _timing and _rows:
-            with open(_timing, "a") as fh:
-                fh.write(f"{_os.getpid()} {_busy:.3f} {_rows}\n")
 
     def gen_raw(batches):
         for pdf in batches:

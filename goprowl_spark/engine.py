@@ -122,15 +122,19 @@ class GoProwlSearchEngine:
             cached = (sid, int(row["n"]), float(row["avgdl"] or 0.0))
             self._corpus_stats = cached
         _, total, avgdl = cached
+        queries = {"q": query}
+        qpost = ranking.index_query_postings(postings, stats, queries)
         if scorer == "bm25":
-            scored = ranking.bm25_scores(
-                self.spark, postings, stats, total, query, avgdl=avgdl
-            )
+            scored = ranking.bm25_scores(qpost, queries, total, avgdl)
         elif scorer == "tfidf":
-            scored = ranking.tfidf_scores(self.spark, postings, stats, total, query)
+            scored = ranking.tfidf_scores(qpost, queries, total)
         else:
             raise ValueError(f"unknown scorer {scorer!r}")
-        return scored.limit(k)
+        return (
+            scored.select("doc_id", "score")
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .limit(k)
+        )
 
     # ------------------------------------------------------------ queries
 

@@ -46,8 +46,8 @@ def hits(
 
     for _ in range(iters):
         # L2 normalizers fold IN-PLAN as broadcast 1-row cross joins (the
-        # avgdl idiom, ranking.bm25_scores) — no scalar collect job per
-        # iteration; each iteration is the localCheckpoint job only
+        # corpus-stat idiom of ranking._per_query_term) — no scalar collect
+        # job per iteration; each iteration is the localCheckpoint job only
         auth_new = (
             e.join(ranks, e["src"] == ranks["node"])
             .groupBy("dst")

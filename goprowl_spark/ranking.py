@@ -5,7 +5,25 @@ Reference: the in-memory InvertedIndex (search/engine/indexer/indexer.go:
 (postings, doc_stats) built with explode + groupBy: partial (map-side)
 aggregation makes this a single shuffle at any scale.
 
-Scorers are closed-form Column algebra over the postings join — no UDFs:
+Scoring runs over ONE relation, ``qpost = (doc_id, doc_len, term, tf)``
+restricted to the query terms, built by either of two front-ends:
+
+* :func:`index_query_postings` — from the maintained ``postings ⋈
+  doc_stats`` tables (engine.search_ranked);
+* :func:`docs_query_postings` — straight from the documents table, in one
+  tokenize Generate that carries doc_len (the contract queries).
+
+Both restrict ``term`` with a literal IN list rather than a join. A join
+cannot be pushed below build_postings's groupBy by Catalyst (joins do not
+move through aggregates), so the tf aggregation would shuffle the ENTIRE
+exploded vocabulary before the slice. A literal IN filter on a grouping
+column IS pushed through the aggregate down to the exploded tokens,
+shrinking that shuffle to just the query terms' postings (measured 6.6 s →
+1.4 s on the sf0.1 tfidf_search headline, bit-identical output).
+
+Two scorers take ``qpost`` and a ``{query_id: query}`` batch and return
+``(query_id, doc_id, score)``; a single query is a one-entry batch. Both
+are closed-form Column algebra — no UDFs:
 
 * :func:`tfidf_scores` is bug-compatible with indexer.Search
   (indexer.go:59-83): tokenized query terms keep their multiplicity,
@@ -16,11 +34,16 @@ Scorers are closed-form Column algebra over the postings join — no UDFs:
   ranker.go:14-41): idf = ln(1+(N-df+0.5)/(df+0.5)), k1=1.2, b=0.75,
   with the boost product applied as a plain multiply (BoostScore,
   ranker.go:35-41).
+
+The corpus stats ``total_docs`` and ``avgdl`` are each a number (e.g. a
+per-snapshot cached value) or a 1-row DataFrame (:func:`count_df`,
+:func:`avgdl_df`) that rides a broadcast cross join, so a cold query needs
+no separate blocking stats job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 K1 = 1.2  # ranker.go:16
@@ -67,251 +90,141 @@ def build_doc_stats(
     )
 
 
-def _query_terms_df(spark: SparkSession, query: str) -> DataFrame:
-    """Query tokens with multiplicity (the reference loops raw tokens, so a
-    repeated term scores twice — indexer.go:66)."""
-    toks = tokenize(query)
-    counts: dict[str, int] = {}
-    for t in toks:
-        counts[t] = counts.get(t, 0) + 1
-    return spark.createDataFrame(
-        [(t, n) for t, n in counts.items()], "term string, mult long"
+def _batch_query_terms(queries: dict[str, str]) -> list[tuple[str, str, int]]:
+    """(query_id, term, multiplicity) rows — ONE tokenization used by both
+    the Spark scorers and the batch SQL oracles so they can never drift."""
+    rows: list[tuple[str, str, int]] = []
+    for qid, q in sorted(queries.items()):
+        counts: dict[str, int] = {}
+        for t in tokenize(q):
+            counts[t] = counts.get(t, 0) + 1
+        rows.extend((qid, t, n) for t, n in counts.items())
+    return rows
+
+
+def _query_term_filter(queries: dict[str, str]):
+    """Literal ``term IN (...)`` over every query's tokens (module
+    docstring: why a literal list and not a join)."""
+    return F.col("term").isin(
+        sorted({t for q in queries.values() for t in tokenize(q)})
     )
 
 
-def _pushdown_query_terms(postings: DataFrame, terms: list[str]) -> DataFrame:
-    """Redundant literal IN-list predicate on ``term`` — a pure plan hint.
-
-    The broadcast semi-join that slices postings to the query terms cannot
-    be pushed below ``build_postings``'s groupBy by Catalyst (joins do not
-    move through aggregates), so without this the tf aggregation shuffles
-    the ENTIRE exploded vocabulary before the slice. A literal IN filter on
-    a grouping column IS pushed through the aggregate down to the exploded
-    tokens, shrinking that shuffle from every token in the corpus to just
-    the query terms' postings (measured 6.6 s → 1.4 s on the sf0.1
-    tfidf_search headline, bit-identical output). Semantically a no-op:
-    the same term set is re-joined immediately after for multiplicities,
-    and df(t) windows over the identical slice either way."""
-    if not terms:
-        return postings
-    return postings.where(F.col("term").isin(terms))
+def index_query_postings(
+    postings: DataFrame, doc_stats: DataFrame, queries: dict[str, str]
+) -> DataFrame:
+    """qpost from the maintained index: the query terms' postings, each
+    with its document's length."""
+    return postings.where(_query_term_filter(queries)).join(doc_stats, "doc_id")
 
 
-def _fused_query_postings(
+def docs_query_postings(
     documents: DataFrame,
-    terms: list[str],
+    queries: dict[str, str],
     id_col: str = "doc_id",
     text_col: str = "content",
 ) -> DataFrame:
-    """(doc_id, doc_len, term, tf) for the query terms only, in ONE
-    tokenize pass over the corpus (guide §1.2 step 1 / §2.3).
+    """qpost from the documents table in ONE tokenize pass (guide §1.2
+    step 1 / §2.3).
 
-    The separate build_postings + build_doc_stats + doc_stats-join shape
-    tokenizes the corpus once per branch (three scan+regex passes for a
-    BM25 query, plus a doc_id join); carrying doc_len through the explode
-    collapses all of it into one Generate and removes the doc_stats join
-    outright — the aggregation key gains ``doc_len``, which is functionally
-    dependent on doc_id, so (term, doc_id, tf) groups are identical.
-    The literal IN filter on ``term`` prunes the exploded stream before the
-    partial aggregation exactly like _pushdown_query_terms."""
+    build_postings + build_doc_stats + their doc_id join would tokenize the
+    corpus once per branch; carrying doc_len through the explode collapses
+    them into one Generate. The aggregation key gains ``doc_len``, which is
+    functionally dependent on doc_id, so the (term, doc_id, tf) groups are
+    unchanged. The IN filter prunes the exploded stream before the partial
+    aggregation."""
     toks = documents.select(
         F.col(id_col).alias("doc_id"),
         tokens_col(F.col(text_col)).alias("__toks"),
     )
-    exploded = toks.select(
-        "doc_id",
-        F.size("__toks").cast("long").alias("doc_len"),
-        F.explode("__toks").alias("term"),
+    return (
+        toks.select(
+            "doc_id",
+            F.size("__toks").cast("long").alias("doc_len"),
+            F.explode("__toks").alias("term"),
+        )
+        .where(_query_term_filter(queries))
+        .groupBy("doc_id", "doc_len", "term")
+        .agg(F.count("*").alias("tf"))
     )
-    if terms:
-        exploded = exploded.where(F.col("term").isin(terms))
-    return exploded.groupBy("doc_id", "doc_len", "term").agg(
-        F.count("*").alias("tf")
-    )
-
-
-def _total_docs_expr(base, total_docs):
-    """``total_docs`` as an in-plan double: an int becomes a literal; a
-    1-row DataFrame with column ``_n`` rides a broadcast cross join (one
-    fewer blocking count job per query — the count becomes a parallel
-    broadcast stage inside the main execution)."""
-    if isinstance(total_docs, DataFrame):
-        return base.crossJoin(F.broadcast(total_docs)), F.col("_n")
-    return base, F.lit(float(total_docs))
 
 
 def count_df(documents: DataFrame) -> DataFrame:
-    """1-row (_n double) corpus count for :func:`_total_docs_expr`."""
+    """1-row corpus size, usable as ``total_docs``."""
     return documents.agg(F.count("*").cast("double").alias("_n"))
 
 
-def tfidf_scores_docs(
-    spark: SparkSession,
-    documents: DataFrame,
-    total_docs,
-    query: str,
-    id_col: str = "doc_id",
-    text_col: str = "content",
-) -> DataFrame:
-    """:func:`tfidf_scores` computed straight from the documents table via
-    the fused single-pass postings (same scores, same order; equivalence
-    pinned against the unchanged DuckDB oracle)."""
-    terms = _query_terms_df(spark, query)
-    qpost = _fused_query_postings(
-        documents, list(dict.fromkeys(tokenize(query))), id_col, text_col
-    ).join(F.broadcast(terms), "term")
-    df_col = F.count("*").over(Window.partitionBy("term"))
-    qpost, n = _total_docs_expr(qpost, total_docs)
-    idf = 1.0 + F.floor(n / F.col("df"))
-    scored = (
-        qpost.withColumn("df", df_col)
-        .select(
-            "doc_id",
-            (
-                F.col("mult")
-                * (F.col("tf").cast("double") / F.col("doc_len"))
-                * idf
-            ).alias("term_score"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("term_score").alias("score"))
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+def avgdl_df(doc_stats: DataFrame) -> DataFrame:
+    """1-row mean ``doc_len`` (0 for an empty corpus), usable as
+    ``avgdl``."""
+    return doc_stats.agg(F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("_avgdl"))
 
 
-def bm25_scores_docs(
-    spark: SparkSession,
-    documents: DataFrame,
-    total_docs,
-    query: str,
-    boost: float = 1.0,
-    id_col: str = "doc_id",
-    text_col: str = "content",
+def _per_query_term(
+    qpost: DataFrame, queries: dict[str, str], **stats
 ) -> DataFrame:
-    """:func:`bm25_scores` from the documents table via the fused
-    single-pass postings. avgdl stays in-plan (broadcast 1-row cross join)
-    and aggregates over the SAME spread scan subtree as the postings pass,
-    so AQE reuses one shuffle for both branches instead of re-tokenizing
-    per branch."""
-    terms = _query_terms_df(spark, query)
-    qpost = _fused_query_postings(
-        documents, list(dict.fromkeys(tokenize(query))), id_col, text_col
+    """qpost rows with df(term), each query's term multiplicity ``mult``,
+    and every corpus stat in ``stats`` as a column of that name.
+
+    df(t) is a COUNT window over qpost — rows are unique per (term, doc),
+    so count == countDistinct, and the qpost subtree is evaluated ONCE (a
+    groupBy + self-join would build it twice). It is taken BEFORE the
+    multiplicities join in, so a term shared by two queries does not
+    double-count its postings. A stat is either a number (a literal) or a
+    1-row DataFrame (a broadcast cross join)."""
+    terms = qpost.sparkSession.createDataFrame(
+        _batch_query_terms(queries), "query_id string, term string, mult long"
+    )
+    base = qpost.withColumn(
+        "df", F.count("*").over(Window.partitionBy("term"))
     ).join(F.broadcast(terms), "term")
-    df_col = F.count("*").over(Window.partitionBy("term"))
-    avgdl = documents.agg(
-        F.coalesce(
-            F.avg(F.size(tokens_col(F.col(text_col)))), F.lit(0.0)
-        ).alias("_avgdl")
-    )
-    base = qpost.withColumn("df", df_col).crossJoin(F.broadcast(avgdl))
-    base, n = _total_docs_expr(base, total_docs)
-    idf = F.log(1 + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf = F.col("tf").cast("double")
-    denom = tf + K1 * (1 - B + B * F.col("doc_len") / F.col("_avgdl"))
-    scored = (
-        base.select(
-            "doc_id",
-            (F.col("mult") * idf * (tf * (K1 + 1)) / denom).alias("term_score"),
-        )
-        .groupBy("doc_id")
-        .agg((F.sum("term_score") * F.lit(boost)).alias("score"))
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    for name, value in stats.items():
+        if isinstance(value, DataFrame):
+            base = base.crossJoin(F.broadcast(value.toDF(name)))
+        else:
+            base = base.withColumn(name, F.lit(float(value)))
+    return base
 
 
 def tfidf_scores(
-    spark: SparkSession,
-    postings: DataFrame,
-    doc_stats: DataFrame,
-    total_docs: int,
-    query: str,
+    qpost: DataFrame, queries: dict[str, str], total_docs
 ) -> DataFrame:
-    """indexer.Search (indexer.go:59-83), distributed:
+    """indexer.Search (indexer.go:59-83) for every query in the batch:
 
-    score(d) = Σ_t mult(t) · (tf(t,d)/len(d)) · (1.0 + N intdiv df(t))
-
-    The tiny query-term side broadcasts (J4); doc_stats joins on doc_id
-    (J5). Result: (doc_id, score) sorted desc with deterministic tie-break.
+    score(q, d) = Σ_t mult(q, t) · (tf(t,d)/len(d)) · (1.0 + N intdiv df(t))
     """
-    terms = _query_terms_df(spark, query)
-    # Semi-join FIRST: document frequency is computed over only the
-    # postings of the few query terms, not the full vocabulary. df(t) is a
-    # COUNT window over the slice — postings rows are unique per
-    # (term, doc), so count == countDistinct — which keeps the postings
-    # subtree evaluated ONCE (a groupBy+self-join would build it twice).
-    qpost = _pushdown_query_terms(
-        postings, list(dict.fromkeys(tokenize(query)))
-    ).join(F.broadcast(terms), "term")
-    df_col = F.count("*").over(Window.partitionBy("term"))
-    idf = 1.0 + F.floor(F.lit(float(total_docs)) / F.col("df"))
-    scored = (
-        qpost.withColumn("df", df_col)
-        .join(doc_stats, "doc_id")
-        .select(
-            "doc_id",
-            (
-                F.col("mult")
-                * (F.col("tf").cast("double") / F.col("doc_len"))
-                * idf
-            ).alias("term_score"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("term_score").alias("score"))
+    base = _per_query_term(qpost, queries, _n=total_docs)
+    idf = 1.0 + F.floor(F.col("_n") / F.col("df"))
+    term_score = (
+        F.col("mult") * (F.col("tf").cast("double") / F.col("doc_len")) * idf
     )
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    return base.groupBy("query_id", "doc_id").agg(
+        F.sum(term_score).alias("score")
+    )
 
 
 def bm25_scores(
-    spark: SparkSession,
-    postings: DataFrame,
-    doc_stats: DataFrame,
-    total_docs: int,
-    query: str,
+    qpost: DataFrame,
+    queries: dict[str, str],
+    total_docs,
+    avgdl,
     boost: float = 1.0,
-    avgdl: float | None = None,
 ) -> DataFrame:
-    """Ranker.Score summed over query terms (ranker.go:22-41). Pass a
-    precomputed ``avgdl`` (a per-snapshot corpus stat) to avoid the
-    doc_stats scan per query — engine.search_ranked caches it. Without
-    one, avgdl is computed IN-PLAN (a broadcast 1-row cross join, the
-    same shape as the oracle's avg_len CTE) rather than as a separate
-    collect job, so a cold call is still one Spark job."""
-    terms = _query_terms_df(spark, query)
-    # Same semi-join-first + count-window + IN-pushdown shape as
-    # tfidf_scores.
-    qpost = _pushdown_query_terms(
-        postings, list(dict.fromkeys(tokenize(query)))
-    ).join(F.broadcast(terms), "term")
-    df_col = F.count("*").over(Window.partitionBy("term"))
-    base = qpost.withColumn("df", df_col).join(doc_stats, "doc_id")
-    if avgdl is None:
-        avgdl_expr = F.col("_avgdl")
-        base = base.crossJoin(
-            F.broadcast(
-                doc_stats.agg(
-                    F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("_avgdl")
-                )
-            )
-        )
-    else:
-        avgdl_expr = F.lit(float(avgdl))
-    n = F.lit(float(total_docs))
-    idf = F.log(1 + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    """Ranker.Score summed over each query's terms (ranker.go:22-41),
+    times ``boost`` (BoostScore, ranker.go:35-41)."""
+    base = _per_query_term(qpost, queries, _n=total_docs, _avgdl=avgdl)
+    n, df = F.col("_n"), F.col("df")
+    idf = F.log(1 + (n - df + 0.5) / (df + 0.5))
     tf = F.col("tf").cast("double")
-    denom = tf + K1 * (1 - B + B * F.col("doc_len") / avgdl_expr)
-    scored = (
-        base
-        .select(
-            "doc_id",
-            (F.col("mult") * idf * (tf * (K1 + 1)) / denom).alias("term_score"),
-        )
-        .groupBy("doc_id")
-        .agg((F.sum("term_score") * F.lit(boost)).alias("score"))
+    denom = tf + K1 * (1 - B + B * F.col("doc_len") / F.col("_avgdl"))
+    term_score = F.col("mult") * idf * (tf * (K1 + 1)) / denom
+    return base.groupBy("query_id", "doc_id").agg(
+        (F.sum(term_score) * F.lit(boost)).alias("score")
     )
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
 
 
 # ------------------------------------------------------------ sql oracles
+
 
 def postings_sql(table: str, id_col: str, text_col: str) -> str:
     return f"""
@@ -324,128 +237,6 @@ FROM (
 WHERE term <> ''
 GROUP BY term, doc_id
 """
-
-
-def _batch_query_terms(queries: dict[str, str]) -> list[tuple[str, str, int]]:
-    """(query_id, term, multiplicity) rows — ONE tokenization used by both
-    the Spark batch scorer and its SQL oracle so they can never drift."""
-    rows: list[tuple[str, str, int]] = []
-    for qid, q in sorted(queries.items()):
-        counts: dict[str, int] = {}
-        for t in tokenize(q):
-            counts[t] = counts.get(t, 0) + 1
-        rows.extend((qid, t, n) for t, n in counts.items())
-    return rows
-
-
-def tfidf_scores_batch(
-    spark: SparkSession,
-    postings: DataFrame,
-    doc_stats: DataFrame,
-    total_docs: int,
-    queries: dict[str, str],
-) -> DataFrame:
-    """TF-IDF twin of :func:`bm25_scores_batch` — same one-pass batch shape,
-    the reference's integer-division IDF per term."""
-    terms = spark.createDataFrame(
-        _batch_query_terms(queries), "query_id string, term string, mult long"
-    )
-    distinct_terms = terms.select("term").distinct()
-    all_terms = sorted({t for _, t, _ in _batch_query_terms(queries)})
-    qpost = _pushdown_query_terms(postings, all_terms).join(
-        F.broadcast(distinct_terms), "term"
-    ).withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    idf = 1.0 + F.floor(F.lit(float(total_docs)) / F.col("df"))
-    return (
-        qpost.join(F.broadcast(terms), "term")
-        .join(doc_stats, "doc_id")
-        .select(
-            "query_id",
-            "doc_id",
-            (
-                F.col("mult")
-                * (F.col("tf").cast("double") / F.col("doc_len"))
-                * idf
-            ).alias("term_score"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("term_score").alias("score"))
-    )
-
-
-def tfidf_scores_batch_docs(
-    spark: SparkSession,
-    documents: DataFrame,
-    total_docs,
-    queries: dict[str, str],
-    id_col: str = "doc_id",
-    text_col: str = "content",
-) -> DataFrame:
-    """:func:`tfidf_scores_batch` from the documents table via the fused
-    single-pass postings (one tokenize Generate carrying doc_len; no
-    doc_stats join). Same scores, same oracle."""
-    terms = spark.createDataFrame(
-        _batch_query_terms(queries), "query_id string, term string, mult long"
-    )
-    all_terms = sorted({t for _, t, _ in _batch_query_terms(queries)})
-    qpost = _fused_query_postings(
-        documents, all_terms, id_col, text_col
-    ).withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    qpost, n = _total_docs_expr(qpost, total_docs)
-    idf = 1.0 + F.floor(n / F.col("df"))
-    return (
-        qpost.join(F.broadcast(terms), "term")
-        .select(
-            "query_id",
-            "doc_id",
-            (
-                F.col("mult")
-                * (F.col("tf").cast("double") / F.col("doc_len"))
-                * idf
-            ).alias("term_score"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("term_score").alias("score"))
-    )
-
-
-def bm25_scores_batch_docs(
-    spark: SparkSession,
-    documents: DataFrame,
-    total_docs,
-    queries: dict[str, str],
-    id_col: str = "doc_id",
-    text_col: str = "content",
-) -> DataFrame:
-    """:func:`bm25_scores_batch` from the documents table via the fused
-    single-pass postings; avgdl in-plan over the same scan subtree (AQE
-    reuses the spread shuffle). Same scores, same oracle."""
-    terms = spark.createDataFrame(
-        _batch_query_terms(queries), "query_id string, term string, mult long"
-    )
-    all_terms = sorted({t for _, t, _ in _batch_query_terms(queries)})
-    qpost = _fused_query_postings(
-        documents, all_terms, id_col, text_col
-    ).withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    avgdl = documents.agg(
-        F.coalesce(
-            F.avg(F.size(tokens_col(F.col(text_col)))), F.lit(0.0)
-        ).alias("_avgdl")
-    )
-    base = qpost.join(F.broadcast(terms), "term").crossJoin(F.broadcast(avgdl))
-    base, n = _total_docs_expr(base, total_docs)
-    idf = F.log(1 + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf = F.col("tf").cast("double")
-    denom = tf + K1 * (1 - B + B * F.col("doc_len") / F.col("_avgdl"))
-    return (
-        base.select(
-            "query_id",
-            "doc_id",
-            (F.col("mult") * idf * (tf * (K1 + 1)) / denom).alias("term_score"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("term_score").alias("score"))
-    )
 
 
 def tfidf_batch_oracle_sql(
@@ -484,59 +275,6 @@ CROSS JOIN total t
 GROUP BY q.query_id, p.doc_id
 ORDER BY query_id, doc_id
 """
-
-
-def bm25_scores_batch(
-    spark: SparkSession,
-    postings: DataFrame,
-    doc_stats: DataFrame,
-    total_docs: int,
-    queries: dict[str, str],
-    avgdl: float | None = None,
-) -> DataFrame:
-    """Score a BATCH of queries in one postings pass — the serving shape
-    for query throughput at scale: one broadcast of all query terms, one
-    scan/shuffle of the postings slice, (query_id, doc_id, score) out.
-    N queries cost ~one query's plan, not N sequential jobs.
-
-    df(term) is computed over DISTINCT terms first (a term shared by two
-    queries must not double-count its postings), then fanned out to the
-    per-query multiplicities."""
-    terms = spark.createDataFrame(
-        _batch_query_terms(queries), "query_id string, term string, mult long"
-    )
-    distinct_terms = terms.select("term").distinct()
-    all_terms = sorted({t for _, t, _ in _batch_query_terms(queries)})
-    qpost = _pushdown_query_terms(postings, all_terms).join(
-        F.broadcast(distinct_terms), "term"
-    ).withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    base = qpost.join(F.broadcast(terms), "term").join(doc_stats, "doc_id")
-    if avgdl is None:
-        # in-plan corpus stat (broadcast 1-row cross join) — see bm25_scores
-        avgdl_expr = F.col("_avgdl")
-        base = base.crossJoin(
-            F.broadcast(
-                doc_stats.agg(
-                    F.coalesce(F.avg("doc_len"), F.lit(0.0)).alias("_avgdl")
-                )
-            )
-        )
-    else:
-        avgdl_expr = F.lit(float(avgdl))
-    n = F.lit(float(total_docs))
-    idf = F.log(1 + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tf = F.col("tf").cast("double")
-    denom = tf + K1 * (1 - B + B * F.col("doc_len") / avgdl_expr)
-    return (
-        base
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("mult") * idf * (tf * (K1 + 1)) / denom).alias("term_score"),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("term_score").alias("score"))
-    )
 
 
 def bm25_batch_oracle_sql(

@@ -776,38 +776,3 @@ def probe_cuckoos(
         .applyInPandas(probe, schema=out_schema)
     )
     return probed.select(*cols, "maybe_seen")
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    seen_bloom: DataFrame | None,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    bits_per_bucket: int = DEFAULT_BITS_PER_BUCKET,
-    kind: str = "bloom",
-) -> DataFrame:
-    """The dedup-visited operator (P4/J1): candidates not yet in the seen set.
-
-    With a filter table: definitely-new rows bypass the join; maybe-seen rows
-    take the exact left-anti join (on the already-computed 64-bit hash, with
-    url equality re-check to make hash collisions harmless). ``kind``
-    selects the probe backend for ``seen_bloom``: "bloom" (bit-array blobs,
-    update_blooms) or "cuckoo" (fingerprint tables, update_cuckoos —
-    supports deletion for recrawl/expiry).
-
-    ``n_buckets``/``bits_per_bucket`` MUST match the parameters the blobs
-    were built with (update_blooms) — a mismatch mis-addresses buckets/bits
-    and silently breaks the no-false-negative invariant. (The cuckoo blob
-    self-describes its inner geometry in its header, so only ``n_buckets``
-    must agree.)
-    """
-    if seen_bloom is not None:
-        if kind == "cuckoo":
-            probed = probe_cuckoos(candidates, seen_bloom, n_buckets)
-        else:
-            probed = probe_blooms(candidates, seen_bloom, n_buckets, bits_per_bucket)
-        fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-        survivors = maybe.join(seen, on=["url_hash", "url"], how="left_anti")
-        return fresh.unionByName(survivors)
-    return candidates.join(seen, on=["url_hash", "url"], how="left_anti")

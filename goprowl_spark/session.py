@@ -101,12 +101,21 @@ def spread_narrow_scan(df, key_col: str):
         from urllib.parse import unquote, urlparse
 
         def _bytes_conf(key: str, default: int) -> int:
+            """A size conf in bytes under Spark's own unit rules ("128m",
+            "1g", "4194304"); -1 when Spark would not parse it either."""
+            from pyspark.errors import IllegalArgumentException
+
             raw = str(sess.conf.get(key, str(default)))
-            digits = "".join(c for c in raw if c.isdigit())
-            return int(digits) if digits else default
+            utils = sess.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+            try:
+                return int(utils.byteStringAsBytes(raw))
+            except IllegalArgumentException:  # incl. NumberFormatException
+                return -1
 
         mpb = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
         open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
+        if mpb <= 0 or open_cost < 0:
+            return -1
         try:
             total = sum(
                 max(os.path.getsize(unquote(urlparse(f).path)), 0) + open_cost

@@ -91,10 +91,8 @@ class SnapshotCatalog:
         )
         entry = {"tables": dict(prev["tables"]), "properties": properties or {}}
 
-        # Sequential writes by default: measured at local[16], concurrent
-        # write jobs contend on cache/disk and run slower than back-to-back
-        # (opt back in with GOPROWL_THREADED_COMMIT=1 for multi-executor
-        # clusters where the jobs land on disjoint machines).
+        # Sequential writes: measured at local[16], concurrent write jobs
+        # contend on cache/disk and run slower than back-to-back.
         def write(item: tuple[str, DataFrame]) -> tuple[str, str]:
             name, df = item
             path = os.path.join(self.root, "snapshots", str(sid), name)
@@ -102,13 +100,7 @@ class SnapshotCatalog:
             return name, path
 
         work = list((tables or {}).items()) + list((appends or {}).items())
-        if len(work) > 1 and os.environ.get("GOPROWL_THREADED_COMMIT") == "1":
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(work)) as pool:
-                written = dict(pool.map(write, work))
-        else:
-            written = dict(map(write, work))
+        written = dict(map(write, work))
 
         for name in tables or {}:
             entry["tables"][name] = written[name]

@@ -35,6 +35,17 @@ def test_plan_shape(spark, name):
         assert frag not in plan, f"{name}: unexpected {frag!r}\n{plan}"
 
 
+@pytest.mark.parametrize(
+    "name", ["tfidf_search", "bm25_search", "tfidf_batch", "bm25_batch"]
+)
+def test_ranking_tokenizes_once(spark, name):
+    """The documents front-end explodes the corpus tokens in ONE Generate
+    that carries doc_len; no second postings pass is planned."""
+    plan = plan_of(contract.queries()[name](spark, SF_DIR))
+    tree = plan.split("\n\n(")[0]  # the node tree, not the node details
+    assert tree.count("Generate") == 1, f"{name}\n{plan}"
+
+
 def test_column_pruning_reaches_scan(spark):
     df = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")

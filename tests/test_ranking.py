@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 
 from goprowl_spark import ranking as R
+from goprowl_spark.engine import GoProwlSearchEngine
 
 DOCS = [
     ("d1", "spark makes big data simple"),
@@ -75,6 +76,21 @@ def index(spark, docs_df):
     return R.build_postings(docs_df), R.build_doc_stats(docs_df)
 
 
+def scores(scorer, qpost, queries, total_docs, avgdl, boost=1.0):
+    if scorer == "tfidf":
+        return R.tfidf_scores(qpost, queries, total_docs)
+    return R.bm25_scores(qpost, queries, total_docs, avgdl, boost=boost)
+
+
+def index_scores(scorer, index, query, boost=1.0) -> dict[str, float]:
+    """One query through the index front-end, avgdl in-plan: doc_id → score."""
+    postings, stats = index
+    queries = {"q": query}
+    qpost = R.index_query_postings(postings, stats, queries)
+    got = scores(scorer, qpost, queries, len(DOCS), R.avgdl_df(stats), boost)
+    return {r["doc_id"]: r["score"] for r in got.collect()}
+
+
 def test_integer_division_idf_quirk():
     # N=10 docs; 'big' appears in d1,d5,d10 → df=3 → idf = 1 + 10//3 = 4.0
     scores = py_tfidf("big")
@@ -92,11 +108,7 @@ def test_postings_and_doc_stats(spark, index):
 
 @pytest.mark.parametrize("query", ["spark data", "big", "spark spark", "missing term", "big data spark"])
 def test_tfidf_matches_reference_semantics(spark, docs_df, index, query):
-    postings, stats = index
-    got = {
-        r["doc_id"]: r["score"]
-        for r in R.tfidf_scores(spark, postings, stats, len(DOCS), query).collect()
-    }
+    got = index_scores("tfidf", index, query)
     exp = py_tfidf(query)
     assert set(got) == set(exp)
     for d in exp:
@@ -105,11 +117,7 @@ def test_tfidf_matches_reference_semantics(spark, docs_df, index, query):
 
 @pytest.mark.parametrize("query", ["spark data", "big", "spark spark"])
 def test_bm25_matches_reference_semantics(spark, docs_df, index, query):
-    postings, stats = index
-    got = {
-        r["doc_id"]: r["score"]
-        for r in R.bm25_scores(spark, postings, stats, len(DOCS), query).collect()
-    }
+    got = index_scores("bm25", index, query)
     exp = py_bm25(query)
     assert set(got) == set(exp)
     for d in exp:
@@ -117,127 +125,71 @@ def test_bm25_matches_reference_semantics(spark, docs_df, index, query):
 
 
 def test_bm25_boost_multiplies(spark, docs_df, index):
-    postings, stats = index
-    base = {
-        r["doc_id"]: r["score"]
-        for r in R.bm25_scores(spark, postings, stats, len(DOCS), "spark").collect()
-    }
-    boosted = {
-        r["doc_id"]: r["score"]
-        for r in R.bm25_scores(
-            spark, postings, stats, len(DOCS), "spark", boost=2.5
-        ).collect()
-    }
+    base = index_scores("bm25", index, "spark")
+    boosted = index_scores("bm25", index, "spark", boost=2.5)
     for d in base:
         assert boosted[d] == pytest.approx(base[d] * 2.5)
 
 
 def test_sql_oracles_match_spark(spark, docs_df, index):
-    postings, stats = index
     pdf = pd.DataFrame(DOCS, columns=["doc_id", "content"])
     con = duckdb.connect()
     con.register("docs", pdf)
     for query in ["spark data", "big data spark"]:
         sql = R.tfidf_oracle_sql("docs", "doc_id", "content", query)
         oracle = dict(con.sql(sql).fetchall())
-        got = {
-            r["doc_id"]: round(r["score"], 4)
-            for r in R.tfidf_scores(spark, postings, stats, len(DOCS), query).collect()
-        }
+        got = {d: round(s, 4) for d, s in index_scores("tfidf", index, query).items()}
         assert got == pytest.approx(oracle)
         sql = R.bm25_oracle_sql("docs", "doc_id", "content", query)
         oracle = dict(con.sql(sql).fetchall())
-        got = {
-            r["doc_id"]: round(r["score"], 4)
-            for r in R.bm25_scores(spark, postings, stats, len(DOCS), query).collect()
-        }
+        got = {d: round(s, 4) for d, s in index_scores("bm25", index, query).items()}
         assert got == pytest.approx(oracle)
 
 
-def test_bm25_batch_matches_single_queries(spark):
-    from goprowl_spark import ranking as R
+@pytest.fixture(scope="module")
+def engine(spark, tmp_path_factory):
+    eng = GoProwlSearchEngine(spark, str(tmp_path_factory.mktemp("ranked")))
+    eng.index("d1", "t", "spark makes big data simple")
+    return eng
 
-    docs = spark.createDataFrame(
-        [
-            (1, "spark data join hash"),
-            (2, "data data window scan"),
-            (3, "hash batch title spark spark"),
-            (4, "window title scan scan data"),
-        ],
-        "doc_id long, text string",
-    )
-    postings = R.build_postings(docs, text_col="text")
-    stats = R.build_doc_stats(docs, text_col="text")
-    queries = {"a": "spark data", "b": "data window", "c": "hash"}
-    batch = {
-        (r["query_id"], r["doc_id"]): round(r["score"], 6)
-        for r in R.bm25_scores_batch(spark, postings, stats, 4, queries).collect()
+
+@pytest.mark.parametrize("scorer", ["tfidf", "bm25"])
+def test_front_ends_and_batches_agree(spark, docs_df, index, engine, scorer):
+    """Both front-ends feed the scorer the same qpost, so scores agree
+    bit-for-bit (9 dp) for a literal N and an in-plan (count_df) N; a batch
+    scores every query exactly as its one-query batch does, including terms
+    shared between queries (df must not double-count) and repeated within
+    one; the empty query scores no document."""
+    postings, stats = index
+    queries = {
+        "a": "spark data",
+        "b": "spark spark big",
+        "c": "missingterm",
+        "d": "ten big data",
+        "e": "big simple",
     }
-    for qid, q in queries.items():
-        single = {
-            (qid, r["doc_id"]): round(r["score"], 6)
-            for r in R.bm25_scores(spark, postings, stats, 4, q).collect()
-        }
-        for k, v in single.items():
-            assert batch[k] == v, k
-    assert len(batch) == sum(
-        1
-        for qid, q in queries.items()
-        for _ in R.bm25_scores(spark, postings, stats, 4, q).collect()
-    )
 
+    def run(front, total, qs):
+        if front == "index":
+            qpost = R.index_query_postings(postings, stats, qs)
+            avgdl = R.avgdl_df(stats)
+        else:
+            qpost = R.docs_query_postings(docs_df, qs)
+            avgdl = R.avgdl_df(R.build_doc_stats(docs_df))
+        return {
+            (r["query_id"], r["doc_id"]): round(r["score"], 9)
+            for r in scores(scorer, qpost, qs, total, avgdl).collect()
+        }
 
-def test_fused_docs_scorers_match_classic_paths(spark, docs_df):
-    """r6 optimization pin: the fused single-pass scorers (one tokenize
-    Generate carrying doc_len, in-plan count/avgdl) must reproduce the
-    classic postings+doc_stats pipeline bit-for-bit, for int and in-plan
-    (count_df) total_docs alike."""
-    postings = R.build_postings(docs_df)
-    stats = R.build_doc_stats(docs_df)
-    queries = {"a": "spark data", "b": "big simple", "c": "spark spark ten"}
-    for q in ["spark data", "spark spark big", "missingterm", "ten big data"]:
-        classic_t = {
-            r["doc_id"]: round(r["score"], 9)
-            for r in R.tfidf_scores(spark, postings, stats, len(DOCS), q).collect()
-        }
-        classic_b = {
-            r["doc_id"]: round(r["score"], 9)
-            for r in R.bm25_scores(spark, postings, stats, len(DOCS), q).collect()
-        }
+    batch = run("index", len(DOCS), queries)
+    assert {q for q, _ in batch} == {"a", "b", "d", "e"}
+    for front in ("index", "docs"):
         for total in (len(DOCS), R.count_df(docs_df)):
-            fused_t = {
-                r["doc_id"]: round(r["score"], 9)
-                for r in R.tfidf_scores_docs(spark, docs_df, total, q).collect()
-            }
-            fused_b = {
-                r["doc_id"]: round(r["score"], 9)
-                for r in R.bm25_scores_docs(spark, docs_df, total, q).collect()
-            }
-            assert fused_t == classic_t, q
-            assert fused_b == classic_b, q
-    classic_tb = {
-        (r["query_id"], r["doc_id"]): round(r["score"], 9)
-        for r in R.tfidf_scores_batch(
-            spark, postings, stats, len(DOCS), queries
-        ).collect()
-    }
-    classic_bb = {
-        (r["query_id"], r["doc_id"]): round(r["score"], 9)
-        for r in R.bm25_scores_batch(
-            spark, postings, stats, len(DOCS), queries
-        ).collect()
-    }
-    fused_tb = {
-        (r["query_id"], r["doc_id"]): round(r["score"], 9)
-        for r in R.tfidf_scores_batch_docs(
-            spark, docs_df, R.count_df(docs_df), queries
-        ).collect()
-    }
-    fused_bb = {
-        (r["query_id"], r["doc_id"]): round(r["score"], 9)
-        for r in R.bm25_scores_batch_docs(
-            spark, docs_df, R.count_df(docs_df), queries
-        ).collect()
-    }
-    assert fused_tb == classic_tb
-    assert fused_bb == classic_bb
+            assert run(front, total, queries) == batch, (front, total)
+        singles = {}
+        for qid, q in queries.items():
+            singles.update(run(front, len(DOCS), {qid: q}))
+        assert singles == batch, front
+        assert run(front, len(DOCS), {"q": ""}) == {}, front
+    assert engine.search_ranked("spark", scorer=scorer).count() == 1
+    assert engine.search_ranked("", scorer=scorer).count() == 0

@@ -47,25 +47,6 @@ def test_incremental_update_preserves_members(spark):
     assert blooms.agg(F.sum("n_items")).collect()[0][0] == 2000
 
 
-def test_filter_unseen_equals_exact_antijoin(spark):
-    seen_urls = _urls(spark, 0, 3000)
-    seen = seen_urls.select(
-        "url_hash", "url", F.lit(1).alias("depth"), F.lit(0).alias("first_seen_round")
-    )
-    empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    blooms = seen_filter.update_blooms(empty, seen_urls)
-    candidates = _urls(spark, 2000, 6000)
-
-    with_bloom = {
-        r["url"] for r in seen_filter.filter_unseen(candidates, seen, blooms).collect()
-    }
-    exact = {
-        r["url"] for r in seen_filter.filter_unseen(candidates, seen, None).collect()
-    }
-    assert with_bloom == exact
-    assert len(exact) == 3000  # 3000..5999
-
-
 def test_bloom_delta_latest_generation_wins(spark):
     # round 1 inserts [0,100), round 2 appends a delta for [100,200);
     # probing the UNION of generations must see both ranges
@@ -243,27 +224,6 @@ def test_cuckoo_blob_deterministic(spark):
         for r in seen_filter.update_cuckoos(empty, seen).collect()
     }
     assert b1 == b2
-
-
-def test_filter_unseen_cuckoo_equals_exact_antijoin(spark):
-    seen_urls = _urls(spark, 0, 3000)
-    seen = seen_urls.select(
-        "url_hash", "url", F.lit(1).alias("depth"), F.lit(0).alias("first_seen_round")
-    )
-    empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(empty, seen_urls)
-    candidates = _urls(spark, 2000, 6000)
-    with_cf = {
-        r["url"]
-        for r in seen_filter.filter_unseen(
-            candidates, seen, cf, kind="cuckoo"
-        ).collect()
-    }
-    exact = {
-        r["url"] for r in seen_filter.filter_unseen(candidates, seen, None).collect()
-    }
-    assert with_cf == exact
-    assert len(exact) == 3000
 
 
 def test_probe_and_update_cuckoo_matches_split_path(spark):

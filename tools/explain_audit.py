@@ -27,6 +27,11 @@ CHECKS = {
     "agg_q1": (["HashAggregate", "PushedFilters"], []),
     "emb_cosine_topk": (["TakeOrderedAndProject"], ["Exchange hashpartitioning"]),
     "tfidf_search": (["BroadcastHashJoin"], []),
+    # the query-term side of every ranking plan is tiny and must arrive
+    # broadcast, never sort-merge-shuffled against the postings
+    "bm25_search": (["BroadcastHashJoin"], ["SortMergeJoin"]),
+    "tfidf_batch": (["BroadcastHashJoin"], ["SortMergeJoin"]),
+    "bm25_batch": (["BroadcastHashJoin"], ["SortMergeJoin"]),
     "search_relevancy": (["TakeOrderedAndProject"], ["Window"]),
     # round-1 regression guard: pagination must be a partial top-k, never a
     # single-partition global row_number window
