@@ -35,6 +35,7 @@ from goprowl_spark.operators import (
     textstats,
 )
 from goprowl_spark.parse import parse_spans_udf
+from goprowl_spark.session import local_df
 
 CORPUS_MULT = 10
 BFS_DEPTH = 6
@@ -156,9 +157,10 @@ def q_crawl_delay_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = _docs(spark, sf_dir).count() * CORPUS_MULT
     robots_df = parse_robots_txt(
-        spark.createDataFrame(
+        local_df(
+            spark,
             [("h0.test", "User-agent: *\nCrawl-delay: 10\n")],
-            ["host", "body"],
+            "host string, body string",
         )
     )
     eng = CrawlEngine(

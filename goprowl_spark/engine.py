@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from goprowl_spark import ranking, schemas
 from goprowl_spark import search as gsearch
+from goprowl_spark.session import local_df
 from goprowl_spark.store import DocumentStore
 
 
@@ -51,7 +52,8 @@ class GoProwlSearchEngine:
         matching the storage write there). ``metadata`` is the arbitrary
         per-doc bag (storage/types.go:15); permissions per
         engine/types.go:69-81 (None = public)."""
-        df = self.spark.createDataFrame(
+        df = local_df(
+            self.spark,
             [
                 (
                     doc_id,

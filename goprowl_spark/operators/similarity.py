@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from goprowl_spark.session import local_df
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -697,7 +699,8 @@ def lsh_cosine_pairs(
     # recomputes signatures on both sides of every band join.
     n_planes = bands * planes_per_band
     spark = embeddings.sparkSession
-    planes = spark.createDataFrame(
+    planes = local_df(
+        spark,
         [
             (p, j, _plane_component(p, j))
             for p in range(n_planes)

@@ -1,15 +1,28 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory with scale-aware defaults, and the one way the
+engine turns driver-side rows into a DataFrame.
 
 Local sandbox runs use ``local[N]``; on a real cluster the same settings apply
 (AQE, skew-join handling, Arrow). ``shuffle_partitions`` should track total
 cores locally and ~2-3x total cores on a cluster.
+
+Driver-side rows (a query's terms, an indexed document, a seed list) become
+DataFrames through :func:`local_df`, never ``spark.createDataFrame`` over a
+Python list. On PySpark 4.1 a list goes ``_createFromLocal`` →
+``sc.parallelize`` and plans as ``Scan ExistingRDD``: a PythonRDD whose
+every scan runs pickled per-row Python tasks on all cores. Measured on a
+4-core box, a one-row relation built that way cost ~0.35 s of JVM CPU
+plus ~0.9 s of Python-worker CPU on EACH execution — paid by every ranked
+query and every store write. Built as an Arrow table instead, the same rows plan
+as a ``LocalRelation``: no RDD, no Python worker.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -22,8 +35,8 @@ def get_spark(
 
     AQE is on: runtime shuffle-partition coalescing and skew-join splitting
     are part of the scale design (hot-host skew, SURVEY.md §4). Arrow is on:
-    all Python interop (pandas UDFs) is Arrow-batched — the engine has no
-    row-at-a-time Python anywhere.
+    all Python interop (pandas UDFs, driver rows via :func:`local_df`) is
+    Arrow-batched — the engine has no row-at-a-time Python anywhere.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -134,3 +147,32 @@ def spread_narrow_scan(df, key_col: str):
     if n < target:
         return df.repartition(target, F.col(key_col))
     return df
+
+
+def arrow_table(rows: Sequence[Sequence], schema: T.StructType):
+    """``rows`` (tuples in ``schema``'s field order; nested structs as
+    tuples, maps as dicts, arrays as lists) as a ``pyarrow.Table`` typed
+    by Spark's own Spark→Arrow mapping (int → int32, long → int64,
+    double → float64, string → string, boolean → bool)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [() for _ in schema.fields]
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)]
+    for f, a in zip(pa_schema, arrays):
+        if not f.nullable and a.null_count:
+            raise ValueError(f"field {f.name!r} is not nullable but got None")
+    return pa.Table.from_arrays(arrays, schema=pa_schema)
+
+
+def local_df(
+    spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-side ``rows`` as a DataFrame whose plan is a
+    ``LocalRelation`` (see the module docstring for why not
+    ``createDataFrame`` over the list). ``schema`` is a StructType or a DDL
+    string."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -29,6 +29,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from goprowl_spark.session import arrow_table, local_df
+
 
 class SnapshotCatalog:
     def __init__(
@@ -223,7 +225,7 @@ class SnapshotCatalog:
         if e is None:
             if schema is None:
                 raise KeyError(f"table {table!r} not in snapshot {sid!r}")
-            return self.spark.createDataFrame([], schema)
+            return local_df(self.spark, [], schema)
         df = self.spark.read.parquet(*self._entry_paths(e))
         cols = self._entry_columns(e)
         return df.select(*cols) if cols else df
@@ -338,8 +340,6 @@ def iceberg_rollback_sql(
 
 # ---------------------------------------------------------------- local write
 
-_PA_TYPES = None
-
 
 def write_local_parquet(rows: list[tuple], schema: T.StructType, path: str) -> None:
     """Write a METADATA-SIZED table (metrics row, lineage counters) as one
@@ -347,33 +347,27 @@ def write_local_parquet(rows: list[tuple], schema: T.StructType, path: str) -> N
 
     A 1-row metrics frame or a 50-row lineage frame costs more in job
     scheduling than in IO; at 16 cores the tail of tiny writes was the
-    round's largest non-scaling term. The pyarrow schema maps Spark types
-    EXACTLY (int32/int64/float64/string) so later `spark.read.parquet`
-    over mixed Spark-written + driver-written files of the same table
-    never sees a physical-type conflict."""
-    import pyarrow as pa
+    round's largest non-scaling term. The Arrow table comes from
+    session.arrow_table — Spark's own type mapping (int32/int64/float64/
+    string/bool) and nullability — so the file matches what Spark's
+    parquet writer would produce and later `spark.read.parquet` over mixed
+    Spark-written + driver-written files of the same table never sees a
+    physical-type conflict."""
     import pyarrow.parquet as pq
 
-    global _PA_TYPES
-    if _PA_TYPES is None:
-        _PA_TYPES = {
-            T.IntegerType(): pa.int32(),
-            T.LongType(): pa.int64(),
-            T.DoubleType(): pa.float64(),
-            T.FloatType(): pa.float32(),
-            T.StringType(): pa.string(),
-            T.BooleanType(): pa.bool_(),
-        }
-    pa_schema = pa.schema(
-        [(f.name, _PA_TYPES[f.dataType]) for f in schema.fields]
-    )
     os.makedirs(path, exist_ok=True)
-    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=t) for c, t in zip(cols, pa_schema.types)],
-        schema=pa_schema,
+    pq.write_table(
+        arrow_table(rows, schema), os.path.join(path, "part-00000.parquet")
     )
-    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+
+
+def parquet_data_files(path: str) -> list[str]:
+    """The data files of a parquet directory, sorted: ``*.parquet`` only,
+    so Hadoop's ``.crc`` checksums and ``_SUCCESS`` markers are left out."""
+    return sorted(
+        f for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith("_")
+    )
 
 
 def parquet_file_rows(path: str) -> list[tuple[int, int]]:
@@ -382,11 +376,7 @@ def parquet_file_rows(path: str) -> list[tuple[int, int]]:
     a just-written table (one file per write task)."""
     import pyarrow.parquet as pq
 
-    out = []
-    files = sorted(
-        f for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith("_")
-    )
-    for i, fname in enumerate(files):
-        out.append((i, pq.ParquetFile(os.path.join(path, fname)).metadata.num_rows))
-    return out
+    return [
+        (i, pq.ParquetFile(os.path.join(path, fname)).metadata.num_rows)
+        for i, fname in enumerate(parquet_data_files(path))
+    ]

@@ -46,6 +46,20 @@ def test_ranking_tokenizes_once(spark, name):
     assert tree.count("Generate") == 1, f"{name}\n{plan}"
 
 
+@pytest.mark.parametrize("scorer", ["bm25", "tfidf"])
+def test_search_ranked_plans_no_python_rdd(spark, tmp_path, scorer):
+    """The engine's ranked read builds its query terms as a LocalRelation:
+    no ``Scan ExistingRDD`` (a PythonRDD run by Python workers on every
+    execution) anywhere in the plan."""
+    from goprowl_spark.engine import GoProwlSearchEngine
+
+    eng = GoProwlSearchEngine(spark, str(tmp_path))
+    eng.index("d1", "alpha", "alpha beta")
+    eng.index("d2", "beta", "beta gamma")
+    plan = plan_of(eng.search_ranked("alpha beta", scorer))
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_column_pruning_reaches_scan(spark):
     df = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")

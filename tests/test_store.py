@@ -84,3 +84,42 @@ def test_incremental_index_matches_full_rebuild(spark, tmp_path):
 
     store.clear()
     assert store.postings().count() == 0 and store.doc_stats().count() == 0
+
+
+def test_table_size_counts_only_parquet_data_files(spark, tmp_path):
+    """index size is the sum of the part files' sizes: Hadoop's .crc
+    checksums and the _SUCCESS marker are not data."""
+    import os
+
+    store = DocumentStore(spark, str(tmp_path))
+    store.batch_store(
+        spark.createDataFrame([_doc("u1", "one"), _doc("u2", "two")], schemas.DOCUMENTS)
+    )
+    entry = store.catalog._read_manifest()["snapshots"][str(store.catalog.latest())]
+    path = entry["tables"]["documents"]
+    names = os.listdir(path)
+    parts = [f for f in names if f.startswith("part-") and f.endswith(".parquet")]
+    assert parts and len(parts) < len(names)  # checksums/markers are present
+    assert store.table_size_bytes() == sum(
+        os.path.getsize(os.path.join(path, f)) for f in parts
+    )
+
+
+def _is_cached(df) -> bool:
+    lvl = df.storageLevel
+    return lvl.useMemory or lvl.useDisk or lvl.useOffHeap
+
+
+def test_batch_store_keeps_only_the_callers_cache(spark, tmp_path):
+    """A batch the caller cached stays cached; a batch the store persisted
+    for its own writes is released after the commit."""
+    store = DocumentStore(spark, str(tmp_path))
+    cached = spark.createDataFrame([_doc("u1", "first")], schemas.DOCUMENTS).cache()
+    store.batch_store(cached)
+    assert _is_cached(cached)
+    cached.unpersist()
+
+    plain = spark.createDataFrame([_doc("u2", "second")], schemas.DOCUMENTS)
+    store.batch_store(plain)
+    assert not _is_cached(plain)
+    assert sorted(r["doc_id"] for r in store.get_all().collect()) == ["u1", "u2"]

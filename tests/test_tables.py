@@ -111,3 +111,40 @@ def test_iceberg_sql_emission_goldens(spark, tmp_path):
     assert tb.iceberg_rollback_sql("frontier", 7) == (
         "CALL spark_catalog.system.rollback_to_snapshot('goprowl.frontier', 7)"
     )
+
+
+def test_write_local_parquet_matches_spark_physical_types(spark, tmp_path):
+    """Driver-written files carry the same parquet types and repetition as
+    Spark-written files of the same schema, so one table may mix both."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from goprowl_spark.tables import parquet_data_files, write_local_parquet
+
+    schema = T.StructType(
+        [
+            T.StructField("i", T.IntegerType(), False),
+            T.StructField("l", T.LongType(), False),
+            T.StructField("d", T.DoubleType(), False),
+            T.StructField("s", T.StringType(), True),
+            T.StructField("b", T.BooleanType(), True),
+        ]
+    )
+    rows = [(1, 2**40, 0.5, "x", True), (2, -3, 1.5, None, None)]
+    local_path = str(tmp_path / "local")
+    spark_path = str(tmp_path / "spark")
+    write_local_parquet(rows, schema, local_path)
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(spark_path)
+
+    def file_schema(path):
+        (name,) = parquet_data_files(path)
+        return pq.read_schema(f"{path}/{name}").remove_metadata()
+
+    assert file_schema(local_path) == file_schema(spark_path)
+    assert [str(f.type) for f in file_schema(local_path)] == [
+        "int32", "int64", "double", "string", "bool"
+    ]
+    both = spark.read.parquet(local_path, spark_path).collect()
+    assert Counter(map(tuple, both)) == Counter(rows + rows)

@@ -26,12 +26,15 @@ CHECKS = {
     "broadcast_join_agg": (["BroadcastHashJoin"], ["SortMergeJoin"]),
     "agg_q1": (["HashAggregate", "PushedFilters"], []),
     "emb_cosine_topk": (["TakeOrderedAndProject"], ["Exchange hashpartitioning"]),
-    "tfidf_search": (["BroadcastHashJoin"], []),
-    # the query-term side of every ranking plan is tiny and must arrive
-    # broadcast, never sort-merge-shuffled against the postings
-    "bm25_search": (["BroadcastHashJoin"], ["SortMergeJoin"]),
-    "tfidf_batch": (["BroadcastHashJoin"], ["SortMergeJoin"]),
-    "bm25_batch": (["BroadcastHashJoin"], ["SortMergeJoin"]),
+    # the query terms of every ranking plan are a LocalRelation, never a
+    # PythonRDD scan (Scan ExistingRDD runs Python workers on every
+    # execution)
+    "tfidf_search": (["BroadcastHashJoin"], ["ExistingRDD"]),
+    # the query-term side is tiny and must arrive broadcast, never
+    # sort-merge-shuffled against the postings
+    "bm25_search": (["BroadcastHashJoin"], ["SortMergeJoin", "ExistingRDD"]),
+    "tfidf_batch": (["BroadcastHashJoin"], ["SortMergeJoin", "ExistingRDD"]),
+    "bm25_batch": (["BroadcastHashJoin"], ["SortMergeJoin", "ExistingRDD"]),
     "search_relevancy": (["TakeOrderedAndProject"], ["Window"]),
     # round-1 regression guard: pagination must be a partial top-k, never a
     # single-partition global row_number window
