@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -181,6 +181,34 @@ class CrawlEngine:
     def _filter_kind_prop(self) -> str:
         return self.config.filter_kind if self.config.use_bloom else "none"
 
+    def _fresh_filter(self, members: DataFrame, gen: int) -> DataFrame:
+        """Seen-filter shards built from scratch over ``members``, in the
+        configured kind and fresh-shard geometry."""
+        cfg = self.config
+        empty = local_df(self.spark, [], schemas.SEEN_BLOOM)
+        if cfg.filter_kind == "cuckoo":
+            return seen_filter.update_cuckoos(
+                empty,
+                members,
+                cfg.n_buckets,
+                inner_buckets=cfg.cuckoo_inner_buckets,
+                gen=gen,
+            )
+        return seen_filter.update_blooms(
+            empty, members, cfg.n_buckets, cfg.bits_per_bucket, gen=gen
+        )
+
+    def _priority(self) -> Column:
+        """Discovery-time frontier priority over the url/host/depth columns
+        (W2): ``priority_fn``, or -depth for plain BFS."""
+        fn = self.config.priority_fn
+        prio = (
+            fn(F.col("url"), F.col("host"), F.col("depth"))
+            if fn is not None
+            else -F.col("depth")
+        )
+        return prio.cast("double")
+
     def _load(self, name: str, schema) -> DataFrame:
         return self.catalog.load(name, schema=schema)
 
@@ -222,35 +250,16 @@ class CrawlEngine:
         sid = self.catalog.next_sid()
         delta_path = self.catalog.stage_path(sid, "crawl_delta")
         delta.write.mode("overwrite").parquet(delta_path)
-        tables = {"frontier": delta_path, "seen": delta_path}
-        stage = {
+        tables = {
+            "frontier": delta_path,
+            "seen": delta_path,
             "documents": local_df(self.spark, [], schemas.DOCUMENTS),
             "crawl_metrics": local_df(self.spark, [], schemas.CRAWL_METRICS),
         }
         if self.config.use_bloom:
-            if self.config.filter_kind == "cuckoo":
-                stage["seen_bloom"] = seen_filter.update_cuckoos(
-                    local_df(self.spark, [], schemas.SEEN_BLOOM),
-                    delta,
-                    self.config.n_buckets,
-                    inner_buckets=self.config.cuckoo_inner_buckets,
-                    gen=0,
-                )
-            else:
-                stage["seen_bloom"] = seen_filter.update_blooms(
-                    local_df(self.spark, [], schemas.SEEN_BLOOM),
-                    delta,
-                    self.config.n_buckets,
-                    self.config.bits_per_bucket,
-                    gen=0,
-                )
-        for name, df in stage.items():
-            path = self.catalog.stage_path(sid, name)
-            df.write.mode("overwrite").parquet(path)
-            tables[name] = path
-        return self.catalog.commit_staged(
-            sid,
-            tables=tables,
+            tables["seen_bloom"] = self._fresh_filter(delta, gen=0)
+        return self.catalog.commit(
+            tables,
             projections={
                 "seen": schemas.SEEN.fieldNames(),
                 "frontier": schemas.FRONTIER.fieldNames(),
@@ -261,6 +270,7 @@ class CrawlEngine:
                 "frontier_count": len(self.config.seeds),
                 "filter_kind": self._filter_kind_prop(),
             },
+            sid=sid,
         )
 
     def run(self, max_rounds: int | None = None) -> dict:
@@ -351,7 +361,6 @@ class CrawlEngine:
             # costs O(seen rows hashing to touched shards) — at 4096 shards
             # and a handful of expired urls that is seen/4096 per shard, not
             # a 10^10-row filter rebuild.
-            bloom_path = self.catalog.stage_path(sid, "seen_bloom")
             blobs = self._load("seen_bloom", schemas.SEEN_BLOOM)
             latest = (
                 blobs.groupBy("bucket")
@@ -374,56 +383,24 @@ class CrawlEngine:
                 == F.col("bucket"),
                 "left_semi",
             )
-            empty = local_df(self.spark, [], schemas.SEEN_BLOOM)
-            if cfg.filter_kind == "cuckoo":
-                rebuilt = seen_filter.update_cuckoos(
-                    empty,
-                    surviving_touched,
-                    cfg.n_buckets,
-                    inner_buckets=cfg.cuckoo_inner_buckets,
-                    gen=r,
-                )
-            else:
-                rebuilt = seen_filter.update_blooms(
-                    empty,
-                    surviving_touched,
-                    cfg.n_buckets,
-                    cfg.bits_per_bucket,
-                    gen=r,
-                )
+            rebuilt = self._fresh_filter(surviving_touched, gen=r)
             untouched = latest.join(
                 F.broadcast(touched_buckets), "bucket", "left_anti"
             )
             # a touched shard whose members all expired simply has no row
             # in the new table — probes there answer definitively unseen
-            new_blobs = untouched.unionByName(rebuilt)
-            new_blobs.write.mode("overwrite").parquet(bloom_path)
-            tables["seen_bloom"] = bloom_path
+            tables["seen_bloom"] = untouched.unionByName(rebuilt)
 
         if cfg.maintain_index:
             from goprowl_spark import ranking
 
             docs_new = self.spark.read.schema(schemas.DOCUMENTS).parquet(docs_path)
-            postings_path = self.catalog.stage_path(sid, "postings")
-            stats_path = self.catalog.stage_path(sid, "doc_stats")
-            ranking.build_postings(docs_new).write.mode("overwrite").parquet(
-                postings_path
-            )
-            ranking.build_doc_stats(docs_new).write.mode("overwrite").parquet(
-                stats_path
-            )
-            tables["postings"] = postings_path
-            tables["doc_stats"] = stats_path
+            tables["postings"] = ranking.build_postings(docs_new)
+            tables["doc_stats"] = ranking.build_doc_stats(docs_new)
 
         n_frontier = int(props.get("frontier_count", 0))
         frontier_rest = frontier.join(urls_df, "url", "left_anti")
-        frontier_path = self.catalog.stage_path(sid, "frontier")
         if reenqueue:
-            prio = (
-                cfg.priority_fn(F.col("url"), F.col("host"), F.col("depth"))
-                if cfg.priority_fn is not None
-                else -F.col("depth")
-            )
             requeued = expired.select(
                 "url",
                 "url_hash",
@@ -434,33 +411,29 @@ class CrawlEngine:
                 "url_hash",
                 "host",
                 "depth",
-                prio.cast("double").alias("priority"),
+                self._priority().alias("priority"),
                 F.lit(r).alias("discovered_round"),
             )
-            frontier_rest.unionByName(requeued).write.mode("overwrite").parquet(
-                frontier_path
-            )
-            tables["frontier"] = frontier_path
+            tables["frontier"] = frontier_rest.unionByName(requeued)
             n_frontier += n_expired - n_in_frontier
         elif n_in_frontier:
-            frontier_rest.write.mode("overwrite").parquet(frontier_path)
-            tables["frontier"] = frontier_path
+            tables["frontier"] = frontier_rest
             n_frontier -= n_in_frontier
-        expired.unpersist()
 
         seen_count = int(props.get("seen_count", 0))
         if not reenqueue:
             seen_count -= n_expired
-        self.catalog.commit_staged(
-            sid,
-            tables=tables,
+        self.catalog.commit(
+            tables,
             properties={
                 "round": r,
                 "seen_count": seen_count,
                 "frontier_count": n_frontier,
                 "filter_kind": self._filter_kind_prop(),
             },
+            sid=sid,
         )
+        expired.unpersist()
         return n_expired
 
     # ------------------------------------------------------------ one round
@@ -752,11 +725,6 @@ class CrawlEngine:
         # tables at it with per-table column projections (one physical
         # write instead of two — the seen write and, unbudgeted, the
         # frontier write were projections of the same rows).
-        prio = (
-            cfg.priority_fn(F.col("url"), F.col("host"), F.col("depth"))
-            if cfg.priority_fn is not None
-            else -F.col("depth")
-        )
         # the bloom path dropped host before the cogroup (see above);
         # re-derive it here with the same pure parse_url expression. The
         # no-filter path still carries it through.
@@ -771,7 +739,7 @@ class CrawlEngine:
                 "url_hash",
                 "host",
                 "depth",
-                prio.cast("double").alias("priority"),
+                self._priority().alias("priority"),
                 F.lit(r).alias("discovered_round"),
                 F.lit(r).alias("first_seen_round"),
             )
@@ -876,12 +844,17 @@ class CrawlEngine:
         if tail:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            # decorated here so the pool threads take this thread's local
+            # properties (job group, description) and session tags for the
+            # jobs they start
+            @inheritable_thread_target(self.spark)
+            def write(t: tuple[str, DataFrame]) -> None:
+                t[1].write.mode("overwrite").parquet(t[0])
+
             with ThreadPoolExecutor(max_workers=len(tail)) as pool:
-                list(
-                    pool.map(
-                        lambda t: t[1].write.mode("overwrite").parquet(t[0]), tail
-                    )
-                )
+                list(pool.map(write, tail))
         mark("tail_writes")
 
         tables = {"frontier": frontier_path}
@@ -904,9 +877,8 @@ class CrawlEngine:
                 tables["seen_bloom"] = bloom_path
             else:
                 appends["seen_bloom"] = bloom_path
-        self.catalog.commit_staged(
-            sid,
-            tables=tables,
+        self.catalog.commit(
+            tables,
             appends=appends,
             projections=projections,
             properties={
@@ -915,6 +887,7 @@ class CrawlEngine:
                 "frontier_count": n_frontier - n_popped + n_new,
                 "filter_kind": self._filter_kind_prop(),
             },
+            sid=sid,
         )
         mark("manifest")
         if timing:

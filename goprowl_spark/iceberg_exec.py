@@ -20,7 +20,7 @@ Two deliberate disciplines:
   SET * / INSERT *`` with unique source keys ≡ delete-matching + insert-
   all; un-partitioned ``INSERT OVERWRITE`` ≡ delete-all + insert — the
   catalog only ever overwrites whole logical tables, never a partition
-  subset, see SnapshotCatalog.commit_staged).
+  subset, see SnapshotCatalog.commit).
 
 Statement classes (all from goprowl_spark/tables.py):
   CREATE TABLE IF NOT EXISTS ... USING iceberg [PARTITIONED BY] TBLPROPERTIES

@@ -29,12 +29,14 @@ the caller's batch for the length of the commit.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goprowl_spark import ranking, schemas
 from goprowl_spark.session import local_df
-from goprowl_spark.tables import SnapshotCatalog, merge_upsert, parquet_data_files
+from goprowl_spark.tables import SnapshotCatalog, merge_upsert
 
 TABLE = "documents"
 POSTINGS = "postings"
@@ -133,29 +135,9 @@ class DocumentStore:
         (the SearchStats.IndexSize analog, engine/types.go:60-64) — not
         Hadoop's ``.crc`` checksums or ``_SUCCESS`` markers. On Iceberg
         this is a snapshot-summary property; here a directory listing."""
-        import os
-
-        manifest = self.catalog._read_manifest()
-        sid = manifest["current"]
-        if sid is None:
-            return 0
-        entry = manifest["snapshots"].get(str(sid), {"tables": {}})
-        e = entry["tables"].get(TABLE)
-        if e is None:
-            return 0
-        return sum(
-            os.path.getsize(os.path.join(p, f))
-            for p in self.catalog._entry_paths(e)
-            for f in parquet_data_files(p)
-        )
+        return sum(os.path.getsize(f) for f in self.catalog.files(TABLE))
 
     def has_index(self) -> bool:
         """Whether maintained postings tables exist in the current
         snapshot (a crawl without maintain_index leaves none)."""
-        manifest = self.catalog._read_manifest()
-        sid = manifest["current"]
-        if sid is None:
-            return False
-        return POSTINGS in manifest["snapshots"].get(str(sid), {"tables": {}})[
-            "tables"
-        ]
+        return self.catalog.has_table(POSTINGS)

@@ -6,11 +6,22 @@ search/storage/bleve/storage.go:65-91), resume = read any snapshot. The
 sandbox image has no Iceberg runtime jar, so this module implements the same
 contract over plain parquet + a JSON manifest:
 
-* every :meth:`SnapshotCatalog.commit` writes the changed tables under a new
-  ``snapshots/<sid>/`` directory, re-points unchanged tables at their prior
-  files (cheap snapshots, like Iceberg manifest reuse), and atomically
-  replaces ``manifest.json`` (os.replace) — a crash mid-commit leaves the
-  previous snapshot intact;
+* :meth:`SnapshotCatalog.commit` is the one way to make a snapshot. Each
+  table value is a DataFrame, which commit writes under this catalog
+  instance's own ``snapshots/<sid>-<writer>/`` directory, or a path the
+  caller already staged there (via :meth:`stage_path`). Unchanged tables
+  carry over from the parent snapshot by reference (cheap snapshots, like
+  Iceberg manifest reuse);
+* the commit is optimistic: under a lock file in the root it re-reads the
+  manifest, raises ``ValueError`` unless the snapshot's parent is still
+  the current one, and only then atomically replaces ``manifest.json``
+  (os.replace). A concurrent writer that lost the race gets an error, never
+  a silently dropped snapshot, and since staging directories are per
+  instance it never overwrote the winner's files. A crash mid-commit leaves
+  the previous snapshot intact;
+* every manifest table entry has one form, ``{"paths": [...], "columns":
+  [...] | null}``: the parquet directories making up the table and an
+  optional column projection applied on load;
 * :meth:`load` reads any table at any snapshot → the crawl resumes exactly
   from a checkpoint (north_rule requirement).
 
@@ -22,9 +33,11 @@ lineage — mandatory for an iterative algorithm at 10^10 scale.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -43,6 +56,9 @@ class SnapshotCatalog:
         # bottom of this module); golden-pinned in tests/test_tables.py
         self.emit_iceberg_sql = emit_iceberg_sql
         self.emitted_sql: list[str] = []
+        # names this instance's staging directories, so two writers racing
+        # for one snapshot id never write into each other's files
+        self._writer = uuid.uuid4().hex[:12]
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
 
     # ------------------------------------------------------------ manifest
@@ -63,6 +79,21 @@ class SnapshotCatalog:
             json.dump(manifest, f, indent=1, sort_keys=True)
         os.replace(tmp, self._manifest_path)  # atomic pointer swap
 
+    @staticmethod
+    def _child_sid(manifest: dict) -> int:
+        cur = manifest["current"]
+        return 0 if cur is None else int(cur) + 1
+
+    def _entry(
+        self, table: str, snapshot_id: int | None
+    ) -> tuple[int | None, dict | None]:
+        """(sid, the table's manifest entry or None) at ``snapshot_id``
+        (default: current)."""
+        manifest = self._read_manifest()
+        sid = manifest["current"] if snapshot_id is None else snapshot_id
+        snap = manifest["snapshots"].get(str(sid), {"tables": {}})
+        return sid, snap["tables"].get(table)
+
     # ------------------------------------------------------------ snapshots
 
     def latest(self) -> int | None:
@@ -72,140 +103,94 @@ class SnapshotCatalog:
     def snapshot_ids(self) -> list[int]:
         return sorted(int(s) for s in self._read_manifest()["snapshots"])
 
-    def commit(
-        self,
-        tables: dict[str, DataFrame] | None = None,
-        properties: dict | None = None,
-        appends: dict[str, DataFrame] | None = None,
-    ) -> int:
-        """Write a new snapshot: ``tables`` are fully (re)written,
-        ``appends`` add a delta file-set to an existing table (Iceberg
-        fast-append analog — the grown table is never rewritten, which is
-        what keeps per-round commit cost O(delta) instead of O(total) for
-        monotone tables like `seen`), everything else carries over from the
-        current snapshot by reference."""
-        manifest = self._read_manifest()
-        sid = 0 if manifest["current"] is None else int(manifest["current"]) + 1
-        prev = (
-            manifest["snapshots"].get(str(manifest["current"]), {"tables": {}})
-            if manifest["current"] is not None
-            else {"tables": {}}
-        )
-        entry = {"tables": dict(prev["tables"]), "properties": properties or {}}
-
-        # Sequential writes: measured at local[16], concurrent write jobs
-        # contend on cache/disk and run slower than back-to-back.
-        def write(item: tuple[str, DataFrame]) -> tuple[str, str]:
-            name, df = item
-            path = os.path.join(self.root, "snapshots", str(sid), name)
-            df.write.mode("overwrite").parquet(path)
-            return name, path
-
-        work = list((tables or {}).items()) + list((appends or {}).items())
-        written = dict(map(write, work))
-
-        for name in tables or {}:
-            entry["tables"][name] = written[name]
-        for name in appends or {}:
-            existing = entry["tables"].get(name)
-            paths = self._entry_paths(existing) if existing is not None else []
-            cols = self._entry_columns(existing) if existing is not None else None
-            new_paths = paths + [written[name]]
-            entry["tables"][name] = (
-                {"paths": new_paths, "columns": cols} if cols else new_paths
-            )
-        manifest["snapshots"][str(sid)] = entry
-        manifest["current"] = sid
-        self._write_manifest(manifest)
-        return sid
-
-    # -------------------------------------------------------- staged commit
-
     def next_sid(self) -> int:
-        cur = self._read_manifest()["current"]
-        return 0 if cur is None else int(cur) + 1
+        return self._child_sid(self._read_manifest())
 
     def stage_path(self, sid: int, name: str) -> str:
-        """Where a caller should write table ``name`` for snapshot ``sid``
-        (lets the caller interleave its own actions between table writes —
-        e.g. collecting Observation metrics after one write feeds the next)."""
-        return os.path.join(self.root, "snapshots", str(sid), name)
-
-    @staticmethod
-    def _entry_paths(entry) -> list[str]:
-        if isinstance(entry, dict):
-            return list(entry["paths"])
-        return entry if isinstance(entry, list) else [entry]
-
-    @staticmethod
-    def _entry_columns(entry) -> list[str] | None:
-        return entry.get("columns") if isinstance(entry, dict) else None
-
-    def commit_staged(
-        self,
-        sid: int,
-        tables: dict[str, str] | None = None,
-        appends: dict[str, str] | None = None,
-        properties: dict | None = None,
-        projections: dict[str, list[str]] | None = None,
-    ) -> int:
-        """Finish a staged snapshot: paths were already written by the
-        caller (via stage_path); this just swings the manifest pointer —
-        the atomic step. tables: name→path full replace; appends:
-        name→path delta. ``projections``: per-table column list applied on
-        load — lets TWO logical tables share ONE physical delta file (the
-        crawl's seen/frontier delta is written once per round), the
-        manifest-level equivalent of an Iceberg metadata-only view."""
-        manifest = self._read_manifest()
-        expect = 0 if manifest["current"] is None else int(manifest["current"]) + 1
-        if sid != expect:
-            raise ValueError(f"staged sid {sid} != expected {expect}")
-        prev = (
-            manifest["snapshots"].get(str(manifest["current"]), {"tables": {}})
-            if manifest["current"] is not None
-            else {"tables": {}}
+        """Where table ``name`` of snapshot ``sid`` is written — by commit
+        for a DataFrame value, or by a caller that stages its own files
+        (to interleave its own actions between table writes, e.g.
+        collecting Observation metrics after one write feeds the next)."""
+        return os.path.join(
+            self.root, "snapshots", f"{sid}-{self._writer}", name
         )
-        entry = {"tables": dict(prev["tables"]), "properties": properties or {}}
+
+    def commit(
+        self,
+        tables: dict[str, DataFrame | str] | None = None,
+        properties: dict | None = None,
+        appends: dict[str, DataFrame | str] | None = None,
+        projections: dict[str, list[str]] | None = None,
+        sid: int | None = None,
+    ) -> int:
+        """Make snapshot ``sid`` (default: the next one) the current one.
+
+        ``tables`` are replaced whole; ``appends`` add a delta file-set to
+        an existing table (Iceberg fast-append analog — the grown table is
+        never rewritten, which keeps per-round commit cost O(delta) for
+        monotone tables like `seen`); every other table carries over from
+        the parent snapshot. A value is a DataFrame, written here to
+        ``stage_path(sid, name)`` one after another (measured at local[16],
+        concurrent write jobs contend and run slower than back-to-back), or
+        the path of files the caller already staged. ``projections``: a
+        per-table column list applied on load — lets TWO logical tables
+        share ONE physical delta file (the crawl's seen/frontier delta is
+        written once per round), the manifest-level equivalent of an
+        Iceberg metadata-only view; an append keeps its table's projection.
+
+        Raises ``ValueError`` — before touching the manifest — when ``sid``
+        is no longer the current snapshot's child, i.e. another writer
+        committed first."""
+        sid = self.next_sid() if sid is None else sid
         projections = projections or {}
-        for name, path in (tables or {}).items():
-            cols = projections.get(name)
-            entry["tables"][name] = (
-                {"paths": [path], "columns": cols} if cols else path
-            )
-        for name, path in (appends or {}).items():
-            old = entry["tables"].get(name)
-            paths = (self._entry_paths(old) if old is not None else []) + [path]
-            cols = projections.get(name) or (
-                self._entry_columns(old) if old is not None else None
-            )
-            entry["tables"][name] = (
-                {"paths": paths, "columns": cols} if cols else paths
-            )
-        manifest["snapshots"][str(sid)] = entry
-        manifest["current"] = sid
+        tables = {n: self._staged(sid, n, v) for n, v in (tables or {}).items()}
+        appends = {n: self._staged(sid, n, v) for n, v in (appends or {}).items()}
+        with open(os.path.join(self.root, ".commit.lock"), "a") as lock:
+            # serializes the read-check-swap across catalog instances and
+            # processes; released when the file closes
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            manifest = self._read_manifest()
+            expect = self._child_sid(manifest)
+            if sid != expect:
+                raise ValueError(
+                    f"snapshot {sid} lost its parent: another writer "
+                    f"committed first, the next snapshot is {expect}"
+                )
+            parent = manifest["snapshots"].get(str(manifest["current"]))
+            entries = dict(parent["tables"]) if parent else {}
+            stmts = []
+            for values, keep, emit in (
+                (tables, False, iceberg_overwrite_sql),
+                (appends, True, iceberg_append_sql),
+            ):
+                for name in sorted(values):
+                    old = entries.get(name) if keep else None
+                    paths, cols = (old["paths"], old["columns"]) if old else ([], None)
+                    view = projections.get(name)
+                    entries[name] = {
+                        "paths": paths + [values[name]],
+                        "columns": view or cols,
+                    }
+                    target = f"{name}_base" if view else name
+                    stmts.append(emit(target))
+                    if view:
+                        stmts.append(iceberg_projection_view_sql(name, target, view))
+            manifest["snapshots"][str(sid)] = {
+                "tables": entries,
+                "properties": properties or {},
+            }
+            manifest["current"] = sid
+            self._write_manifest(manifest)
         if self.emit_iceberg_sql:
-            for name in sorted(tables or {}):
-                cols = projections.get(name)
-                if cols:
-                    self.emitted_sql.append(
-                        iceberg_overwrite_sql(f"{name}_base")
-                    )
-                    self.emitted_sql.append(
-                        iceberg_projection_view_sql(name, f"{name}_base", cols)
-                    )
-                else:
-                    self.emitted_sql.append(iceberg_overwrite_sql(name))
-            for name in sorted(appends or {}):
-                cols = projections.get(name)
-                if cols:
-                    self.emitted_sql.append(iceberg_append_sql(f"{name}_base"))
-                    self.emitted_sql.append(
-                        iceberg_projection_view_sql(name, f"{name}_base", cols)
-                    )
-                else:
-                    self.emitted_sql.append(iceberg_append_sql(name))
-        self._write_manifest(manifest)
+            self.emitted_sql.extend(stmts)
         return sid
+
+    def _staged(self, sid: int, name: str, value: DataFrame | str) -> str:
+        if isinstance(value, DataFrame):
+            path = self.stage_path(sid, name)
+            value.write.mode("overwrite").parquet(path)
+            return path
+        return value
 
     def load(
         self,
@@ -218,23 +203,31 @@ class SnapshotCatalog:
         is given (first crawl round bootstraps from empty state). Entries
         carrying a column projection are selected down on read (column
         pruning reaches the parquet scan)."""
-        manifest = self._read_manifest()
-        sid = manifest["current"] if snapshot_id is None else snapshot_id
-        entry = manifest["snapshots"].get(str(sid), {"tables": {}}) if sid is not None else {"tables": {}}
-        e = entry["tables"].get(table)
+        sid, e = self._entry(table, snapshot_id)
         if e is None:
             if schema is None:
                 raise KeyError(f"table {table!r} not in snapshot {sid!r}")
             return local_df(self.spark, [], schema)
-        df = self.spark.read.parquet(*self._entry_paths(e))
-        cols = self._entry_columns(e)
-        return df.select(*cols) if cols else df
+        df = self.spark.read.parquet(*e["paths"])
+        return df.select(*e["columns"]) if e["columns"] else df
+
+    def has_table(self, table: str, snapshot_id: int | None = None) -> bool:
+        return self._entry(table, snapshot_id)[1] is not None
+
+    def files(self, table: str, snapshot_id: int | None = None) -> list[str]:
+        """The ``*.parquet`` data files of ``table`` at ``snapshot_id``
+        (default: current); none for an absent table. A projected table
+        lists the files of the whole delta it shares."""
+        e = self._entry(table, snapshot_id)[1]
+        return [
+            os.path.join(p, f)
+            for p in (e["paths"] if e else [])
+            for f in parquet_data_files(p)
+        ]
 
     def properties(self, snapshot_id: int | None = None) -> dict:
         manifest = self._read_manifest()
         sid = manifest["current"] if snapshot_id is None else snapshot_id
-        if sid is None:
-            return {}
         return manifest["snapshots"].get(str(sid), {}).get("properties", {})
 
 

@@ -33,8 +33,8 @@ def test_staged_writes_without_commit_are_invisible(spark, tmp_path):
     assert sorted(r["url"] for r in eng.seen().collect()) == seen_after_r1
 
     # a fresh engine over the same workdir resumes and finishes; the result
-    # equals an uninterrupted crawl (the orphaned staged files are simply
-    # overwritten when round 2 really commits)
+    # equals an uninterrupted crawl (the orphaned staged files stay in the
+    # crashed engine's own staging directory, which no snapshot references)
     resumed = CrawlEngine(
         spark, None, str(tmp_path), cfg, fetcher=corpus.make_fetcher(N)
     )
@@ -61,7 +61,7 @@ def test_stale_sid_commit_rejected(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError):
-        cat.commit_staged(5, tables={"t": "/nonexistent"})
+        cat.commit({"t": "/nonexistent"}, sid=5)
 
 
 def test_expire_commit_is_a_resumable_checkpoint(spark, tmp_path):

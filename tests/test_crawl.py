@@ -495,3 +495,28 @@ def test_expire_mid_crawl_keeps_frontier_consistent(spark, tmp_path, kind):
     # every document's url is in the seen set (frontier ⊆ seen held)
     missing = docs.join(engine.seen(), docs["doc_id"] == F.col("url"), "left_anti")
     assert missing.count() == 0
+
+
+def test_round_jobs_all_carry_the_callers_job_group(spark, tmp_path):
+    """Every Spark job a round starts, including the tail writes run on
+    worker threads, carries the job group set by the caller's thread."""
+    cfg = CrawlConfig(
+        seeds=[corpus.url(0), corpus.url(5)],
+        max_depth=3,
+        default_budget=3,
+        filter_kind="cuckoo",
+        maintain_index=True,
+    )
+    engine = make_engine(spark, tmp_path, cfg)
+    engine.start()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("crawl-round-under-test", "one crawl round")
+    try:
+        assert engine.crawl_round()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("crawl-round-under-test")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()

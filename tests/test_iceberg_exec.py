@@ -115,14 +115,14 @@ def test_staged_commit_replay_matches_catalog(spark, tmp_path):
             "seen": cat.stage_path(sid, "crawl_delta"),
             "crawl_metrics": cat.stage_path(sid, "crawl_metrics"),
         }
-        cat.commit_staged(
-            sid,
-            tables=tables,
+        cat.commit(
+            tables,
             appends=appends,
             projections={
                 "seen": ["url", "url_hash"],
                 "frontier": ["url", "url_hash", "depth"],
             },
+            sid=sid,
         )
         return cat.emitted_sql[n_before:], tables, appends
 

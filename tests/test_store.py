@@ -90,19 +90,17 @@ def test_table_size_counts_only_parquet_data_files(spark, tmp_path):
     """index size is the sum of the part files' sizes: Hadoop's .crc
     checksums and the _SUCCESS marker are not data."""
     import os
+    from urllib.parse import urlparse
 
     store = DocumentStore(spark, str(tmp_path))
     store.batch_store(
         spark.createDataFrame([_doc("u1", "one"), _doc("u2", "two")], schemas.DOCUMENTS)
     )
-    entry = store.catalog._read_manifest()["snapshots"][str(store.catalog.latest())]
-    path = entry["tables"]["documents"]
-    names = os.listdir(path)
-    parts = [f for f in names if f.startswith("part-") and f.endswith(".parquet")]
-    assert parts and len(parts) < len(names)  # checksums/markers are present
-    assert store.table_size_bytes() == sum(
-        os.path.getsize(os.path.join(path, f)) for f in parts
-    )
+    parts = [urlparse(u).path for u in store.get_all().inputFiles()]
+    (path,) = {os.path.dirname(p) for p in parts}
+    assert all(os.path.basename(p).startswith("part-") for p in parts)
+    assert len(parts) < len(os.listdir(path))  # checksums/markers are present
+    assert store.table_size_bytes() == sum(os.path.getsize(p) for p in parts)
 
 
 def _is_cached(df) -> bool:

@@ -1,5 +1,7 @@
 """Snapshot catalog: commit/load/time-travel/atomic pointer semantics."""
 
+import pytest
+
 from goprowl_spark.tables import SnapshotCatalog, merge_upsert
 
 
@@ -71,9 +73,8 @@ def test_iceberg_sql_emission_goldens(spark, tmp_path):
     delta = spark.createDataFrame([("u", 1, 0)], "url string, url_hash long, depth int")
     delta.write.parquet(cat.stage_path(sid, "crawl_delta"))
     delta.write.parquet(cat.stage_path(sid, "crawl_metrics"))
-    cat.commit_staged(
-        sid,
-        tables={"frontier": cat.stage_path(sid, "crawl_delta")},
+    cat.commit(
+        {"frontier": cat.stage_path(sid, "crawl_delta")},
         appends={
             "seen": cat.stage_path(sid, "crawl_delta"),
             "crawl_metrics": cat.stage_path(sid, "crawl_metrics"),
@@ -83,6 +84,7 @@ def test_iceberg_sql_emission_goldens(spark, tmp_path):
             "frontier": ["url", "url_hash", "depth"],
         },
         properties={"round": 1},
+        sid=sid,
     )
     assert cat.emitted_sql == [
         "INSERT OVERWRITE spark_catalog.goprowl.frontier_base\nSELECT * FROM staged",
@@ -148,3 +150,119 @@ def test_write_local_parquet_matches_spark_physical_types(spark, tmp_path):
     ]
     both = spark.read.parquet(local_path, spark_path).collect()
     assert Counter(map(tuple, both)) == Counter(rows + rows)
+
+
+def test_concurrent_commit_raises_and_keeps_the_winner(spark, tmp_path):
+    """Two writers over one root race for the same snapshot id: the one
+    that commits second raises instead of replacing the first's snapshot,
+    and its staged writes leave the winner's files alone."""
+    a = SnapshotCatalog(spark, str(tmp_path))
+    b = SnapshotCatalog(spark, str(tmp_path))
+    sid_a, sid_b = a.next_sid(), b.next_sid()
+    assert sid_a == sid_b == 0
+    a.commit(
+        {"t": spark.createDataFrame([(1, "a")], "id int, v string")},
+        properties={"writer": "a"},
+        sid=sid_a,
+    )
+    with pytest.raises(ValueError, match="another writer"):
+        b.commit(
+            {"t": spark.createDataFrame([(2, "b")], "id int, v string")},
+            properties={"writer": "b"},
+            sid=sid_b,
+        )
+    for cat in (a, b):
+        assert cat.snapshot_ids() == [0]
+        assert [tuple(r) for r in cat.load("t").collect()] == [(1, "a")]
+        assert cat.properties() == {"writer": "a"}
+
+
+def test_staged_commits_without_spark(tmp_path):
+    """Path values need no Spark session. Replaces, appends, projections
+    and carried-over tables all land in one {paths, columns} entry form."""
+    import json
+
+    cat = SnapshotCatalog(None, str(tmp_path))
+    assert cat.latest() is None and cat.properties() == {}
+    for i in range(50):
+        sid = cat.next_sid()
+        delta = cat.stage_path(sid, "delta")
+        appends = {"seen": delta, "metrics": cat.stage_path(sid, "metrics")}
+        tables = {"frontier": delta}
+        if i == 0:
+            tables["config"] = cat.stage_path(sid, "config")
+        assert cat.commit(
+            tables,
+            properties={"round": i},
+            appends=appends,
+            projections={"seen": ["url"], "frontier": ["url", "depth"]},
+            sid=sid,
+        ) == i
+    assert cat.latest() == 49
+    assert cat.snapshot_ids() == list(range(50))
+    assert cat.properties() == {"round": 49}
+    assert cat.properties(7) == {"round": 7}
+    assert cat.has_table("config", 49) and not cat.has_table("nope")
+    with pytest.raises(ValueError):
+        cat.commit({"frontier": delta}, sid=49)
+
+    with open(tmp_path / "manifest.json") as f:
+        manifest = json.load(f)
+    entries = [
+        e for s in manifest["snapshots"].values() for e in s["tables"].values()
+    ]
+    assert len(entries) == 4 + 49 * 4
+    for e in entries:
+        assert set(e) == {"paths", "columns"}
+        assert isinstance(e["paths"], list) and e["paths"]
+    last = manifest["snapshots"]["49"]["tables"]
+    assert last["seen"]["columns"] == ["url"]
+    assert last["metrics"]["columns"] is None
+    assert len(last["seen"]["paths"]) == len(last["metrics"]["paths"]) == 50
+    assert last["frontier"] == {
+        "paths": [cat.stage_path(49, "delta")], "columns": ["url", "depth"]
+    }
+    assert last["config"]["paths"] == [cat.stage_path(0, "config")]
+
+
+def test_racing_writers_lose_no_snapshot(tmp_path):
+    """More writers than cores race over one root, each retrying on a
+    moved parent: every commit that returned is in the final snapshot's
+    history exactly once, so no snapshot was silently replaced."""
+    import json
+    import sys
+    import threading
+
+    n_writers, per_writer = 8, 10
+
+    def writer(i: int) -> None:
+        cat = SnapshotCatalog(None, str(tmp_path))
+        done = 0
+        while done < per_writer:
+            sid = cat.next_sid()
+            try:
+                cat.commit(appends={"log": cat.stage_path(sid, f"w{i}")}, sid=sid)
+            except ValueError:
+                continue
+            done += 1
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(i,)) for i in range(n_writers)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+
+    n = n_writers * per_writer
+    cat = SnapshotCatalog(None, str(tmp_path))
+    assert cat.snapshot_ids() == list(range(n))
+    with open(tmp_path / "manifest.json") as f:
+        paths = json.load(f)["snapshots"][str(n - 1)]["tables"]["log"]["paths"]
+    assert len(set(paths)) == len(paths) == n
+    for i in range(n_writers):
+        assert sum(p.endswith(f"/w{i}") for p in paths) == per_writer
