@@ -11,7 +11,7 @@ becomes an iterative round loop:
       → fetch            (join vs page corpus — HTTP in production, S1)
       → parse → spans    (Arrow pandas UDF, S4/U5)
       → explode links    (S3) → candidates at depth+1 (P2)
-      → Bloom probe + exact anti-join vs seen (P4/J1/U7)
+      → seen-filter probe + exact anti-join vs seen (P4/J1/U7)
       → commit snapshot: documents ∪ new, seen ∪ new, frontier rewritten,
         per-round metrics row (S5/S6/S12)
 
@@ -42,24 +42,27 @@ class CrawlConfig:
     max_depth: int = 3  # reference default: internal/app/module.go:14
     allowed_hosts: list[str] | None = None  # None = all; reference P1: colly.go:174
     default_budget: int | None = None  # None = unlimited (plain BFS)
-    use_bloom: bool = True
-    # "bloom" (bit-array blobs) or "cuckoo" (fingerprint tables — same
-    # shard/delta contract, supports recrawl/expiry deletion via
-    # seen_filter.delete_cuckoos); crawl traces are identical either way
+    # seen-filter kind: "bloom" (bit-array blobs) or "cuckoo" (fingerprint
+    # tables — same shard/delta contract, and deletable via
+    # seen_filter.delete_cuckoos); crawl traces are identical either way.
+    # A workdir keeps its kind and shard count for life: every commit
+    # records both and CrawlEngine refuses to resume with others.
     filter_kind: str = "bloom"
     n_buckets: int = seen_filter.DEFAULT_N_BUCKETS
-    bits_per_bucket: int = seen_filter.DEFAULT_BITS_PER_BUCKET
-    # cuckoo-backend geometry for FRESH filter shards (an existing blob's
-    # header stays authoritative across resume). Size it for the expected
+    # fresh-shard geometry: bits per Bloom shard (a multiple of 8) and
+    # inner buckets per cuckoo shard (a power of two). A stored blob
+    # carries its own geometry, so changing either on resume only sizes
+    # the shards created from then on. Size cuckoo shards for the expected
     # crawl scale — seen_filter.cuckoo_inner_buckets_for(expected_urls) —
     # the way a production deployment provisions any sketch. Undersized
     # shards auto-grow their slot cap in place (bounded, membership-
     # preserving; see seen_filter._cuckoo_grow), so this knob is FPR/
     # throughput tuning, never correctness.
+    bits_per_bucket: int = seen_filter.DEFAULT_BITS_PER_BUCKET
     cuckoo_inner_buckets: int = seen_filter.CUCKOO_INNER_BUCKETS
     # Bloom commits are per-round DELTAS (only touched buckets, latest
     # generation wins on read); every this-many rounds a compaction
-    # rewrites the full table to bound read amplification
+    # rewrites the full table to bound read amplification (0 = never)
     bloom_compact_every: int = 8
     salt: int = 16
     # fetch batches at or below this many URLs broadcast into the corpus
@@ -97,6 +100,29 @@ class CrawlConfig:
     maintain_index: bool = False
     extra: dict = field(default_factory=dict)
 
+    def __post_init__(self):
+        """Reject values that would otherwise fail inside a Python worker
+        mid-round (or divide a pmod by zero)."""
+        nb = self.cuckoo_inner_buckets
+        checks = [
+            (self.filter_kind in ("bloom", "cuckoo"),
+             f"unknown filter_kind {self.filter_kind!r}"),
+            (self.n_buckets > 0, "n_buckets must be positive"),
+            (self.salt > 0, "salt must be positive"),
+            (self.bits_per_bucket > 0 and self.bits_per_bucket % 8 == 0,
+             "bits_per_bucket must be a positive multiple of 8"),
+            (nb > 0 and nb & (nb - 1) == 0,
+             "cuckoo_inner_buckets must be a power of two"),
+            (self.fetch_tasks_per_core >= 1, "fetch_tasks_per_core must be >= 1"),
+            (self.fetch_target_urls_per_task >= 1,
+             "fetch_target_urls_per_task must be >= 1"),
+            (self.bloom_compact_every >= 0,
+             "bloom_compact_every must be >= 0 (0 = never compact)"),
+        ]
+        for ok, msg in checks:
+            if not ok:
+                raise ValueError(msg)
+
 
 class CrawlEngine:
     """Round-loop driver (reference: CollyCrawler.CrawlWithHandler,
@@ -122,31 +148,32 @@ class CrawlEngine:
         cmd/crawl.go:113) as a declarative per-round stage."""
         if corpus is None and fetcher is None:
             raise ValueError("need a corpus table or a fetcher")
-        if config.filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError(f"unknown filter_kind {config.filter_kind!r}")
         self.spark = spark
         self.corpus = corpus
         self.catalog = SnapshotCatalog(spark, workdir)
         self.config = config
-        # Crash-recovery / resume guard: the seen_bloom blobs are encoded by
+        # Crash-recovery / resume guard. The seen_bloom blobs are encoded by
         # whichever kernel wrote them, and the kernels cannot read each
         # other's payloads — a bloom probe over a cuckoo blob yields SILENT
         # false negatives (re-admitting already-seen URLs under duplicate
         # doc_ids); a cuckoo decode of a bloom blob reads garbage geometry.
-        # Every commit records the active kind in the snapshot properties
-        # ("none" when the filter is off, because resuming with a filter
-        # over a filterless workdir would skip the earlier-seen URLs'
-        # filter entries — the same false-negative failure); attaching an
-        # engine with a different kind must fail HERE, not mid-crawl.
+        # A url's shard is pmod(url_hash, n_buckets), so a different shard
+        # count probes most urls against the wrong shard — the same silent
+        # false negatives. Every commit records both in the snapshot
+        # properties; attaching an engine that differs must fail HERE, not
+        # mid-crawl. (A workdir written before a property was recorded is
+        # not checked for it.)
         if self.catalog.latest() is not None:
-            stored = self.catalog.properties().get("filter_kind")
-            if stored is not None and stored != self._filter_kind_prop():
-                raise ValueError(
-                    f"workdir {workdir!r} was crawled with "
-                    f"filter_kind={stored!r}; this engine is configured "
-                    f"for {self._filter_kind_prop()!r} — the seen-filter "
-                    "blobs are not interchangeable between kernels"
-                )
+            props = self.catalog.properties()
+            for key, want in self._filter_props().items():
+                stored = props.get(key)
+                if stored is not None and stored != want:
+                    raise ValueError(
+                        f"workdir {workdir!r} was crawled with "
+                        f"{key}={stored!r}; this engine is configured for "
+                        f"{want!r} — the stored seen-filter shards cannot be "
+                        "read under another filter kind or shard count"
+                    )
         # The caller's robots and budget tables are broadcast into every
         # round; materialize each once per engine so a round does not
         # re-run the caller's plan (a PythonRDD built from a Python list
@@ -178,24 +205,26 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ state
 
-    def _filter_kind_prop(self) -> str:
-        return self.config.filter_kind if self.config.use_bloom else "none"
+    def _filter_props(self) -> dict:
+        """The seen-filter settings a workdir keeps for life, recorded in
+        every commit's snapshot properties."""
+        return {
+            "filter_kind": self.config.filter_kind,
+            "n_buckets": self.config.n_buckets,
+        }
 
     def _fresh_filter(self, members: DataFrame, gen: int) -> DataFrame:
         """Seen-filter shards built from scratch over ``members``, in the
         configured kind and fresh-shard geometry."""
         cfg = self.config
-        empty = local_df(self.spark, [], schemas.SEEN_BLOOM)
-        if cfg.filter_kind == "cuckoo":
-            return seen_filter.update_cuckoos(
-                empty,
-                members,
-                cfg.n_buckets,
-                inner_buckets=cfg.cuckoo_inner_buckets,
-                gen=gen,
-            )
         return seen_filter.update_blooms(
-            empty, members, cfg.n_buckets, cfg.bits_per_bucket, gen=gen
+            local_df(self.spark, [], schemas.SEEN_BLOOM),
+            members,
+            cfg.n_buckets,
+            cfg.bits_per_bucket,
+            gen=gen,
+            kind=cfg.filter_kind,
+            inner_buckets=cfg.cuckoo_inner_buckets,
         )
 
     def _priority(self) -> Column:
@@ -255,9 +284,8 @@ class CrawlEngine:
             "seen": delta_path,
             "documents": local_df(self.spark, [], schemas.DOCUMENTS),
             "crawl_metrics": local_df(self.spark, [], schemas.CRAWL_METRICS),
+            "seen_bloom": self._fresh_filter(delta, gen=0),
         }
-        if self.config.use_bloom:
-            tables["seen_bloom"] = self._fresh_filter(delta, gen=0)
         return self.catalog.commit(
             tables,
             projections={
@@ -268,7 +296,7 @@ class CrawlEngine:
                 "round": 0,
                 "seen_count": len(self.config.seeds),
                 "frontier_count": len(self.config.seeds),
-                "filter_kind": self._filter_kind_prop(),
+                **self._filter_props(),
             },
             sid=sid,
         )
@@ -349,8 +377,6 @@ class CrawlEngine:
                 "overwrite"
             ).parquet(seen_path)
             tables["seen"] = seen_path
-
-        if cfg.use_bloom and not reenqueue:
             # Rebuild ONLY the touched shards from the surviving seen rows —
             # exact by construction for BOTH backends. A bare fingerprint
             # delete (delete_cuckoos) is O(expired) but unsound whenever the
@@ -372,15 +398,12 @@ class CrawlEngine:
                 .select("bucket", "s.filter_blob", "s.n_items", "s.gen")
             )
             touched_buckets = expired.select(
-                F.pmod(F.col("url_hash"), F.lit(cfg.n_buckets))
-                .cast("int")
-                .alias("bucket")
+                seen_filter.shard_of(cfg.n_buckets).alias("bucket")
             ).distinct()
             surviving = self.spark.read.schema(schemas.SEEN).parquet(seen_path)
             surviving_touched = surviving.join(
                 F.broadcast(touched_buckets),
-                F.pmod(F.col("url_hash"), F.lit(cfg.n_buckets)).cast("int")
-                == F.col("bucket"),
+                seen_filter.shard_of(cfg.n_buckets) == F.col("bucket"),
                 "left_semi",
             )
             rebuilt = self._fresh_filter(surviving_touched, gen=r)
@@ -429,7 +452,7 @@ class CrawlEngine:
                 "round": r,
                 "seen_count": seen_count,
                 "frontier_count": n_frontier,
-                "filter_kind": self._filter_kind_prop(),
+                **self._filter_props(),
             },
             sid=sid,
         )
@@ -489,9 +512,7 @@ class CrawlEngine:
             return False
         frontier = self.frontier()
         seen = self.seen()
-        blooms = (
-            self._load("seen_bloom", schemas.SEEN_BLOOM) if cfg.use_bloom else None
-        )
+        blooms = self._load("seen_bloom", schemas.SEEN_BLOOM)
         sid = self.catalog.next_sid()
         unbudgeted = self.host_budget is None and cfg.default_budget is None
 
@@ -513,7 +534,7 @@ class CrawlEngine:
                 # unbudgeted BFS; an upper bound under budgets)
                 want = min(
                     par * cfg.fetch_tasks_per_core,
-                    max(par, n_frontier // max(cfg.fetch_target_urls_per_task, 1) + 1),
+                    max(par, n_frontier // cfg.fetch_target_urls_per_task + 1),
                 )
                 batch = batch.repartition(want)
             fetched = self.fetcher(batch)
@@ -611,113 +632,96 @@ class CrawlEngine:
         # the round pays a single candidates shuffle-by-bucket and a single
         # Python/Arrow pass for both the membership test and the blob
         # delta, instead of the two passes the split design cost.
-        fused = None
-        obs_cand = None
-        n_cand = None
-        if cfg.use_bloom:
-            compact = (
-                cfg.bloom_compact_every > 0 and r % cfg.bloom_compact_every == 0
-            )
-            # host is a pure function of url (parse_url above) and the
-            # cogroup doesn't consult it — dropping it here keeps the
-            # host STRING out of the bucket shuffle AND the Python/Arrow
-            # round trip (≈20% fewer candidate bytes both ways); it is
-            # re-derived on the (smaller) post-dedup survivor set below.
-            # The shuffle-bound stage binds hardest on the many-core leg,
-            # so this is also a scaling-efficiency lever (guide §2.3).
-            fused = seen_filter.probe_and_update(
-                raw_candidates.drop("host"),
-                blooms,
-                cfg.n_buckets,
-                cfg.bits_per_bucket,
-                gen=r,
-                emit_untouched=compact,
-                dedup=True,
-                kind=cfg.filter_kind,
-                inner_buckets=cfg.cuckoo_inner_buckets,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            # ONE aggregate materializes the cogroup into the cache and
-            # yields both counters the round needs: the post-dedup
-            # candidate count (from the blob rows — this job used to run
-            # AFTER the delta write) and the maybe-seen count, which picks
-            # the exact-join strategy below BEFORE the write job plans.
-            stats = fused.agg(
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("filter_blob").isNotNull(), F.col("n_cands")
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("n_cand"),
-                F.coalesce(
-                    F.sum(
-                        (
-                            F.col("filter_blob").isNull() & F.col("maybe_seen")
-                        ).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias("n_maybe"),
-            ).collect()[0]
-            n_cand = int(stats["n_cand"])
-            n_maybe = int(stats["n_maybe"])
-            mark("dedup_cogroup_stats")
-            probed = fused.where(F.col("filter_blob").isNull())
-            cand_cols = ["url", "url_hash", "depth"]
-            fresh = probed.where(~F.col("maybe_seen")).select(*cand_cols)
-            maybe = probed.where(F.col("maybe_seen")).select(*cand_cols)
-            if n_maybe == 0:
-                # no Bloom hits at all: nothing to check exactly
-                unseen = fresh
-            elif n_maybe <= cfg.broadcast_pop_limit:
-                # Double-broadcast exact check: the old
-                # maybe-anti-join-seen shuffled the ENTIRE seen table
-                # (growing every round) plus the maybe side. Instead:
-                # (1) scan seen map-only against broadcast(maybe) → the
-                #     confirmed-seen subset (≤ n_maybe rows),
-                # (2) anti-join maybe against broadcast(confirmed).
-                # maybe ∖ (seen ∩ maybe) ≡ maybe ∖ seen, and the round's
-                # dedup pays ZERO wide shuffles past the bucket cogroup —
-                # the seen table is read but never shuffled. The url
-                # equality re-check keeps 64-bit hash collisions harmless
-                # (exactness cannot ride on url_hash alone: at 10^10 URLs
-                # the birthday bound expects a few 64-bit collisions).
-                # broadcast only the 8-byte hashes (5× smaller driver
-                # collect than (hash, url) rows); the inner join may admit
-                # hash-collision extras — seen urls that share a hash with
-                # a maybe url — but the anti-join below re-checks
-                # (url_hash, url), so a maybe row is removed iff that
-                # exact row is in seen. Still exactly maybe ∖ seen.
-                mb_h = maybe.select("url_hash")
-                confirmed = seen.select("url_hash", "url").join(
-                    F.broadcast(mb_h), on="url_hash", how="inner"
-                )
-                unseen = fresh.unionByName(
-                    maybe.join(
-                        F.broadcast(confirmed),
-                        on=["url_hash", "url"],
-                        how="left_anti",
+        compact = (
+            cfg.bloom_compact_every > 0 and r % cfg.bloom_compact_every == 0
+        )
+        # host is a pure function of url (parse_url above) and the
+        # cogroup doesn't consult it — dropping it here keeps the
+        # host STRING out of the bucket shuffle AND the Python/Arrow
+        # round trip (≈20% fewer candidate bytes both ways); it is
+        # re-derived on the (smaller) post-dedup survivor set below.
+        # The shuffle-bound stage binds hardest on the many-core leg,
+        # so this is also a scaling-efficiency lever (guide §2.3).
+        fused = seen_filter.probe_and_update(
+            raw_candidates.drop("host"),
+            blooms,
+            cfg.n_buckets,
+            cfg.bits_per_bucket,
+            gen=r,
+            emit_untouched=compact,
+            dedup=True,
+            kind=cfg.filter_kind,
+            inner_buckets=cfg.cuckoo_inner_buckets,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # ONE aggregate materializes the cogroup into the cache and
+        # yields both counters the round needs: the post-dedup
+        # candidate count (from the blob rows — this job used to run
+        # AFTER the delta write) and the maybe-seen count, which picks
+        # the exact-join strategy below BEFORE the write job plans.
+        stats = fused.agg(
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        F.col("filter_blob").isNotNull(), F.col("n_cands")
                     )
+                ),
+                F.lit(0),
+            ).alias("n_cand"),
+            F.coalesce(
+                F.sum(
+                    (
+                        F.col("filter_blob").isNull() & F.col("maybe_seen")
+                    ).cast("long")
+                ),
+                F.lit(0),
+            ).alias("n_maybe"),
+        ).collect()[0]
+        n_cand = int(stats["n_cand"])
+        n_maybe = int(stats["n_maybe"])
+        mark("dedup_cogroup_stats")
+        probed = fused.where(F.col("filter_blob").isNull())
+        cand_cols = ["url", "url_hash", "depth"]
+        fresh = probed.where(~F.col("maybe_seen")).select(*cand_cols)
+        maybe = probed.where(F.col("maybe_seen")).select(*cand_cols)
+        if n_maybe == 0:
+            # no Bloom hits at all: nothing to check exactly
+            unseen = fresh
+        elif n_maybe <= cfg.broadcast_pop_limit:
+            # Double-broadcast exact check: the old
+            # maybe-anti-join-seen shuffled the ENTIRE seen table
+            # (growing every round) plus the maybe side. Instead:
+            # (1) scan seen map-only against broadcast(maybe) → the
+            #     confirmed-seen subset (≤ n_maybe rows),
+            # (2) anti-join maybe against broadcast(confirmed).
+            # maybe ∖ (seen ∩ maybe) ≡ maybe ∖ seen, and the round's
+            # dedup pays ZERO wide shuffles past the bucket cogroup —
+            # the seen table is read but never shuffled. The url
+            # equality re-check keeps 64-bit hash collisions harmless
+            # (exactness cannot ride on url_hash alone: at 10^10 URLs
+            # the birthday bound expects a few 64-bit collisions).
+            # broadcast only the 8-byte hashes (5× smaller driver
+            # collect than (hash, url) rows); the inner join may admit
+            # hash-collision extras — seen urls that share a hash with
+            # a maybe url — but the anti-join below re-checks
+            # (url_hash, url), so a maybe row is removed iff that
+            # exact row is in seen. Still exactly maybe ∖ seen.
+            mb_h = maybe.select("url_hash")
+            confirmed = seen.select("url_hash", "url").join(
+                F.broadcast(mb_h), on="url_hash", how="inner"
+            )
+            unseen = fresh.unionByName(
+                maybe.join(
+                    F.broadcast(confirmed),
+                    on=["url_hash", "url"],
+                    how="left_anti",
                 )
-            else:
-                # maybe-side too big to broadcast (possible only when a
-                # round re-encounters >broadcast_pop_limit known URLs):
-                # fall back to the shuffle anti-join
-                unseen = fresh.unionByName(
-                    maybe.join(seen, on=["url_hash", "url"], how="left_anti")
-                )
+            )
         else:
-            compact = False
-            candidates = (
-                raw_candidates.groupBy("url", "url_hash", "host")
-                .agg(F.min("depth").cast("int").alias("depth"))
-            )
-            obs_cand = Observation(f"cand_r{r}_{sid}")
-            candidates = candidates.observe(
-                obs_cand, F.count(F.lit(1)).alias("n")
-            )
-            unseen = candidates.join(
-                seen, on=["url_hash", "url"], how="left_anti"
+            # maybe-side too big to broadcast (possible only when a
+            # round re-encounters >broadcast_pop_limit known URLs):
+            # fall back to the shuffle anti-join
+            unseen = fresh.unionByName(
+                maybe.join(seen, on=["url_hash", "url"], how="left_anti")
             )
         obs_new = Observation(f"new_r{r}_{sid}")
         # The round delta carries the SUPERSET of the frontier and seen
@@ -725,16 +729,11 @@ class CrawlEngine:
         # tables at it with per-table column projections (one physical
         # write instead of two — the seen write and, unbudgeted, the
         # frontier write were projections of the same rows).
-        # the bloom path dropped host before the cogroup (see above);
-        # re-derive it here with the same pure parse_url expression. The
-        # no-filter path still carries it through.
-        unseen_h = (
-            unseen
-            if "host" in unseen.columns
-            else unseen.withColumn("host", F.parse_url("url", F.lit("HOST")))
-        )
+        # host was dropped before the cogroup (see above); re-derive it here
+        # with the same pure parse_url expression.
         new_entries = (
-            unseen_h.select(
+            unseen.withColumn("host", F.parse_url("url", F.lit("HOST")))
+            .select(
                 "url",
                 "url_hash",
                 "host",
@@ -748,8 +747,6 @@ class CrawlEngine:
         )
         delta_path = self.catalog.stage_path(sid, "crawl_delta")
         new_entries.write.mode("overwrite").parquet(delta_path)
-        if n_cand is None:
-            n_cand = int(obs_cand.get["n"] or 0)
         n_new = int(obs_new.get["n"] or 0)
         mark("dedup_seen_write")
 
@@ -769,9 +766,7 @@ class CrawlEngine:
                 new_entries.select(*schemas.FRONTIER.fieldNames())
             )
             frontier_path = self.catalog.stage_path(sid, "frontier")
-        bloom_path = (
-            self.catalog.stage_path(sid, "seen_bloom") if cfg.use_bloom else None
-        )
+        bloom_path = self.catalog.stage_path(sid, "seen_bloom")
 
         # wave 5: per-partition lineage counters (north_star requirement;
         # also the skew-diagnosis signal — a hot host shows up as one
@@ -834,27 +829,25 @@ class CrawlEngine:
             tail.append((stats_path, ranking.build_doc_stats(docs_stored)))
         if new_frontier is not None:
             tail.append((frontier_path, new_frontier))
-        if bloom_path is not None:
-            # the blob rows of the fused pass ARE this round's bloom delta
-            # (only touched buckets; full set on compaction rounds)
-            bloom_delta = fused.where(F.col("filter_blob").isNotNull()).select(
-                F.col("__bucket").alias("bucket"), "filter_blob", "n_items", "gen"
-            )
-            tail.append((bloom_path, bloom_delta))
-        if tail:
-            from concurrent.futures import ThreadPoolExecutor
+        # the blob rows of the fused pass ARE this round's filter delta
+        # (only touched buckets; full set on compaction rounds)
+        bloom_delta = fused.where(F.col("filter_blob").isNotNull()).select(
+            F.col("__bucket").alias("bucket"), "filter_blob", "n_items", "gen"
+        )
+        tail.append((bloom_path, bloom_delta))
+        from concurrent.futures import ThreadPoolExecutor
 
-            from pyspark import inheritable_thread_target
+        from pyspark import inheritable_thread_target
 
-            # decorated here so the pool threads take this thread's local
-            # properties (job group, description) and session tags for the
-            # jobs they start
-            @inheritable_thread_target(self.spark)
-            def write(t: tuple[str, DataFrame]) -> None:
-                t[1].write.mode("overwrite").parquet(t[0])
+        # decorated here so the pool threads take this thread's local
+        # properties (job group, description) and session tags for the
+        # jobs they start
+        @inheritable_thread_target(self.spark)
+        def write(t: tuple[str, DataFrame]) -> None:
+            t[1].write.mode("overwrite").parquet(t[0])
 
-            with ThreadPoolExecutor(max_workers=len(tail)) as pool:
-                list(pool.map(write, tail))
+        with ThreadPoolExecutor(max_workers=len(tail)) as pool:
+            list(pool.map(write, tail))
         mark("tail_writes")
 
         tables = {"frontier": frontier_path}
@@ -871,12 +864,8 @@ class CrawlEngine:
         if postings_path is not None:
             appends["postings"] = postings_path
             appends["doc_stats"] = stats_path
-        if bloom_path is not None:
-            # delta append per round; table replace on compaction rounds
-            if compact:
-                tables["seen_bloom"] = bloom_path
-            else:
-                appends["seen_bloom"] = bloom_path
+        # filter delta append per round; table replace on compaction rounds
+        (tables if compact else appends)["seen_bloom"] = bloom_path
         self.catalog.commit(
             tables,
             appends=appends,
@@ -885,7 +874,7 @@ class CrawlEngine:
                 "round": r,
                 "seen_count": n_seen,
                 "frontier_count": n_frontier - n_popped + n_new,
-                "filter_kind": self._filter_kind_prop(),
+                **self._filter_props(),
             },
             sid=sid,
         )
@@ -898,6 +887,5 @@ class CrawlEngine:
                 file=sys.stderr,
             )
         for df in (popped, new_entries, fused):
-            if df is not None:
-                df.unpersist()
+            df.unpersist()
         return True

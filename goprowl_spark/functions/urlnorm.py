@@ -1,4 +1,4 @@
-"""URL canonicalization — Arrow-vectorized pandas UDF.
+"""URL canonicalization.
 
 Reference behavior being rebuilt: colly's ``e.Request.AbsoluteURL(link)``
 (search/crawlers/colly.go:86) + ``url.Parse`` validity check
@@ -8,19 +8,14 @@ explicit: resolve relative hrefs against the page URL, lowercase
 scheme/host, strip fragments, strip default ports, normalize empty paths,
 reject non-http(s) and unparseable URLs (→ null, filtered upstream).
 
-Vectorized: one Python batch per Arrow chunk (pandas UDF), never per-row
-Spark UDFs (BASELINE.json:input_hint hard requirement).
+``canonicalize`` runs inside the parse stage's Arrow UDF (one Python batch
+per Arrow chunk, never per-row Spark UDFs — BASELINE.json:input_hint).
 """
 
 from __future__ import annotations
 
 import re as _re
 from urllib.parse import urljoin, urlsplit, urlunsplit
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _DEFAULT_PORTS = {"http": 80, "https": 443}
 
@@ -149,23 +144,3 @@ def host_of(url: str | None) -> str | None:
         return None
     return h.lower() if h else None
 
-
-@F.pandas_udf(T.StringType())
-def canonicalize_udf(href: pd.Series, base: pd.Series) -> pd.Series:
-    return pd.Series(
-        [canonicalize(h, b) for h, b in zip(href, base)], dtype="object"
-    )
-
-
-@F.pandas_udf(T.StringType())
-def host_udf(url: pd.Series) -> pd.Series:
-    return pd.Series([host_of(u) for u in url], dtype="object")
-
-
-def host_col(url: Column) -> Column:
-    """JVM-side host extraction for already-canonical URLs (fast path).
-
-    ``parse_url(url, 'HOST')`` runs in codegen; the pandas UDF is only for
-    raw scraped hrefs where Go/Java URL-parsing disagreements matter.
-    """
-    return F.parse_url(url, F.lit("HOST"))

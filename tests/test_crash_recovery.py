@@ -96,10 +96,11 @@ def test_expire_commit_is_a_resumable_checkpoint(spark, tmp_path):
 def test_resume_with_mismatched_filter_kind_fails_fast(spark, tmp_path):
     """The seen_bloom blobs are kernel-specific: a bloom probe over cuckoo
     blobs yields SILENT false negatives (duplicate fetches/doc_ids), a
-    cuckoo decode of a bloom blob reads garbage geometry. Every commit
-    records filter_kind in the snapshot properties and attaching an engine
-    with a different kind (or with the filter off over a filtered workdir,
-    and vice versa) must raise at construction, not corrupt mid-crawl."""
+    cuckoo decode of a bloom blob reads garbage geometry. A url's shard is
+    pmod(url_hash, n_buckets), so another shard count misroutes probes the
+    same way. Every commit records filter_kind and n_buckets in the
+    snapshot properties and attaching an engine with a different value of
+    either must raise at construction, not corrupt mid-crawl."""
     import pytest
 
     cfg = CrawlConfig(seeds=[corpus.url(0)], max_depth=2, filter_kind="cuckoo")
@@ -108,12 +109,22 @@ def test_resume_with_mismatched_filter_kind_fails_fast(spark, tmp_path):
     )
     eng.run()
     assert eng.catalog.properties()["filter_kind"] == "cuckoo"
+    assert eng.catalog.properties()["n_buckets"] == cfg.n_buckets
 
-    for bad in (
-        CrawlConfig(seeds=[corpus.url(0)], max_depth=2, filter_kind="bloom"),
-        CrawlConfig(seeds=[corpus.url(0)], max_depth=2, use_bloom=False),
+    for bad, key in (
+        (
+            CrawlConfig(seeds=[corpus.url(0)], max_depth=2, filter_kind="bloom"),
+            "filter_kind",
+        ),
+        (
+            CrawlConfig(
+                seeds=[corpus.url(0)], max_depth=2, filter_kind="cuckoo",
+                n_buckets=16,
+            ),
+            "n_buckets",
+        ),
     ):
-        with pytest.raises(ValueError, match="filter_kind"):
+        with pytest.raises(ValueError, match=key):
             CrawlEngine(
                 spark, None, str(tmp_path), bad, fetcher=corpus.make_fetcher(N)
             )
@@ -147,3 +158,29 @@ def test_expiry_commit_preserves_filter_kind_property(spark, tmp_path):
     some_url = eng.seen().limit(1).collect()[0]["url"]
     assert eng.expire_urls([some_url]) == 1
     assert eng.catalog.properties()["filter_kind"] == "cuckoo"
+    assert eng.catalog.properties()["n_buckets"] == cfg.n_buckets
+
+
+def test_resume_with_smaller_bloom_shards_is_exact(spark, tmp_path):
+    """A Bloom blob carries its own geometry (8·len(blob) bits), so
+    resuming with another bits_per_bucket only sizes shards created from
+    then on: every stored shard is still probed at the bit count it was
+    written with, and no already-seen url is admitted twice."""
+    from pyspark.sql import functions as F
+
+    cfg = CrawlConfig(seeds=[corpus.url(0)], max_depth=4)
+    eng = CrawlEngine(
+        spark, None, str(tmp_path), cfg, fetcher=corpus.make_fetcher(N)
+    )
+    eng.run(max_rounds=2)
+    small = CrawlConfig(
+        seeds=[corpus.url(0)], max_depth=4, bits_per_bucket=1 << 14
+    )
+    resumed = CrawlEngine(
+        spark, None, str(tmp_path), small, fetcher=corpus.make_fetcher(N)
+    )
+    resumed.run()
+    seen = resumed.seen()
+    docs = resumed.documents()
+    assert seen.count() == seen.select(F.countDistinct("url")).first()[0]
+    assert docs.count() == docs.select(F.countDistinct("doc_id")).first()[0]

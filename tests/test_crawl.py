@@ -64,7 +64,7 @@ def assert_trace_equal(engine: CrawlEngine, oracle_result):
 
 def test_plain_bfs_matches_oracle(spark, tmp_path):
     seeds = [corpus.url(0)]
-    cfg = CrawlConfig(seeds=seeds, max_depth=4, use_bloom=True)
+    cfg = CrawlConfig(seeds=seeds, max_depth=4)
     engine = make_engine(spark, tmp_path, cfg)
     engine.run()
     assert_trace_equal(engine, crawl_oracle(N, seeds, 4))
@@ -349,9 +349,7 @@ def test_cuckoo_backend_trace_equal(spark, tmp_path):
     the Bloom backend does (the filter only prunes the probe side; a
     backend can only change performance, never output)."""
     seeds = [corpus.url(0)]
-    cfg = CrawlConfig(
-        seeds=seeds, max_depth=4, use_bloom=True, filter_kind="cuckoo"
-    )
+    cfg = CrawlConfig(seeds=seeds, max_depth=4, filter_kind="cuckoo")
     engine = make_engine(spark, tmp_path, cfg)
     engine.run()
     assert_trace_equal(engine, crawl_oracle(N, seeds, 4))
@@ -418,7 +416,7 @@ def test_expire_forget_organic_rediscovery(spark, tmp_path, kind):
     )
     blobs = engine._load("seen_bloom", schemas.SEEN_BLOOM)
     if kind == "cuckoo":
-        probe = seen_filter.probe_cuckoos(xdf, blobs)
+        probe = seen_filter.probe_blooms(xdf, blobs, kind="cuckoo")
         assert probe.collect()[0]["maybe_seen"] is False
 
     # refetch the parent: x is rediscovered as a new candidate
@@ -520,3 +518,28 @@ def test_round_jobs_all_carry_the_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert tracker.getJobIdsForGroup("crawl-round-under-test")
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("filter_kind", "none"),
+        ("n_buckets", 0),
+        ("n_buckets", -64),
+        ("salt", 0),
+        ("bits_per_bucket", 12),
+        ("bits_per_bucket", 0),
+        ("cuckoo_inner_buckets", 12000),
+        ("cuckoo_inner_buckets", 0),
+        ("fetch_tasks_per_core", 0),
+        ("fetch_target_urls_per_task", 0),
+        ("bloom_compact_every", -1),
+    ],
+)
+def test_config_rejects_invalid_values(field, value):
+    """Bad values fail at construction, not inside a Python worker in the
+    middle of a round (bits_per_bucket=12 and cuckoo_inner_buckets=12000
+    used to raise IndexError there); 0 still means "never compact"."""
+    with pytest.raises(ValueError, match=field):
+        CrawlConfig(seeds=[corpus.url(0)], **{field: value})
+    CrawlConfig(seeds=[corpus.url(0)], bloom_compact_every=0)

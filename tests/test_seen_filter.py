@@ -1,7 +1,10 @@
-"""Partitioned Bloom seen-filter: zero false negatives (no URL ever dropped
-that wasn't truly seen), sane false-positive rate, and equivalence of the
-Bloom-pruned path with the plain exact anti-join."""
+"""Partitioned Bloom/cuckoo seen-filter: zero false negatives (no URL ever
+dropped that wasn't truly seen), sane false-positive rate, equivalence of the
+fused probe+update pass with the split path, and byte-stable blobs."""
 
+import hashlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from goprowl_spark import seen_filter
@@ -20,7 +23,7 @@ def test_bloom_no_false_negatives(spark):
     seen = _urls(spark, 0, 5000)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
     blooms = seen_filter.update_blooms(empty, seen, bits_per_bucket=1 << 14)
-    probed = seen_filter.probe_blooms(seen, blooms, bits_per_bucket=1 << 14)
+    probed = seen_filter.probe_blooms(seen, blooms)
     # every truly-seen url must probe maybe_seen=True
     assert probed.where(~F.col("maybe_seen")).count() == 0
 
@@ -30,7 +33,7 @@ def test_bloom_fpr_reasonable(spark):
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
     blooms = seen_filter.update_blooms(empty, seen, bits_per_bucket=1 << 17)
     unseen = _urls(spark, 10_000, 20_000)
-    probed = seen_filter.probe_blooms(unseen, blooms, bits_per_bucket=1 << 17)
+    probed = seen_filter.probe_blooms(unseen, blooms)
     fp = probed.where(F.col("maybe_seen")).count()
     assert fp / 10_000 < 0.05  # ~78 hashes/bucket in 128Kib bits → tiny fpr
 
@@ -42,7 +45,7 @@ def test_incremental_update_preserves_members(spark):
     blooms = seen_filter.update_blooms(empty, a, bits_per_bucket=1 << 14)
     blooms = seen_filter.update_blooms(blooms, b, bits_per_bucket=1 << 14)
     both = a.unionByName(b)
-    probed = seen_filter.probe_blooms(both, blooms, bits_per_bucket=1 << 14)
+    probed = seen_filter.probe_blooms(both, blooms)
     assert probed.where(~F.col("maybe_seen")).count() == 0
     assert blooms.agg(F.sum("n_items")).collect()[0][0] == 2000
 
@@ -59,22 +62,23 @@ def test_bloom_delta_latest_generation_wins(spark):
     )
     # simulate the appended table: generation-1 rows PLUS generation-2 delta
     merged = g1.unionByName(delta2)
-    probed = seen_filter.probe_blooms(
-        _urls(spark, 0, 200), merged, bits_per_bucket=1 << 14
-    )
+    probed = seen_filter.probe_blooms(_urls(spark, 0, 200), merged)
     assert probed.where(~F.col("maybe_seen")).count() == 0
 
 
-def test_probe_and_update_matches_split_path(spark):
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_probe_and_update_matches_split_path(spark, kind):
     seen = _urls(spark, 0, 500)
     cands = _urls(spark, 400, 700)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    blooms = seen_filter.update_blooms(empty, seen, bits_per_bucket=1 << 14, gen=0)
+    blobs = seen_filter.update_blooms(
+        empty, seen, bits_per_bucket=1 << 14, gen=0, kind=kind
+    )
     fused = seen_filter.probe_and_update(
-        cands, blooms, bits_per_bucket=1 << 14, gen=1
+        cands, blobs, bits_per_bucket=1 << 14, gen=1, kind=kind
     )
     probed = fused.where(F.col("filter_blob").isNull())
-    split = seen_filter.probe_blooms(cands, blooms, bits_per_bucket=1 << 14)
+    split = seen_filter.probe_blooms(cands, blobs, kind=kind)
     got = {(r["url"], r["maybe_seen"]) for r in probed.collect()}
     want = {(r["url"], r["maybe_seen"]) for r in split.collect()}
     assert got == want
@@ -82,9 +86,7 @@ def test_probe_and_update_matches_split_path(spark):
     delta = fused.where(F.col("filter_blob").isNotNull()).select(
         F.col("__bucket").alias("bucket"), "filter_blob", "n_items", "gen"
     )
-    reprobe = seen_filter.probe_blooms(
-        cands, blooms.unionByName(delta), bits_per_bucket=1 << 14
-    )
+    reprobe = seen_filter.probe_blooms(cands, blobs.unionByName(delta), kind=kind)
     assert reprobe.where(~F.col("maybe_seen")).count() == 0
 
 
@@ -97,10 +99,10 @@ def test_update_blooms_full_merge_keeps_untouched_buckets(spark):
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
     b1 = seen_filter.update_blooms(empty, a, bits_per_bucket=1 << 14)
     b2 = seen_filter.update_blooms(b1, sparse, bits_per_bucket=1 << 14)
-    probed = seen_filter.probe_blooms(
-        _urls(spark, 0, 1005), b2, bits_per_bucket=1 << 14
-    )
+    probed = seen_filter.probe_blooms(_urls(spark, 0, 1005), b2)
     assert probed.where(~F.col("maybe_seen")).count() == 0
+
+
 
 
 # ---------------------------------------------------------------- cuckoo
@@ -111,16 +113,18 @@ def test_update_blooms_full_merge_keeps_untouched_buckets(spark):
 def test_cuckoo_no_false_negatives(spark):
     seen = _urls(spark, 0, 5000)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(empty, seen)
-    probed = seen_filter.probe_cuckoos(seen, cf)
+    cf = seen_filter.update_blooms(empty, seen, kind="cuckoo")
+    probed = seen_filter.probe_blooms(seen, cf, kind="cuckoo")
     assert probed.where(~F.col("maybe_seen")).count() == 0
 
 
 def test_cuckoo_fpr_small(spark):
     seen = _urls(spark, 0, 5000)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(empty, seen)
-    probed = seen_filter.probe_cuckoos(_urls(spark, 10_000, 20_000), cf)
+    cf = seen_filter.update_blooms(empty, seen, kind="cuckoo")
+    probed = seen_filter.probe_blooms(
+        _urls(spark, 10_000, 20_000), cf, kind="cuckoo"
+    )
     fp = probed.where(F.col("maybe_seen")).count()
     # 16-bit fingerprints at ~1% shard load: expected FPR ~ 2*4/65536
     assert fp / 10_000 < 0.01
@@ -130,14 +134,14 @@ def test_cuckoo_incremental_update_exact_count(spark):
     a = _urls(spark, 0, 1000)
     b = _urls(spark, 1000, 2000)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(empty, a)
-    cf = seen_filter.update_cuckoos(cf, b)
-    probed = seen_filter.probe_cuckoos(a.unionByName(b), cf)
+    cf = seen_filter.update_blooms(empty, a, kind="cuckoo")
+    cf = seen_filter.update_blooms(cf, b, kind="cuckoo")
+    probed = seen_filter.probe_blooms(a.unionByName(b), cf, kind="cuckoo")
     assert probed.where(~F.col("maybe_seen")).count() == 0
     # n_items is EXACT for the cuckoo table (per-entry storage), and a
     # member's re-insert is a no-op: inserting a again must not change it
     assert cf.agg(F.sum("n_items")).collect()[0][0] == 2000
-    cf2 = seen_filter.update_cuckoos(cf, a)
+    cf2 = seen_filter.update_blooms(cf, a, kind="cuckoo")
     assert cf2.agg(F.sum("n_items")).collect()[0][0] == 2000
 
 
@@ -145,24 +149,30 @@ def test_cuckoo_delete_unsees_and_allows_reinsert(spark):
     a = _urls(spark, 0, 1000)
     b = _urls(spark, 1000, 2000)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(empty, a.unionByName(b), gen=0)
+    cf = seen_filter.update_blooms(empty, a.unionByName(b), gen=0, kind="cuckoo")
     delta = seen_filter.delete_cuckoos(cf, b, gen=1)
     merged = cf.unionByName(delta)
     # kept members still present (zero false negatives survives deletion)
-    assert seen_filter.probe_cuckoos(a, merged).where(
+    assert seen_filter.probe_blooms(a, merged, kind="cuckoo").where(
         ~F.col("maybe_seen")
     ).count() == 0
     # deleted urls now probe unseen (rare fingerprint collisions with the
     # 1000 kept entries aside — at 16-bit fps expect ~0)
-    still = seen_filter.probe_cuckoos(b, merged).where(F.col("maybe_seen")).count()
+    still = (
+        seen_filter.probe_blooms(b, merged, kind="cuckoo")
+        .where(F.col("maybe_seen"))
+        .count()
+    )
     assert still / 1000 < 0.01
     # latest-gen n_items across shards: exactly the 1000 kept entries
     assert merged.groupBy("bucket").agg(
         F.max_by("n_items", "gen").alias("n")
     ).agg(F.sum("n")).collect()[0][0] == 1000
     # re-inserting the deleted range sees them again
-    cf3 = seen_filter.update_cuckoos(merged, b, gen=2, emit_untouched=False)
-    reprobe = seen_filter.probe_cuckoos(b, merged.unionByName(cf3))
+    cf3 = seen_filter.update_blooms(
+        merged, b, gen=2, emit_untouched=False, kind="cuckoo"
+    )
+    reprobe = seen_filter.probe_blooms(b, merged.unionByName(cf3), kind="cuckoo")
     assert reprobe.where(~F.col("maybe_seen")).count() == 0
 
 
@@ -176,8 +186,10 @@ def test_cuckoo_autogrow_under_overload(spark):
 
     seen = _urls(spark, 0, 5000)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(empty, seen, inner_buckets=16, slot_cap=4)
-    probed = seen_filter.probe_cuckoos(seen, cf)
+    cf = seen_filter.update_blooms(
+        empty, seen, kind="cuckoo", inner_buckets=16, slot_cap=4
+    )
+    probed = seen_filter.probe_blooms(seen, cf, kind="cuckoo")
     assert probed.where(~F.col("maybe_seen")).count() == 0
     hdrs = [
         np.frombuffer(r["filter_blob"], dtype=np.uint64, count=3)
@@ -198,10 +210,10 @@ def test_cuckoo_bulk_stash_beyond_max_cap(spark):
 
     seen = _urls(spark, 0, 5000)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(
-        empty, seen, n_buckets=4, inner_buckets=2, slot_cap=4
+    cf = seen_filter.update_blooms(
+        empty, seen, n_buckets=4, kind="cuckoo", inner_buckets=2, slot_cap=4
     )
-    probed = seen_filter.probe_cuckoos(seen, cf, n_buckets=4)
+    probed = seen_filter.probe_blooms(seen, cf, n_buckets=4, kind="cuckoo")
     assert probed.where(~F.col("maybe_seen")).count() == 0
     hdrs = [
         np.frombuffer(r["filter_blob"], dtype=np.uint64, count=3)
@@ -217,29 +229,65 @@ def test_cuckoo_blob_deterministic(spark):
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
     b1 = {
         r["bucket"]: bytes(r["filter_blob"])
-        for r in seen_filter.update_cuckoos(empty, seen).collect()
+        for r in seen_filter.update_blooms(empty, seen, kind="cuckoo").collect()
     }
     b2 = {
         r["bucket"]: bytes(r["filter_blob"])
-        for r in seen_filter.update_cuckoos(empty, seen).collect()
+        for r in seen_filter.update_blooms(empty, seen, kind="cuckoo").collect()
     }
     assert b1 == b2
 
 
-def test_probe_and_update_cuckoo_matches_split_path(spark):
-    seen = _urls(spark, 0, 500)
-    cands = _urls(spark, 400, 700)
+# ---------------------------------------------------------------- blob format
+# Blobs persist across resumes, so every path that writes one must keep
+# producing the same bytes. Digests of sorted (bucket, blob, n_items, gen)
+# rows over a fixed URL range; the cuckoo geometry (64 inner buckets x 4
+# slots, ~250 urls per shard) also takes the in-shard slot-cap growth.
+_GOLDEN = {
+    "bloom": {
+        "full": "fa9840eb61aa817243443ff5c66926706951a89f558c86fa0d767e5f7a4d583e",
+        "delta": "3d2f2dd2fd8d1f2d8a03af6dbc3c8a4a5d357f1734aec606c54b245ea7c3365b",
+        "fused": "3d2f2dd2fd8d1f2d8a03af6dbc3c8a4a5d357f1734aec606c54b245ea7c3365b",
+    },
+    "cuckoo": {
+        "full": "cf17f9c672092df588356cef220875aceffc8c0261128838ccc19775b581626b",
+        "delta": "8c448934ece2ab0f15678f2dab0ac13c3620d8b1d517fd92e0419185d00b53ab",
+        "fused": "8c448934ece2ab0f15678f2dab0ac13c3620d8b1d517fd92e0419185d00b53ab",
+        "delete": "3ef1ad908efca75eb968c33859c9ca371aa3438ac20470f67a07969591a8c273",
+    },
+}
+
+
+def _blob_digest(df):
+    h = hashlib.sha256()
+    rows = sorted((r[0], bytes(r[1]), r[2], r[3]) for r in df.collect())
+    for bucket, blob, n_items, gen in rows:
+        h.update(f"{bucket}:{n_items}:{gen}:".encode())
+        h.update(blob)
+    return h.hexdigest()
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_blob_format_golden(spark, kind):
+    geom = dict(n_buckets=8, bits_per_bucket=1 << 14, kind=kind,
+                inner_buckets=64, slot_cap=4)
     empty = spark.createDataFrame([], seen_filter.schemas.SEEN_BLOOM)
-    cf = seen_filter.update_cuckoos(empty, seen, gen=0)
-    fused = seen_filter.probe_and_update(cands, cf, gen=1, kind="cuckoo")
-    probed = fused.where(F.col("filter_blob").isNull())
-    split = seen_filter.probe_cuckoos(cands, cf)
-    got = {(r["url"], r["maybe_seen"]) for r in probed.collect()}
-    want = {(r["url"], r["maybe_seen"]) for r in split.collect()}
-    assert got == want
-    # emitted deltas contain every candidate: reprobe after append = all True
-    delta = fused.where(F.col("filter_blob").isNotNull()).select(
-        F.col("__bucket").alias("bucket"), "filter_blob", "n_items", "gen"
-    )
-    reprobe = seen_filter.probe_cuckoos(cands, cf.unionByName(delta))
-    assert reprobe.where(~F.col("maybe_seen")).count() == 0
+    seen, cands = _urls(spark, 0, 2000), _urls(spark, 1500, 3000)
+    full = seen_filter.update_blooms(empty, seen, gen=0, **geom)
+    got = {
+        "full": _blob_digest(full),
+        "delta": _blob_digest(
+            seen_filter.update_blooms(full, cands, gen=1, emit_untouched=False,
+                                      **geom)
+        ),
+        "fused": _blob_digest(
+            seen_filter.probe_and_update(cands, full, gen=1, **geom)
+            .where(F.col("filter_blob").isNotNull())
+            .select("__bucket", "filter_blob", "n_items", "gen")
+        ),
+    }
+    if kind == "cuckoo":
+        got["delete"] = _blob_digest(
+            seen_filter.delete_cuckoos(full, _urls(spark, 0, 500), 8, gen=2)
+        )
+    assert got == _GOLDEN[kind]
