@@ -334,167 +334,46 @@ def page_columns(df: DataFrame, i: Column, n: int) -> DataFrame:
     )
 
 
-def make_fetcher(n: int, fuse_parse: bool = True):
+def make_fetcher(n: int):
     """A per-batch synthetic fetcher: computes page content directly from
     the URL's page index — work strictly proportional to the fetch batch,
     like real HTTP (no corpus-table scan or join at all).
 
-    Shaped exactly like a production HTTP fetcher: ``mapInPandas`` over the
-    fetch-batch DataFrame, one Arrow batch at a time (an HTTP deployment
-    replaces the body with a pooled-session GET loop; schema, partitioning
-    and batch shape are identical). Page content comes from the same pure
-    Python functions the trace oracle uses, so fetcher/oracle parity is by
-    construction. URLs that don't round-trip to a valid page index
-    fetch-fail with status 0 (reference OnError path, colly.go:64-71).
-
-    With ``fuse_parse`` (the default) the page is parsed into its span
-    sequence in the SAME Python pass and the html string never crosses the
-    Arrow boundary at all — the fetch+parse wave pays ONE Python stage and
-    ships spans once, instead of shipping html out of the fetcher, back
-    into the parse UDF, and spans out again (measured: the 2× round trip
-    of page bytes was the crawl's largest scalable-but-slow term). Spans
-    come from the same ``parse.parse_spans`` the UDF uses, so both shapes
-    produce bit-identical documents; ``fuse_parse=False`` keeps the raw
-    (url, depth, status, html, fetch_latency_ms) HTTP shape.
+    Shaped exactly like the production HTTP fetcher
+    (:func:`goprowl_spark.fetchers.make_http_fetcher`): both are
+    :func:`goprowl_spark.parse.fetch_and_parse` over the fetch-batch
+    DataFrame and differ only in how one URL is fetched, so schema,
+    partitioning and batch shape are identical. Page content comes from
+    the same pure Python functions the trace oracle uses, so
+    fetcher/oracle parity is by construction. URLs that don't round-trip
+    to a valid page index fetch-fail with status 0 (reference OnError path,
+    colly.go:64-71).
     """
-    import pandas as pd
+    from goprowl_spark.parse import fetch_and_parse
 
-    from goprowl_spark import schemas
-    from goprowl_spark.parse import parse_spans
-
-    def gen_arrow(batches):
-        # Fused fetch+parse as an ARROW-native pass: the spans column is a
-        # list<struct> and pandas object-dtype list-of-dict rows pay a
-        # per-element inference/convert on the way back to the JVM —
-        # building the ListArray/StructArray directly from flat Python
-        # lists was measured ~2x cheaper on the serialization half of the
-        # fetch wave (guide §4.2: hand whole batches to vectorized native
-        # code; the values are bit-identical, only the writer changes).
-        import pyarrow as pa
-
-        span_struct = pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-        out_schema = pa.schema(
-            [
-                ("url", pa.string()),
-                ("depth", pa.int32()),
-                ("status", pa.int32()),
-                ("fetch_latency_ms", pa.int32()),
-                ("spans", pa.list_(span_struct)),
-            ]
-        )
+    def open_fetch():
         # canonical heads by host id: "https://hK.test" == url(i) up to
         # "/p/", so `head == heads[host_id(i)]` validates the URL without
         # re-building the whole canonical string per row
         heads = [f"https://h{k}.test" for k in range(N_HOSTS)]
-        for rb in batches:
-            urls = rb.column(0).to_pylist()
-            statuses, lats = [], []
-            kinds: list[str] = []
-            texts: list[str] = []
-            refs: list[str] = []
-            offs: list[int] = []
-            offsets = [0]
-            for u in urls:
-                i = None
-                head, sep, tail = u.rpartition("/p/")
-                if sep and tail.isdigit():
-                    cand = int(tail)
-                    # tail must round-trip (no leading zeros / unicode
-                    # digits) — together with the head check this equals
-                    # the old `url(cand) == u` without building the string
-                    if (
-                        0 <= cand < n
-                        and tail == str(cand)
-                        and head == heads[host_id(cand)]
-                    ):
-                        i = cand
-                if i is None:
-                    statuses.append(0)
-                    lats.append(None)
-                else:
+
+        def fetch_page(u: str):
+            head, sep, tail = u.rpartition("/p/")
+            # isdigit() alone admits "²", which int() rejects
+            if sep and tail.isascii() and tail.isdigit():
+                i = int(tail)
+                # tail must round-trip (no leading zeros) — together with
+                # the head check this equals `url(i) == u` without
+                # building the string
+                if 0 <= i < n and tail == str(i) and head == heads[host_id(i)]:
                     st = status(i)
-                    statuses.append(st)
-                    lats.append(latency_ms(i))
-                    if st == 200:
-                        for s in parse_spans(html(i, n), u):
-                            kinds.append(s["kind"])
-                            texts.append(s["text"])
-                            refs.append(s["media_ref"])
-                            offs.append(s["offset"])
-                offsets.append(len(kinds))
-            spans_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(kinds, pa.string()),
-                        pa.array(texts, pa.string()),
-                        pa.array(refs, pa.string()),
-                        pa.array(offs, pa.int32()),
-                    ],
-                    fields=list(span_struct),
-                ),
-            )
-            out = pa.RecordBatch.from_arrays(
-                [
-                    rb.column(0),
-                    rb.column(1),
-                    pa.array(statuses, pa.int32()),
-                    pa.array(lats, pa.int32()),
-                    spans_arr,
-                ],
-                schema=out_schema,
-            )
-            yield out
+                    return st, latency_ms(i), html(i, n) if st == 200 else None
+            return 0, None, None
 
-    def gen_raw(batches):
-        for pdf in batches:
-            statuses, htmls, lats = [], [], []
-            for u in pdf["url"]:
-                i = None
-                head, sep, tail = u.rpartition("/p/")
-                if sep and tail.isdigit():
-                    cand = int(tail)
-                    if 0 <= cand < n and url(cand) == u:
-                        i = cand
-                if i is None:
-                    statuses.append(0)
-                    htmls.append(None)
-                    lats.append(None)
-                else:
-                    statuses.append(status(i))
-                    htmls.append(html(i, n))
-                    lats.append(latency_ms(i))
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "depth": pdf["depth"],
-                    "status": pd.Series(statuses, dtype="int32"),
-                    "fetch_latency_ms": pd.array(lats, dtype="Int32"),
-                    "html": htmls,
-                }
-            )
-
-    span_t = schemas.DOCUMENTS["spans"].dataType.simpleString()
-    fused_schema = (
-        "url string, depth int, status int, fetch_latency_ms int, "
-        f"spans {span_t}"
-    )
-    raw_schema = (
-        "url string, depth int, status int, fetch_latency_ms int, html string"
-    )
+        return fetch_page
 
     def fetch(batch: DataFrame) -> DataFrame:
-        sel = batch.select("url", F.col("depth").cast("int").alias("depth"))
-        if fuse_parse:
-            return sel.mapInArrow(gen_arrow, schema=fused_schema)
-        return sel.mapInPandas(gen_raw, schema=raw_schema)
+        return fetch_and_parse(batch, open_fetch)
 
     return fetch
 

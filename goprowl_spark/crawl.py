@@ -8,8 +8,8 @@ becomes an iterative round loop:
     frontier snapshot
       → pop batch        (per-host politeness top-k, host-salted, W1/W2)
       → robots filter    (broadcast join, J2/P5)
-      → fetch            (join vs page corpus — HTTP in production, S1)
-      → parse → spans    (Arrow pandas UDF, S4/U5)
+      → fetch → spans    (fetcher: one Arrow pass per batch, HTTP in
+                          production, S1/S4; or join vs page corpus + parse UDF)
       → explode links    (S3) → candidates at depth+1 (P2)
       → seen-filter probe + exact anti-join vs seen (P4/J1/U7)
       → commit snapshot: documents ∪ new, seen ∪ new, frontier rewritten,
@@ -22,7 +22,7 @@ reference trace exactly and resumes from any snapshot (north_rule).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,10 +30,36 @@ from pyspark.storagelevel import StorageLevel
 
 from goprowl_spark import schemas, seen_filter
 from goprowl_spark import tables as tables_mod
-from goprowl_spark.parse import extract_links, with_document_columns
+from goprowl_spark.parse import (
+    extract_links,
+    parse_spans_udf,
+    with_document_columns,
+)
 from goprowl_spark.politeness import apply_robots, pop_batch
 from goprowl_spark.session import local_df
 from goprowl_spark.tables import SnapshotCatalog
+
+# Bloom commits are per-round DELTAS (only touched buckets, latest
+# generation wins on read); every this-many rounds a compaction rewrites
+# the full table to bound read amplification.
+BLOOM_COMPACT_EVERY = 8
+# Fetch batches at or below this many URLs broadcast into the corpus join
+# (so page payloads never shuffle); larger batches fall back to a shuffle
+# join — at 10^10 scale use politeness budgets to bound batches. The same
+# limit bounds the exact dedup's maybe-seen broadcast and the budgeted
+# frontier's popped-url broadcast.
+BROADCAST_POP_LIMIT = 2_000_000
+# Fetch-stage tasks per core (fetcher path): more than one smooths
+# stragglers in the Python fetch+parse map stage — with exactly one task
+# per core the slowest task gates the whole wave. The repartition shuffles
+# only (url, depth) rows, negligible next to the per-URL fetch/parse work.
+FETCH_TASKS_PER_CORE = 3
+# ...but task count never exceeds what the batch can fill: small early
+# rounds are BARRIER-bound, not straggler-bound (measured: a 75k-URL round 1
+# ran its fetch wave at 3.5x worse per-URL throughput than the 475k round 3
+# — pure per-task dispatch overhead), so tasks are capped at ~one per this
+# many URLs, floored at one task per core.
+FETCH_TARGET_URLS_PER_TASK = 10_000
 
 
 @dataclass
@@ -60,32 +86,13 @@ class CrawlConfig:
     # throughput tuning, never correctness.
     bits_per_bucket: int = seen_filter.DEFAULT_BITS_PER_BUCKET
     cuckoo_inner_buckets: int = seen_filter.CUCKOO_INNER_BUCKETS
-    # Bloom commits are per-round DELTAS (only touched buckets, latest
-    # generation wins on read); every this-many rounds a compaction
-    # rewrites the full table to bound read amplification (0 = never)
-    bloom_compact_every: int = 8
     salt: int = 16
-    # fetch batches at or below this many URLs broadcast into the corpus
-    # join (so page payloads never shuffle); larger batches fall back to a
-    # shuffle join — at 10^10 scale use politeness budgets to bound batches
-    broadcast_pop_limit: int = 2_000_000
-    # fetch-stage tasks per core (fetcher path): >1 smooths stragglers in
-    # the Python fetch+parse map stage — with exactly one task per core
-    # the slowest task gates the whole wave. The repartition shuffles only
-    # (url, depth) rows, negligible next to the per-URL fetch/parse work.
-    fetch_tasks_per_core: int = 3
     # frontier priority at discovery time: a Column expression over
     # (url, host, depth) Columns — e.g. a PageRank/host-reputation score —
     # consumed by the budgeted pop's (priority desc, depth, url) order
     # (W2). None = the BFS default, -depth. Priorities are DATA, so crawl
     # ordering stays deterministic and trace-testable under any function.
     priority_fn: "Callable[[Column, Column, Column], Column] | None" = None
-    # ...but task count never exceeds what the batch can fill: small early
-    # rounds are BARRIER-bound, not straggler-bound (measured: a 75k-URL
-    # round 1 ran its fetch wave at 3.5x worse per-URL throughput than the
-    # 475k round 3 — pure per-task dispatch overhead), so tasks are capped
-    # at ~one per this many URLs, floored at one task per core.
-    fetch_target_urls_per_task: int = 10_000
     # Crawl-delay → budget derivation: when set, a robots_rules table that
     # carries a crawl_delay column (parse_robots_txt output) yields per-host
     # budgets of floor(round_seconds / crawl_delay) fetches per round — the
@@ -98,7 +105,6 @@ class CrawlConfig:
     # doc_ids never repeat, so appends need no merge. Off by default: the
     # pure-crawl benchmark shouldn't pay for a feature the query side owns.
     maintain_index: bool = False
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self):
         """Reject values that would otherwise fail inside a Python worker
@@ -113,11 +119,6 @@ class CrawlConfig:
              "bits_per_bucket must be a positive multiple of 8"),
             (nb > 0 and nb & (nb - 1) == 0,
              "cuckoo_inner_buckets must be a power of two"),
-            (self.fetch_tasks_per_core >= 1, "fetch_tasks_per_core must be >= 1"),
-            (self.fetch_target_urls_per_task >= 1,
-             "fetch_target_urls_per_task must be >= 1"),
-            (self.bloom_compact_every >= 0,
-             "bloom_compact_every must be >= 0 (0 = never compact)"),
         ]
         for ok, msg in checks:
             if not ok:
@@ -415,11 +416,16 @@ class CrawlEngine:
             tables["seen_bloom"] = untouched.unionByName(rebuilt)
 
         if cfg.maintain_index:
-            from goprowl_spark import ranking
-
-            docs_new = self.spark.read.schema(schemas.DOCUMENTS).parquet(docs_path)
-            tables["postings"] = ranking.build_postings(docs_new)
-            tables["doc_stats"] = ranking.build_doc_stats(docs_new)
+            # drop the expired documents' index rows; the survivors are
+            # already tokenized (the rule DocumentStore._index_tables uses)
+            expired_ids = urls_df.withColumnRenamed("url", "doc_id")
+            for name, schema in (
+                ("postings", schemas.POSTINGS),
+                ("doc_stats", schemas.DOC_STATS),
+            ):
+                tables[name] = self._load(name, schema).join(
+                    expired_ids, "doc_id", "left_anti"
+                )
 
         n_frontier = int(props.get("frontier_count", 0))
         frontier_rest = frontier.join(urls_df, "url", "left_anti")
@@ -465,9 +471,10 @@ class CrawlEngine:
         """One crawl round in six job waves, each a table write with
         Observation-attached counters (no standalone count jobs):
 
-          1. documents  — fetch → parse → append write (the HTML flows
-                          straight through the Arrow parse UDF into parquet;
-                          nothing page-sized is ever cached or shuffled)
+          1. documents  — fetch → parse → append write (pages are parsed
+                          where they are fetched and only spans reach
+                          parquet; nothing page-sized is ever cached or
+                          shuffled)
           2. round delta — links ← stored docs (columnar spans read) →
                           candidates → Bloom+anti-join dedup → ONE write
                           carrying the seen∪frontier superset schema; the
@@ -522,24 +529,22 @@ class CrawlEngine:
         ).persist(StorageLevel.MEMORY_AND_DISK)
         batch = popped.select("url", "depth")
 
-        # S1: fetch — mapInPandas fetcher (HTTP shape), or join against a
-        # corpus table (web-archive shape). The batch side is bounded
-        # (politeness budgets) so it broadcasts; page payloads never shuffle.
+        # S1+S4: fetch and parse into span sequences — a fetcher (HTTP
+        # shape, one mapInArrow pass), or a join against a corpus table
+        # (web-archive shape) whose status-200 rows go through the parse
+        # UDF. The batch side is bounded (politeness budgets) so it
+        # broadcasts; page payloads never shuffle.
         if self.fetcher is not None:
-            # fetch_tasks_per_core=1 means "keep the pop's natural
-            # partitioning" — no repartition shuffle at all
-            if cfg.fetch_tasks_per_core > 1:
-                par = self.spark.sparkContext.defaultParallelism
-                # n_frontier is the arithmetic pop-size estimate (exact for
-                # unbudgeted BFS; an upper bound under budgets)
-                want = min(
-                    par * cfg.fetch_tasks_per_core,
-                    max(par, n_frontier // cfg.fetch_target_urls_per_task + 1),
-                )
-                batch = batch.repartition(want)
-            fetched = self.fetcher(batch)
+            par = self.spark.sparkContext.defaultParallelism
+            # n_frontier is the arithmetic pop-size estimate (exact for
+            # unbudgeted BFS; an upper bound under budgets)
+            want = min(
+                par * FETCH_TASKS_PER_CORE,
+                max(par, n_frontier // FETCH_TARGET_URLS_PER_TASK + 1),
+            )
+            fetched = self.fetcher(batch.repartition(want))
         else:
-            bcast_ok = n_frontier <= cfg.broadcast_pop_limit
+            bcast_ok = n_frontier <= BROADCAST_POP_LIMIT
             hit = self.corpus.select(
                 "url", "status", "html", "fetch_latency_ms"
             ).join(F.broadcast(batch) if bcast_ok else batch, on="url", how="inner")
@@ -551,11 +556,19 @@ class CrawlEngine:
                 "url",
                 "depth",
                 F.lit(0).alias("status"),
-                F.lit(None).cast("string").alias("html"),
                 F.lit(None).cast("int").alias("fetch_latency_ms"),
+                F.lit(None)
+                .cast(schemas.DOCUMENTS["spans"].dataType)
+                .alias("spans"),
             )
             fetched = hit.select(
-                "url", "depth", "status", "html", "fetch_latency_ms"
+                "url",
+                "depth",
+                "status",
+                "fetch_latency_ms",
+                parse_spans_udf(
+                    F.when(F.col("status") == 200, F.col("html")), F.col("url")
+                ).alias("spans"),
             ).unionByName(missing)
 
         obs_fetch = Observation(f"fetch_r{r}_{sid}")
@@ -568,7 +581,7 @@ class CrawlEngine:
             F.percentile_approx("fetch_latency_ms", 0.99).alias("p99"),
         )
 
-        # S4/U5: parse into span sequences; wave 1 writes documents.
+        # S4/U5: derive the document columns; wave 1 writes documents.
         # (Measured: caching the parsed rows to skip the parquet read-back
         # LOSES at high core counts — the cache stores every column while
         # the read-back decodes only the spans column. Write, then re-read
@@ -632,9 +645,7 @@ class CrawlEngine:
         # the round pays a single candidates shuffle-by-bucket and a single
         # Python/Arrow pass for both the membership test and the blob
         # delta, instead of the two passes the split design cost.
-        compact = (
-            cfg.bloom_compact_every > 0 and r % cfg.bloom_compact_every == 0
-        )
+        compact = r % BLOOM_COMPACT_EVERY == 0
         # host is a pure function of url (parse_url above) and the
         # cogroup doesn't consult it — dropping it here keeps the
         # host STRING out of the bucket shuffle AND the Python/Arrow
@@ -686,7 +697,7 @@ class CrawlEngine:
         if n_maybe == 0:
             # no Bloom hits at all: nothing to check exactly
             unseen = fresh
-        elif n_maybe <= cfg.broadcast_pop_limit:
+        elif n_maybe <= BROADCAST_POP_LIMIT:
             # Double-broadcast exact check: the old
             # maybe-anti-join-seen shuffled the ENTIRE seen table
             # (growing every round) plus the maybe side. Instead:
@@ -718,7 +729,7 @@ class CrawlEngine:
             )
         else:
             # maybe-side too big to broadcast (possible only when a
-            # round re-encounters >broadcast_pop_limit known URLs):
+            # round re-encounters >BROADCAST_POP_LIMIT known URLs):
             # fall back to the shuffle anti-join
             unseen = fresh.unionByName(
                 maybe.join(seen, on=["url_hash", "url"], how="left_anti")
@@ -759,7 +770,7 @@ class CrawlEngine:
             # popped is budget×hosts rows — broadcast only when bounded
             # (millions of hosts would OOM the driver otherwise).
             popped_urls = popped.select("url")
-            if n_popped <= cfg.broadcast_pop_limit:
+            if n_popped <= BROADCAST_POP_LIMIT:
                 popped_urls = F.broadcast(popped_urls)
             remaining = frontier.join(popped_urls, "url", "left_anti")
             new_frontier = remaining.unionByName(

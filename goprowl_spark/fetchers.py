@@ -1,9 +1,10 @@
 """Production HTTP fetcher — S1's real-network shape.
 
 The synthetic :func:`goprowl_spark.corpus.make_fetcher` computes pages from
-the URL; this module fetches them over HTTP with the exact same mapInPandas
-signature, so ``CrawlEngine`` accepts either interchangeably. Reference
-behaviors mirrored:
+the URL; this module fetches them over HTTP. Both are
+:func:`goprowl_spark.parse.fetch_and_parse` with a different per-URL fetch,
+so they share one output schema and ``CrawlEngine`` accepts either
+interchangeably. Reference behaviors mirrored:
 
 * 30 s request timeout        (colly config, search/crawlers/config.go:67-74)
 * fetch errors → status 0, no expansion (OnError path, colly.go:64-71)
@@ -11,9 +12,9 @@ behaviors mirrored:
   connection reuse amortizes TCP/TLS setup across a task's whole batch
 
 Scale shape: identical to the synthetic fetcher — work strictly ∝ the fetch
-batch, page bytes never cross the Arrow boundary when ``fuse_parse`` (the
-spans are produced in the same Python pass). Politeness pacing is the
-POP's job (per-host budgets, Crawl-delay), not the fetcher's.
+batch, and page bytes never cross the Arrow boundary (the spans are
+produced in the same Python pass). Politeness pacing is the POP's job
+(per-host budgets, Crawl-delay), not the fetcher's.
 
 Network access is environment-dependent; tests exercise this against an
 in-process loopback HTTP server only.
@@ -28,24 +29,20 @@ from pyspark.sql import DataFrame
 
 def make_http_fetcher(
     timeout_s: float = 30.0,
-    fuse_parse: bool = True,
     max_bytes: int = 1 << 20,
     user_agent: str = "goprowl-spark",
     backend: str = "auto",
 ):
     """Build a fetcher callable: ``fetch(batch(url, depth)) -> DataFrame``
-    with the same output schema as ``corpus.make_fetcher`` (fused:
-    ``url, depth, status, fetch_latency_ms, spans``; raw: ``..., html``).
+    of ``url, depth, status, fetch_latency_ms, spans`` — the output of
+    ``corpus.make_fetcher``.
 
     ``backend``: ``auto`` uses requests when importable, else the stdlib
     urllib fallback; ``stdlib`` forces the fallback (both paths must record
     identical statuses — pinned by the loopback test)."""
-    import pandas as pd
+    from goprowl_spark.parse import fetch_and_parse
 
-    from goprowl_spark import schemas
-    from goprowl_spark.parse import parse_spans
-
-    def gen(batches):
+    def open_fetch():
         try:
             if backend == "stdlib":
                 raise ImportError("stdlib backend forced")
@@ -90,49 +87,17 @@ def make_http_fetcher(
 
             errors = (urllib.error.URLError, OSError, ValueError)
 
-        for pdf in batches:
-            statuses, htmls, lats = [], [], []
-            for u in pdf["url"]:
-                t0 = time.time()
-                try:
-                    status, html = get(u)
-                    if status != 200:
-                        html = None
-                except errors:
-                    status, html = 0, None
-                statuses.append(status)
-                htmls.append(html)
-                lats.append(int((time.time() - t0) * 1000))
-            cols = {
-                "url": pdf["url"],
-                "depth": pdf["depth"],
-                "status": pd.Series(statuses, dtype="int32"),
-                "fetch_latency_ms": pd.array(lats, dtype="Int32"),
-            }
-            if fuse_parse:
-                cols["spans"] = pd.Series(
-                    [
-                        parse_spans(h, u) if s == 200 else []
-                        for u, s, h in zip(pdf["url"], statuses, htmls)
-                    ],
-                    dtype="object",
-                )
-            else:
-                cols["html"] = htmls
-            yield pd.DataFrame(cols)
+        def fetch_page(u: str):
+            t0 = time.time()
+            try:
+                status, html = get(u)
+            except errors:
+                status, html = 0, None
+            return status, int((time.time() - t0) * 1000), html
 
-    span_t = schemas.DOCUMENTS["spans"].dataType.simpleString()
-    fused_schema = (
-        "url string, depth int, status int, fetch_latency_ms int, "
-        f"spans {span_t}"
-    )
-    raw_schema = (
-        "url string, depth int, status int, fetch_latency_ms int, html string"
-    )
+        return fetch_page
 
     def fetch(batch: DataFrame) -> DataFrame:
-        return batch.select("url", "depth").mapInPandas(
-            gen, schema=fused_schema if fuse_parse else raw_schema
-        )
+        return fetch_and_parse(batch, open_fetch)
 
     return fetch

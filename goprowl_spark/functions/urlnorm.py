@@ -8,8 +8,10 @@ explicit: resolve relative hrefs against the page URL, lowercase
 scheme/host, strip fragments, strip default ports, normalize empty paths,
 reject non-http(s) and unparseable URLs (→ null, filtered upstream).
 
-``canonicalize`` runs inside the parse stage's Arrow UDF (one Python batch
+``canonicalize`` runs inside the parse stage's Arrow pass (one Python batch
 per Arrow chunk, never per-row Spark UDFs — BASELINE.json:input_hint).
+Hosts are extracted JVM-side with ``parse_url`` wherever the crawl needs
+them.
 """
 
 from __future__ import annotations
@@ -133,14 +135,4 @@ def canonicalize(href: str | None, base: str | None = None) -> str | None:
     if path.endswith("/") and norm_path != "/":
         norm_path += "/"
     return urlunsplit((scheme, netloc, norm_path, parts.query, ""))
-
-
-def host_of(url: str | None) -> str | None:
-    if not url:
-        return None
-    try:
-        h = urlsplit(url).hostname
-    except ValueError:
-        return None
-    return h.lower() if h else None
 

@@ -10,9 +10,10 @@ sequence: one ``title`` span, a ``text`` span per <p>, a ``link`` span per
 <a href> (anchor text + canonical absolute target), a ``media`` span per
 <img>/<video>/<audio>/<source> src, offsets in document order.
 
-Implementation: stdlib html.parser inside an Arrow-batched pandas UDF
-(selectolax/lxml are not in the sandbox image; the UDF boundary and batch
-shape are identical if a faster parser is dropped in).
+Implementation: stdlib html.parser (selectolax/lxml are not in the sandbox
+image; the batch shape is identical if a faster parser is dropped in). The
+crawl parses inside the fetch stage (:func:`fetch_and_parse`, one Arrow
+pass per batch); :func:`parse_spans_udf` parses an html column of a table.
 """
 
 from __future__ import annotations
@@ -22,8 +23,10 @@ from html import unescape as _unescape
 from html.parser import HTMLParser
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from goprowl_spark import schemas
 from goprowl_spark.functions.urlnorm import canonicalize
@@ -212,9 +215,94 @@ def parse_spans_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     )
 
 
+_SPAN_ARROW = pa.struct(
+    [
+        ("kind", pa.string()),
+        ("text", pa.string()),
+        ("media_ref", pa.string()),
+        ("offset", pa.int32()),
+    ]
+)
+# The one fetch output shape: every fetcher yields these columns.
+_FETCHED_ARROW = pa.schema(
+    [
+        ("url", pa.string()),
+        ("depth", pa.int32()),
+        ("status", pa.int32()),
+        ("fetch_latency_ms", pa.int32()),
+        ("spans", pa.list_(_SPAN_ARROW)),
+    ]
+)
+
+
+def fetch_and_parse(batch: DataFrame, open_fetch) -> DataFrame:
+    """``batch(url, depth)`` → ``(url, depth, status, fetch_latency_ms,
+    spans)`` in ONE ``mapInArrow`` pass: fetch each page, parse it into its
+    span sequence in the same Python pass, so page bytes never cross the
+    Arrow boundary (the fetch+parse wave pays one Python stage and ships
+    spans once).
+
+    ``open_fetch()`` runs once per task (a pooled HTTP session lives that
+    long) and returns ``fetch(url) -> (status, latency_ms, html)``; only a
+    status-200 page is parsed, every other row gets empty spans.
+
+    The spans column is built as a ListArray/StructArray straight from flat
+    Python lists: pandas object-dtype list-of-dict rows pay a per-element
+    inference/convert on the way back to the JVM, measured ~2x costlier on
+    the serialization half of the fetch wave (guide §4.2: hand whole
+    batches to vectorized native code)."""
+
+    def gen(batches):
+        fetch = open_fetch()
+        for rb in batches:
+            statuses, lats = [], []
+            kinds: list[str] = []
+            texts: list[str] = []
+            refs: list[str] = []
+            offs: list[int] = []
+            offsets = [0]
+            for u in rb.column(0).to_pylist():
+                st, lat, page = fetch(u)
+                statuses.append(st)
+                lats.append(lat)
+                if st == 200:
+                    for s in parse_spans(page, u):
+                        kinds.append(s["kind"])
+                        texts.append(s["text"])
+                        refs.append(s["media_ref"])
+                        offs.append(s["offset"])
+                offsets.append(len(kinds))
+            spans = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [
+                        pa.array(kinds, pa.string()),
+                        pa.array(texts, pa.string()),
+                        pa.array(refs, pa.string()),
+                        pa.array(offs, pa.int32()),
+                    ],
+                    fields=list(_SPAN_ARROW),
+                ),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0),
+                    rb.column(1),
+                    pa.array(statuses, pa.int32()),
+                    pa.array(lats, pa.int32()),
+                    spans,
+                ],
+                schema=_FETCHED_ARROW,
+            )
+
+    return batch.select(
+        "url", F.col("depth").cast("int").alias("depth")
+    ).mapInArrow(gen, schema=from_arrow_schema(_FETCHED_ARROW))
+
+
 def with_document_columns(fetched: DataFrame, round_no: int) -> DataFrame:
-    """fetched(url, host, status, html, fetch_latency_ms, depth) →
-    documents rows for successfully fetched pages.
+    """fetched(url, depth, status, fetch_latency_ms, spans) → documents
+    rows for successfully fetched pages.
 
     Derived columns (all JVM-side over the parsed spans):
       title        — first title-span text (CrawlResult.Title, colly.go:181)
@@ -235,14 +323,8 @@ def with_document_columns(fetched: DataFrame, round_no: int) -> DataFrame:
         F.filter(spans, lambda s: s["kind"] == F.lit("link")),
         lambda s: s["media_ref"],
     )
-    ok = fetched.where(F.col("status") == 200)
-    if "spans" not in fetched.columns:
-        # raw HTTP shape: parse here (fused fetchers ship spans directly
-        # and the page bytes never cross the Arrow boundary — see
-        # corpus.make_fetcher(fuse_parse=True))
-        ok = ok.withColumn("spans", parse_spans_udf(F.col("html"), F.col("url")))
     return (
-        ok
+        fetched.where(F.col("status") == 200)
         .select(
             F.col("url").alias("doc_id"),
             "spans",
@@ -271,7 +353,7 @@ def with_document_columns(fetched: DataFrame, round_no: int) -> DataFrame:
 def extract_links(documents: DataFrame) -> DataFrame:
     """documents → (src_url, src_depth?, link) one row per link span, in
     document order (reference: OnHTML("a[href]") colly.go:84-99). Links are
-    already canonical absolute URLs from the parse UDF. ``src_depth`` is
+    already canonical absolute URLs from ``parse_spans``. ``src_depth`` is
     included when the table carries ``fetched_depth`` (map-only; columnar
     scan prunes to spans + fetched_depth)."""
     cols = [F.col("doc_id").alias("src_url")]

@@ -71,7 +71,7 @@ SEEN = T.StructType(
 # Per-bucket Bloom filter blobs over seen url_hash values. Commits are
 # DELTAS: a round appends only the buckets it touched, stamped with a
 # generation (= round); readers resolve latest-generation-wins per bucket.
-# Periodic compaction (CrawlConfig.bloom_compact_every) rewrites the full
+# Periodic compaction (crawl.BLOOM_COMPACT_EVERY) rewrites the full
 # table to bound read amplification.
 SEEN_BLOOM = T.StructType(
     [

@@ -177,19 +177,41 @@ def test_crawl_maintain_index_ranked_search(spark, tmp_path):
         fetcher=corpus.make_fetcher(n),
     )
     eng.run()
-    search = GoProwlSearchEngine(spark, str(tmp_path))
-    # the per-round index appends must equal a from-scratch rebuild
-    maintained = {
-        (r["term"], r["doc_id"], r["tf"])
-        for r in search.store.postings().collect()
-    }
-    rebuilt = {
-        (r["term"], r["doc_id"], r["tf"])
-        for r in ranking.build_postings(eng.documents()).collect()
-    }
-    assert maintained == rebuilt and maintained
+
+    def assert_index_matches_documents():
+        # the maintained index must equal a from-scratch rebuild
+        search = GoProwlSearchEngine(spark, str(tmp_path))
+        maintained = {
+            (r["term"], r["doc_id"], r["tf"])
+            for r in search.store.postings().collect()
+        }
+        rebuilt = {
+            (r["term"], r["doc_id"], r["tf"])
+            for r in ranking.build_postings(eng.documents()).collect()
+        }
+        assert maintained == rebuilt and maintained
+        stats = {tuple(r) for r in search.store.doc_stats().collect()}
+        stats_rebuilt = {
+            tuple(r) for r in ranking.build_doc_stats(eng.documents()).collect()
+        }
+        assert stats == stats_rebuilt
+        return search
+
+    search = assert_index_matches_documents()
     top = search.search_ranked("alpha", scorer="bm25", k=5).collect()
     assert top and all(r["score"] > 0 for r in top)
+
+    # expiry keeps the maintained index in step with documents
+    docs = sorted(eng.documents().select("doc_id", "title").collect())
+    (forget, forget_title), (refetch, refetch_title) = docs[0], docs[1]
+    query = f"{forget_title} {refetch_title}"
+    hits = {r["doc_id"] for r in search.search_ranked(query, k=n).collect()}
+    assert {forget, refetch} <= hits
+    assert eng.expire_urls([forget]) == 1
+    assert eng.expire_urls([refetch], reenqueue=True) == 1
+    search = assert_index_matches_documents()
+    hits = {r["doc_id"] for r in search.search_ranked(query, k=n).collect()}
+    assert hits and not hits & {forget, refetch}
 
 
 def test_parse_robots_txt_groups(spark):
@@ -531,15 +553,11 @@ def test_round_jobs_all_carry_the_callers_job_group(spark, tmp_path):
         ("bits_per_bucket", 0),
         ("cuckoo_inner_buckets", 12000),
         ("cuckoo_inner_buckets", 0),
-        ("fetch_tasks_per_core", 0),
-        ("fetch_target_urls_per_task", 0),
-        ("bloom_compact_every", -1),
     ],
 )
 def test_config_rejects_invalid_values(field, value):
     """Bad values fail at construction, not inside a Python worker in the
     middle of a round (bits_per_bucket=12 and cuckoo_inner_buckets=12000
-    used to raise IndexError there); 0 still means "never compact"."""
+    used to raise IndexError there)."""
     with pytest.raises(ValueError, match=field):
         CrawlConfig(seeds=[corpus.url(0)], **{field: value})
-    CrawlConfig(seeds=[corpus.url(0)], bloom_compact_every=0)

@@ -3,6 +3,7 @@ same crawl as the corpus-table join path."""
 
 from goprowl_spark import corpus
 from goprowl_spark.crawl import CrawlConfig, CrawlEngine
+from goprowl_spark.parse import parse_spans
 
 N = 300
 
@@ -28,14 +29,21 @@ def test_fetcher_crawl_equals_join_crawl(spark, tmp_path):
 
 
 def test_fetcher_invalid_urls_fail_fetch(spark):
-    fetch = corpus.make_fetcher(N, fuse_parse=False)
+    """The fetcher's URL check (host head plus round-tripped index tail)
+    admits exactly the canonical page URLs; every other URL fetch-fails
+    with status 0 and empty spans."""
+    fetch = corpus.make_fetcher(N)
+    head = corpus.url(5)[: -len("/p/5")]
+    invalid = [
+        "https://h0.test/p/99999",      # out of range
+        "https://other.test/nope",      # unparseable index
+        "https://h5.test/p/5",          # wrong host for i=5
+        head + "/p/05",                 # leading zero
+        "HTTPS" + corpus.url(5)[5:],    # uppercase scheme
+        head + "/p/\u00b2",             # a digit int() rejects
+    ]
     batch = spark.createDataFrame(
-        [
-            (corpus.url(5), 1),                     # valid
-            ("https://h0.test/p/99999", 1),          # out of range
-            ("https://other.test/nope", 1),          # unparseable index
-            ("https://h5.test/p/5", 1),              # wrong host for i=5
-        ],
+        [(corpus.url(5), 1)] + [(u, 1) for u in invalid],
         "url string, depth int",
     )
     rows = {r["url"]: r for r in fetch(batch).collect()}
@@ -43,7 +51,11 @@ def test_fetcher_invalid_urls_fail_fetch(spark):
     assert rows["https://h0.test/p/99999"]["status"] == 0
     assert rows["https://other.test/nope"]["status"] == 0
     assert rows["https://h5.test/p/5"]["status"] == 0
-    assert rows[corpus.url(5)]["html"] == corpus.html(5, N)
+    got = [s.asDict() for s in rows[corpus.url(5)]["spans"]]
+    assert got and got == parse_spans(corpus.html(5, N), corpus.url(5))
+    for u in invalid:
+        assert rows[u]["status"] == 0, u
+        assert list(rows[u]["spans"]) == [], u
 
 
 def test_http_fetcher_loopback(spark):

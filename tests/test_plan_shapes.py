@@ -66,3 +66,19 @@ def test_column_pruning_reaches_scan(spark):
         .select("doc_id", "lang")
     )
     assert "ReadSchema: struct<doc_id:bigint,lang:string>" in plan_of(df)
+
+
+def test_fetch_parse_is_one_python_stage(spark):
+    """Fetch and parse run in ONE mapInArrow pass: page bytes never cross
+    the Arrow boundary, and no second Python stage parses them."""
+    from goprowl_spark import corpus
+    from goprowl_spark.parse import with_document_columns
+
+    batch = spark.createDataFrame(
+        [(corpus.url(i), 1) for i in range(8)], "url string, depth int"
+    )
+    plan = plan_of(with_document_columns(corpus.make_fetcher(300)(batch), 1))
+    tree = plan.split("\n\n(")[0]
+    assert tree.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "MapInPandas" not in plan, plan

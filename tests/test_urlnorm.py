@@ -3,7 +3,7 @@ colly.go:86 + url.Parse validity colly.go:164-171)."""
 
 import pytest
 
-from goprowl_spark.functions.urlnorm import canonicalize, host_of
+from goprowl_spark.functions.urlnorm import canonicalize
 
 BASE = "https://h3.test/p/42"
 
@@ -35,12 +35,6 @@ def test_canonicalize(href, expected):
 def test_canonicalize_no_host_without_base():
     assert canonicalize("https://", None) is None
     assert canonicalize("/p/1", None) is None
-
-
-def test_host_of():
-    assert host_of("https://H1.Test:8080/p/1") == "h1.test"
-    assert host_of("not a url") is None
-    assert host_of(None) is None
 
 
 def _canonicalize_slow(href, base=None):
