@@ -160,10 +160,12 @@ class CrawlEngine:
         # doc_ids); a cuckoo decode of a bloom blob reads garbage geometry.
         # A url's shard is pmod(url_hash, n_buckets), so a different shard
         # count probes most urls against the wrong shard — the same silent
-        # false negatives. Every commit records both in the snapshot
-        # properties; attaching an engine that differs must fail HERE, not
-        # mid-crawl. (A workdir written before a property was recorded is
-        # not checked for it.)
+        # false negatives. Index upkeep switched on mid-crawl would index
+        # only the later rounds' documents, and the engine would serve that
+        # partial index as if whole. Every commit records all three in the
+        # snapshot properties; attaching an engine that differs must fail
+        # HERE, not mid-crawl. (A workdir written before a property was
+        # recorded is not checked for it.)
         if self.catalog.latest() is not None:
             props = self.catalog.properties()
             for key, want in self._filter_props().items():
@@ -172,8 +174,7 @@ class CrawlEngine:
                     raise ValueError(
                         f"workdir {workdir!r} was crawled with "
                         f"{key}={stored!r}; this engine is configured for "
-                        f"{want!r} — the stored seen-filter shards cannot be "
-                        "read under another filter kind or shard count"
+                        f"{want!r} — {key} is fixed for the life of a workdir"
                     )
         # The caller's robots and budget tables are broadcast into every
         # round; materialize each once per engine so a round does not
@@ -207,11 +208,13 @@ class CrawlEngine:
     # ------------------------------------------------------------ state
 
     def _filter_props(self) -> dict:
-        """The seen-filter settings a workdir keeps for life, recorded in
-        every commit's snapshot properties."""
+        """The settings a workdir keeps for life — the seen filter's kind
+        and shard count, and index upkeep — recorded in every commit's
+        snapshot properties."""
         return {
             "filter_kind": self.config.filter_kind,
             "n_buckets": self.config.n_buckets,
+            "maintain_index": self.config.maintain_index,
         }
 
     def _fresh_filter(self, members: DataFrame, gen: int) -> DataFrame:

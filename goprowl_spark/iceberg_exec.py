@@ -25,6 +25,7 @@ Two deliberate disciplines:
 Statement classes (all from goprowl_spark/tables.py):
   CREATE TABLE IF NOT EXISTS ... USING iceberg [PARTITIONED BY] TBLPROPERTIES
   MERGE INTO t USING u ON t.k = u.k WHEN MATCHED ... WHEN NOT MATCHED ...
+  DELETE FROM t WHERE k IN (SELECT k FROM src)
   INSERT INTO t SELECT * FROM src
   INSERT OVERWRITE t SELECT * FROM src
   CREATE OR REPLACE VIEW v AS SELECT cols FROM src
@@ -116,6 +117,9 @@ _MERGE_RE = re.compile(
     r"WHEN MATCHED THEN UPDATE SET \*\n"
     r"WHEN NOT MATCHED THEN INSERT \*$"
 )
+_DELETE_RE = re.compile(
+    r"^DELETE FROM (\S+)\nWHERE (\w+) IN \(SELECT (\w+) FROM (\w+)\)$"
+)
 _INSERT_RE = re.compile(r"^INSERT (INTO|OVERWRITE) (\S+)\nSELECT \* FROM (\w+)$")
 _VIEW_RE = re.compile(
     r"^CREATE OR REPLACE VIEW (\S+) AS\nSELECT ([\w, ]+) FROM (\S+)$"
@@ -146,11 +150,18 @@ def to_duckdb_sql(stmt: str) -> list[str]:
         t = _name(target)
         # UPDATE SET * with a unique-keyed source ≡ replace matched rows
         # wholesale; NOT MATCHED INSERT * adds the rest -> delete matched
-        # keys, then insert every source row. merge_upsert's contract
-        # (updates replace same-key rows) guarantees source-key uniqueness.
+        # keys, then insert every source row. The catalog emits MERGE only
+        # for an upsert whose source rows are unique by key.
         return [
             f"DELETE FROM {t} WHERE {tk} IN (SELECT {uk} FROM {source})",
             f"INSERT INTO {t} SELECT * FROM {source}",
+        ]
+    m = _DELETE_RE.match(stmt)
+    if m:
+        target, key, skey, source = m.groups()
+        return [
+            f"DELETE FROM {_name(target)} "
+            f"WHERE {key} IN (SELECT {skey} FROM {source})"
         ]
     m = _INSERT_RE.match(stmt)
     if m:

@@ -76,61 +76,6 @@ def cosine_topk(
     )
 
 
-def assign_clusters(
-    embeddings: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (max cosine; ties → the
-    first/lowest centroid id).
-
-    Dense argmax-over-C is linear algebra, not relational algebra — a
-    chained-CASE column expression blows up Catalyst codegen at C·dim
-    literals. An Arrow-batched pandas UDF doing one numpy matmul per batch
-    is the scale-correct shape (map-only, no shuffle; the centroid matrix
-    ships once per task like a broadcast)."""
-    order = sorted(centroids, key=lambda t: t[0])
-    cids = np.array([cid for cid, _ in order], dtype=np.int64)
-    cent = np.array([c for _, c in order], dtype=np.float64)
-    cn = np.linalg.norm(cent, axis=1, keepdims=True)
-    cn[cn == 0] = 1.0
-    cent_n = cent / cn
-
-    @F.pandas_udf("int")
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.array(vecs.tolist(), dtype=np.float64)
-        mn = np.linalg.norm(m, axis=1, keepdims=True)
-        mn[mn == 0] = 1.0
-        sims = (m / mn) @ cent_n.T
-        return pd.Series(cids[np.argmax(sims, axis=1)].astype("int32"))
-
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        assign(F.col(vec_col)).alias("cluster"),
-    )
-
-
-def deterministic_centroids(
-    embeddings: DataFrame,
-    n_centroids: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Legacy coarse quantizer: the n lowest-id vectors serve as centroids.
-    Deterministic but data-blind — superseded by :func:`kmeans_centroids`
-    (deterministic k-means over integer-quantized vectors), kept only as a
-    zero-job fallback."""
-    rows = (
-        embeddings.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .orderBy("i")
-        .limit(n_centroids)
-        .collect()
-    )
-    return [(j, [float(x) for x in r["v"]]) for j, r in enumerate(rows)]
-
-
 # ------------------------------------------------- deterministic k-means IVF
 #
 # Every quantity in the k-means loop is exact integer arithmetic (or an
@@ -256,25 +201,6 @@ def build_ivf_index(
         assign(F.col(vec_col)).alias("cluster"),
     )
     return assigned, cents
-
-
-def probe_clusters(
-    centroids: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    nprobe: int,
-) -> list[int]:
-    """The ``nprobe`` centroid ids nearest the query (cosine; ties → lowest
-    id). Driver-side math over the tiny centroid list. Works for float or
-    quantized-integer centroids (cosine is scale-invariant); for the
-    bit-exact oracle path use :func:`probe_clusters_quant`."""
-    qn = math.sqrt(sum(float(x) ** 2 for x in query_vec))
-
-    def cos_q(c: list[float]) -> float:
-        cn = math.sqrt(sum(float(x) ** 2 for x in c))
-        d = sum(float(x) * float(y) for x, y in zip(query_vec, c))
-        return d / (qn * cn) if qn and cn else -1.0
-
-    return [cid for cid, _ in sorted(centroids, key=lambda t: (-cos_q(t[1]), t[0]))[:nprobe]]
 
 
 def probe_clusters_quant(

@@ -11,18 +11,24 @@ artifacts, not semantics — no caps here.
 bleve maintains its inverted index ON WRITE — every Store/Batch updates
 postings immediately. The rebuild mirrors that: when ``maintain_index``
 is on, each upsert/delete also updates the ``postings`` and ``doc_stats``
-tables *incrementally* (drop the touched doc_ids' rows, append rows
-computed from ONLY the new docs — O(batch), never a corpus re-tokenize).
-At 100 TB this is the difference between an index and a per-query rebuild.
+tables *incrementally*, from ONLY the batch (O(batch), never a corpus
+re-tokenize). At 100 TB this is the difference between an index and a
+per-query rebuild.
 
-Every mutation is a new snapshot (upsert = MERGE stand-in, delete =
-row-level delete rewrite) so the store shares the crawl's time-travel /
-resume story.
+Every mutation is a new snapshot, so the store shares the crawl's time-
+travel / resume story, and a write appends instead of rewriting
+(merge-on-read, Iceberg v2 equality deletes — see tables.py): an upsert
+appends the batch's documents, postings and doc_stats rows plus one delete
+delta of the batch's ``doc_id``s that all three tables' delete logs share;
+a delete appends only a one-key delete delta, written on the driver (no
+Spark job). Reads hide the superseded rows. A write that would take a
+table past MAX_DELTAS or MAX_DELETED_KEYS compacts instead: it replaces all
+three tables with their live rows plus the batch, which empties the logs.
 
-A write reads its inputs once per table it rewrites, so no input may be a
-PythonRDD: a ``createDataFrame`` over a Python list (``Scan ExistingRDD``)
-costs ~0.35 s of JVM plus ~0.9 s of Python-worker CPU per execution on a
-4-core box. Driver-side rows (a delete's key, a clear's empty tables) are
+The batch is read by each table write, so no input may be a PythonRDD: a
+``createDataFrame`` over a Python list (``Scan ExistingRDD``) costs ~0.35 s
+of JVM plus ~0.9 s of Python-worker CPU per execution on a 4-core box.
+Driver-side rows (a compacting delete's key, a clear's empty tables) are
 built with session.local_df (a LocalRelation), and batch_store persists
 the caller's batch for the length of the commit.
 """
@@ -30,17 +36,43 @@ the caller's batch for the length of the commit.
 from __future__ import annotations
 
 import os
+import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from goprowl_spark import ranking, schemas
 from goprowl_spark.session import local_df
-from goprowl_spark.tables import SnapshotCatalog, merge_upsert
+from goprowl_spark.tables import (
+    SnapshotCatalog,
+    parquet_file_rows,
+    write_local_parquet,
+)
 
 TABLE = "documents"
 POSTINGS = "postings"
 DOC_STATS = "doc_stats"
+SCHEMAS = {
+    TABLE: schemas.DOCUMENTS,
+    POSTINGS: schemas.POSTINGS,
+    DOC_STATS: schemas.DOC_STATS,
+}
+# a delete delta: the doc_ids whose older rows it hides
+KEY_SCHEMA = T.StructType([T.StructField("doc_id", T.StringType(), False)])
+
+# A store table stays merge-on-read while its manifest entry lists at most
+# this many directories (data deltas plus delete deltas). Every read lists
+# each directory and adds a CASE branch per delete delta to its filter, so
+# its fixed cost grows with the count; past it a write compacts instead.
+MAX_DELTAS = 16
+# ... and while its delete log holds at most this many keys. Every read
+# loads the whole log on the driver and plans it as literal hash sets of
+# keys and of (file, key) pairs — up to MAX_DELTAS pairs a key, ~20 us of
+# planning each — so a read's fixed cost grows with it; a batch with more
+# keys than this compacts on its own.
+MAX_DELETED_KEYS = 4096
 
 
 class DocumentStore:
@@ -49,31 +81,52 @@ class DocumentStore:
         self.catalog = SnapshotCatalog(spark, workdir)
         self.maintain_index = maintain_index
 
+    def _tables(self) -> list[str]:
+        return [TABLE, POSTINGS, DOC_STATS] if self.maintain_index else [TABLE]
+
+    def _load(self, name: str) -> DataFrame:
+        return self.catalog.load(name, schema=SCHEMAS[name])
+
     def _docs(self) -> DataFrame:
-        return self.catalog.load(TABLE, schema=schemas.DOCUMENTS)
+        return self._load(TABLE)
 
     def postings(self) -> DataFrame:
         """The maintained inverted index (term → doc, tf)."""
-        return self.catalog.load(POSTINGS, schema=schemas.POSTINGS)
+        return self._load(POSTINGS)
 
     def doc_stats(self) -> DataFrame:
-        return self.catalog.load(DOC_STATS, schema=schemas.DOC_STATS)
+        return self._load(DOC_STATS)
 
     # ---------------------------------------------------------- writes
 
-    def _index_tables(
-        self, touched: DataFrame, new_docs: DataFrame | None
-    ) -> dict[str, DataFrame]:
-        """Incremental postings/doc_stats: drop touched doc_ids, append
-        rows tokenized from only the new docs."""
-        if not self.maintain_index:
-            return {}
-        old_p = self.postings().join(touched, "doc_id", "left_anti")
-        old_s = self.doc_stats().join(touched, "doc_id", "left_anti")
-        if new_docs is not None:
-            old_p = old_p.unionByName(ranking.build_postings(new_docs))
-            old_s = old_s.unionByName(ranking.build_doc_stats(new_docs))
-        return {POSTINGS: old_p, DOC_STATS: old_s}
+    def _room(self, deltas: int, create: bool) -> int | None:
+        """How many more deleted keys every store table's log can take in a
+        write that adds ``deltas`` directories to each; None when the write
+        would take a table past MAX_DELTAS, or a table is absent and the
+        write cannot ``create`` it."""
+        room = MAX_DELETED_KEYS
+        for name in self._tables():
+            counts = self.catalog.delta_counts(name)
+            if counts is None and not create:
+                return None
+            dirs, keys = counts or (0, 0)
+            if dirs + deltas > MAX_DELTAS:
+                return None
+            room = min(room, MAX_DELETED_KEYS - keys)
+        return room
+
+    def _compact(self, keys: DataFrame, new: dict[str, DataFrame]) -> int:
+        """Replace every store table with its live rows minus ``keys``,
+        plus the ``new`` rows — the full rewrite, and an empty delete log."""
+        tables = {}
+        for name in self._tables():
+            # a USING join puts doc_id first; keep the table's column order,
+            # which the emitted INSERT ... SELECT * relies on
+            live = self._load(name).join(keys, "doc_id", "left_anti").select(
+                *SCHEMAS[name].fieldNames()
+            )
+            tables[name] = live.unionByName(new[name]) if name in new else live
+        return self.catalog.commit(tables)
 
     def batch_store(self, docs: DataFrame) -> int:
         """Upsert by doc_id (S5/S6: bleve MERGE semantics, one snapshot per
@@ -90,30 +143,53 @@ class DocumentStore:
         if not caller_cached:
             docs = docs.persist()
         try:
-            merged = merge_upsert(self._docs(), docs, "doc_id")
-            tables = {TABLE: merged}
-            tables.update(self._index_tables(docs.select("doc_id"), docs))
-            return self.catalog.commit(tables)
+            new = {TABLE: docs}
+            if self.maintain_index:
+                new[POSTINGS] = ranking.build_postings(docs)
+                new[DOC_STATS] = ranking.build_doc_stats(docs)
+            room = self._room(deltas=2, create=True)
+            if room is not None:
+                # the documents delta is staged first: its footers count the
+                # batch's keys, and the keys are read back on the driver, so
+                # the delete delta costs no Spark job
+                sid = self.catalog.next_sid()
+                staged = self.catalog.stage_path(sid, TABLE)
+                docs.write.parquet(staged)
+                if sum(n for _, n in parquet_file_rows(staged)) <= room:
+                    keys = pq.read_table(staged, columns=["doc_id"]).column(0)
+                    deleted = self.catalog.stage_path(sid, "deleted")
+                    write_local_parquet(
+                        [(k,) for k in keys.to_pylist()], KEY_SCHEMA, deleted
+                    )
+                    return self.catalog.commit(
+                        appends={**new, TABLE: staged},
+                        deletes=dict.fromkeys(self._tables(), deleted),
+                        sid=sid,
+                    )
+                shutil.rmtree(staged)
+            return self._compact(docs.select("doc_id"), new)
         finally:
             if not caller_cached:
                 docs.unpersist()
 
     def delete(self, doc_id: str) -> int:
         """S10: row-level delete (DELETE FROM documents WHERE url = ?)."""
-        remaining = self._docs().where(F.col("doc_id") != doc_id)
-        tables = {TABLE: remaining}
-        touched = local_df(self.spark, [(doc_id,)], "doc_id string")
-        tables.update(self._index_tables(touched, None))
-        return self.catalog.commit(tables)
+        room = self._room(deltas=1, create=False)
+        if room is None or room < 1:
+            return self._compact(local_df(self.spark, [(doc_id,)], KEY_SCHEMA), {})
+        sid = self.catalog.next_sid()
+        deleted = self.catalog.stage_path(sid, "deleted")
+        write_local_parquet([(doc_id,)], KEY_SCHEMA, deleted)
+        return self.catalog.commit(
+            deletes=dict.fromkeys(self._tables(), deleted), sid=sid
+        )
 
     def clear(self) -> int:
         """S11: truncate (reference recreates the index dir,
         bleve/storage.go:279-299); prior snapshots stay readable."""
-        tables = {TABLE: local_df(self.spark, [], schemas.DOCUMENTS)}
-        if self.maintain_index:
-            tables[POSTINGS] = local_df(self.spark, [], schemas.POSTINGS)
-            tables[DOC_STATS] = local_df(self.spark, [], schemas.DOC_STATS)
-        return self.catalog.commit(tables)
+        return self.catalog.commit(
+            {n: local_df(self.spark, [], SCHEMAS[n]) for n in self._tables()}
+        )
 
     # ---------------------------------------------------------- reads
 

@@ -20,10 +20,21 @@ contract over plain parquet + a JSON manifest:
   instance it never overwrote the winner's files. A crash mid-commit leaves
   the previous snapshot intact;
 * every manifest table entry has one form, ``{"paths": [...], "columns":
-  [...] | null}``: the parquet directories making up the table and an
-  optional column projection applied on load;
+  [...] | null, "deletes": [...]}``: the parquet directories making up the
+  table, an optional column projection applied on load, and the table's
+  delete log (an entry written before delete logs existed reads as
+  ``"deletes": []``);
+* the delete log is Iceberg v2's equality deletes (merge-on-read): each
+  delete delta is a one-column parquet directory of keys, staged in the
+  deleting commit's own directory, so its sequence number is that
+  commit's ``<sid>``. A data row is dead when its key is in a delete delta
+  whose sid is greater than the sid of the directory the row's file sits
+  in — a key deleted and re-appended in one commit stays live. Replacing
+  a table starts it with an empty log;
 * :meth:`load` reads any table at any snapshot → the crawl resumes exactly
-  from a checkpoint (north_rule requirement).
+  from a checkpoint (north_rule requirement). A table with a delete log is
+  read through one filter (see :func:`_live_rows`): no join, no extra
+  Spark job; a table without one loads with a bare parquet scan.
 
 Swapping in Iceberg on a real cluster replaces this class with
 ``spark.table`` / ``MERGE INTO`` calls; all callers go through this
@@ -36,10 +47,12 @@ from __future__ import annotations
 import fcntl
 import json
 import os
+import re
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from goprowl_spark.session import arrow_table, local_df
@@ -121,6 +134,7 @@ class SnapshotCatalog:
         properties: dict | None = None,
         appends: dict[str, DataFrame | str] | None = None,
         projections: dict[str, list[str]] | None = None,
+        deletes: dict[str, DataFrame | str] | None = None,
         sid: int | None = None,
     ) -> int:
         """Make snapshot ``sid`` (default: the next one) the current one.
@@ -138,13 +152,31 @@ class SnapshotCatalog:
         written once per round), the manifest-level equivalent of an
         Iceberg metadata-only view; an append keeps its table's projection.
 
+        ``deletes`` add a delete delta — one key column — to an existing
+        table's delete log, hiding the rows with those keys in files
+        committed before this snapshot (module docstring). One physical
+        delta may serve several tables, as a projection's delta does. A
+        table that appends and deletes in one commit is an upsert: its
+        delete delta holds the appended rows' keys. An append keeps its
+        table's log; a replace starts it empty, so a table may not be
+        replaced and deleted from in one commit.
+
         Raises ``ValueError`` — before touching the manifest — when ``sid``
         is no longer the current snapshot's child, i.e. another writer
-        committed first."""
+        committed first, or a delete names a table the snapshot lacks."""
         sid = self.next_sid() if sid is None else sid
         projections = projections or {}
         tables = {n: self._staged(sid, n, v) for n, v in (tables or {}).items()}
         appends = {n: self._staged(sid, n, v) for n, v in (appends or {}).items()}
+        deletes = {
+            n: self._staged(sid, f"{n}_deletes", v)
+            for n, v in (deletes or {}).items()
+        }
+        for name, path in deletes.items():
+            if name in tables:
+                raise ValueError(f"{name!r} is replaced and deleted from in one commit")
+            if _committed_sid(path) != sid:
+                raise ValueError(f"delete delta {path!r} is not staged for snapshot {sid}")
         with open(os.path.join(self.root, ".commit.lock"), "a") as lock:
             # serializes the read-check-swap across catalog instances and
             # processes; released when the file closes
@@ -165,16 +197,37 @@ class SnapshotCatalog:
             ):
                 for name in sorted(values):
                     old = entries.get(name) if keep else None
-                    paths, cols = (old["paths"], old["columns"]) if old else ([], None)
+                    paths, cols, dels = (
+                        (old["paths"], old["columns"], old.get("deletes", []))
+                        if old
+                        else ([], None, [])
+                    )
                     view = projections.get(name)
                     entries[name] = {
                         "paths": paths + [values[name]],
                         "columns": view or cols,
+                        "deletes": dels,
                     }
+                    if name in deletes:
+                        continue  # emitted with its delete below
                     target = f"{name}_base" if view else name
                     stmts.append(emit(target))
                     if view:
                         stmts.append(iceberg_projection_view_sql(name, target, view))
+            for name in sorted(deletes):
+                old = entries.get(name)
+                if old is None:
+                    raise ValueError(
+                        f"cannot delete from {name!r}: not in snapshot "
+                        f"{manifest['current']!r}"
+                    )
+                entries[name] = {
+                    **old, "deletes": old.get("deletes", []) + [deletes[name]]
+                }
+                if self.emit_iceberg_sql:
+                    stmts.extend(
+                        _row_delta_sql(name, deletes[name], appends.get(name))
+                    )
             manifest["snapshots"][str(sid)] = {
                 "tables": entries,
                 "properties": properties or {},
@@ -200,19 +253,36 @@ class SnapshotCatalog:
     ) -> DataFrame:
         """Read ``table`` at ``snapshot_id`` (default: current). A table
         absent from the snapshot returns an empty DataFrame when ``schema``
-        is given (first crawl round bootstraps from empty state). Entries
-        carrying a column projection are selected down on read (column
-        pruning reaches the parquet scan)."""
+        is given (first crawl round bootstraps from empty state). Rows the
+        entry's delete log supersedes are filtered out. Entries carrying a
+        column projection are selected down on read (column pruning reaches
+        the parquet scan)."""
         sid, e = self._entry(table, snapshot_id)
         if e is None:
             if schema is None:
                 raise KeyError(f"table {table!r} not in snapshot {sid!r}")
             return local_df(self.spark, [], schema)
         df = self.spark.read.parquet(*e["paths"])
+        if e.get("deletes"):
+            df = _live_rows(df, e["paths"], e["deletes"])
         return df.select(*e["columns"]) if e["columns"] else df
 
     def has_table(self, table: str, snapshot_id: int | None = None) -> bool:
         return self._entry(table, snapshot_id)[1] is not None
+
+    def delta_counts(
+        self, table: str, snapshot_id: int | None = None
+    ) -> tuple[int, int] | None:
+        """(directories, deleted keys) of ``table``'s entry: its data and
+        delete-delta directories, and the rows of its delete log (a key
+        deleted twice counts twice), read from parquet footers. None for
+        an absent table."""
+        e = self._entry(table, snapshot_id)[1]
+        if e is None:
+            return None
+        deletes = e.get("deletes", [])
+        keys = sum(n for p in deletes for _, n in parquet_file_rows(p))
+        return len(e["paths"]) + len(deletes), keys
 
     def files(self, table: str, snapshot_id: int | None = None) -> list[str]:
         """The ``*.parquet`` data files of ``table`` at ``snapshot_id``
@@ -231,23 +301,83 @@ class SnapshotCatalog:
         return manifest["snapshots"].get(str(sid), {}).get("properties", {})
 
 
-def merge_upsert(
-    target: DataFrame,
-    updates: DataFrame,
-    key: str,
-    table_name: str | None = None,
-    emitted_sql: list[str] | None = None,
-) -> DataFrame:
-    """MERGE-INTO stand-in: rows in ``updates`` replace same-key rows in
-    ``target`` (reference upsert-by-URL: bleve/storage.go:65-91). On Iceberg
-    this is a real ``MERGE INTO ... ON t.key = u.key`` — pass ``table_name``
-    and an ``emitted_sql`` list to record the exact statement the production
-    swap would run (golden-pinned in tests/test_tables.py)."""
-    if emitted_sql is not None and table_name is not None:
-        emitted_sql.append(iceberg_merge_upsert_sql(table_name, key))
-    return target.join(updates.select(key), on=key, how="left_anti").unionByName(
-        updates
+# the <sid> of a path staged by SnapshotCatalog.stage_path; the greedy
+# prefix makes it the innermost snapshots/ directory of the path
+_SID_PATTERN = ".*/snapshots/([0-9]+)-[0-9a-f]+/"
+
+
+def _committed_sid(path: str) -> int:
+    """The snapshot a staged directory (or a file in one) was committed in:
+    the ``<sid>`` of its ``snapshots/<sid>-<writer>/`` directory."""
+    m = re.match(_SID_PATTERN, path + "/")
+    if m is None:
+        raise ValueError(f"{path!r} is not staged under snapshots/<sid>-<writer>/")
+    return int(m.group(1))
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _live_rows(df: DataFrame, paths: list[str], deletes: list[str]) -> DataFrame:
+    """``df`` (a scan of ``paths``) without the rows the delete log
+    ``deletes`` supersedes. The log is read on the driver with pyarrow — no
+    Spark job — into key → latest delete sid, then into the ``"<file
+    sid>:<key>"`` pairs it hides, and applied as one filter: a hash-set
+    ``key IN (...)`` probe first, so a row outside the log pays one lookup;
+    only a row inside it reads its file's sid from ``_metadata.file_path``
+    and probes the pair set.
+
+    The filter is SQL text, parsed in the JVM: a literal per key built
+    through py4j costs ~0.5 ms, seconds for a large log."""
+    import pyarrow.parquet as pq
+
+    file_sids = sorted({_committed_sid(p) for p in paths})  # raises on a file of unknown age
+    latest: dict = {}
+    for p in deletes:
+        for f in parquet_data_files(p):
+            keys = pq.ParquetFile(os.path.join(p, f)).read()
+            key = keys.column_names[0]
+            latest.update(dict.fromkeys(keys.column(0).to_pylist(), _committed_sid(p)))
+    if not latest:
+        return df
+    hidden = {k: [s for s in file_sids if s < d] for k, d in latest.items() if d > file_sids[0]}
+    # Spark plans a literal IN over more than inSetConversionThreshold values
+    # as a hash set held by reference, so the generated code is the same for
+    # every log and a read after a write reuses the compiled stages; an IN
+    # over fewer values is compiled per list length. Both lists are padded
+    # past the threshold with pairs of a negative sid, which no file has.
+    threshold = int(df.sparkSession.conf.get("spark.sql.optimizer.inSetConversionThreshold"))
+    pad = [f"-{i}:" for i in range(threshold + 1)]
+    pairs = [f"{s}:{k}" for k, sids in hidden.items() for s in sids]
+    col = "`" + key.replace("`", "``") + "`"
+    return df.where(
+        F.expr(
+            f"NOT coalesce({col} IN ({', '.join(map(_sql_string, list(hidden) + pad))}) "
+            f"AND concat(regexp_extract(_metadata.file_path, '{_SID_PATTERN}', 1), "
+            f"':', {col}) IN ({', '.join(map(_sql_string, pairs + pad))}), false)"
+        )
     )
+
+
+def _row_delta_sql(name: str, deleted: str, appended: str | None) -> list[str]:
+    """The Iceberg statements for one table's delete delta in a commit,
+    with its append, if any. An upsert is ``MERGE INTO`` when the appended
+    rows are unique by key (a document, its doc_stats row); MERGE rejects
+    a target row that several source rows match, so an upsert of rows that
+    share keys (a document's postings) is ``DELETE`` then ``INSERT``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    key = pq.read_schema(
+        os.path.join(deleted, parquet_data_files(deleted)[0])
+    ).names[0]
+    if appended is None:
+        return [iceberg_delete_sql(name, key)]
+    keys = pq.read_table(appended, columns=[key]).column(0)
+    if pc.count_distinct(keys).as_py() == len(keys):
+        return [iceberg_merge_upsert_sql(name, key)]
+    return [iceberg_delete_sql(name, key), iceberg_append_sql(name)]
 
 
 # ------------------------------------------------------- Iceberg SQL emission
@@ -281,7 +411,10 @@ def iceberg_create_table_sql(
         f"CREATE TABLE IF NOT EXISTS {_qualified(name, catalog)} (\n  {cols}\n)"
         f"\nUSING iceberg{part}"
         "\nTBLPROPERTIES ('format-version' = '2', "
-        "'write.distribution-mode' = 'hash')"
+        "'write.distribution-mode' = 'hash', "
+        "'write.delete.mode' = 'merge-on-read', "
+        "'write.update.mode' = 'merge-on-read', "
+        "'write.merge.mode' = 'merge-on-read')"
     )
 
 
@@ -293,6 +426,16 @@ def iceberg_merge_upsert_sql(
         f"MERGE INTO {t} t\nUSING {source} u\nON t.{key} = u.{key}\n"
         "WHEN MATCHED THEN UPDATE SET *\n"
         "WHEN NOT MATCHED THEN INSERT *"
+    )
+
+
+def iceberg_delete_sql(
+    name: str, key: str, source: str = "staged", catalog: str = "spark_catalog"
+) -> str:
+    """A delete delta: every row whose key the staged delta lists."""
+    return (
+        f"DELETE FROM {_qualified(name, catalog)}\n"
+        f"WHERE {key} IN (SELECT {key} FROM {source})"
     )
 
 

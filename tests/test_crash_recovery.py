@@ -184,3 +184,32 @@ def test_resume_with_smaller_bloom_shards_is_exact(spark, tmp_path):
     docs = resumed.documents()
     assert seen.count() == seen.select(F.countDistinct("url")).first()[0]
     assert docs.count() == docs.select(F.countDistinct("doc_id")).first()[0]
+
+
+def test_resume_that_switches_on_index_upkeep_fails_fast(spark, tmp_path):
+    """Index upkeep is kept for the life of a workdir: two rounds without
+    it, then an engine with maintain_index=True on the same workdir raises
+    instead of indexing only the later rounds' documents. A workdir whose
+    snapshots never recorded the setting is still accepted."""
+    import json
+
+    import pytest
+
+    cfg = CrawlConfig(seeds=[corpus.url(0)], max_depth=4)
+    eng = CrawlEngine(
+        spark, None, str(tmp_path), cfg, fetcher=corpus.make_fetcher(N)
+    )
+    eng.run(max_rounds=2)
+    assert eng.catalog.properties()["maintain_index"] is False
+    upkeep = CrawlConfig(seeds=[corpus.url(0)], max_depth=4, maintain_index=True)
+    with pytest.raises(ValueError, match="maintain_index"):
+        CrawlEngine(
+            spark, None, str(tmp_path), upkeep, fetcher=corpus.make_fetcher(N)
+        )
+
+    manifest_path = tmp_path / "manifest.json"
+    manifest = json.loads(manifest_path.read_text())
+    for snap in manifest["snapshots"].values():
+        del snap["properties"]["maintain_index"]
+    manifest_path.write_text(json.dumps(manifest))
+    CrawlEngine(spark, None, str(tmp_path), upkeep, fetcher=corpus.make_fetcher(N))

@@ -51,32 +51,66 @@ def test_nested_type_translation_exact():
         spark_type_to_duckdb("interval")
 
 
+def _latest_entry(root, name: str) -> dict:
+    import json
+
+    with open(f"{root}/manifest.json") as f:
+        manifest = json.load(f)
+    return manifest["snapshots"][str(manifest["current"])]["tables"][name]
+
+
 def test_merge_upsert_sql_matches_spark_end_state(spark, tmp_path):
-    """The MERGE INTO statement merge_upsert emits, executed on a DuckDB
-    mirror of the same target/updates, ends in exactly the rows the Spark
-    implementation returns."""
-    target = spark.createDataFrame(
-        [("a", 1), ("b", 1), ("d", 4)], "k string, v int"
-    )
-    updates = spark.createDataFrame([("b", 2), ("c", 2)], "k string, v int")
-    emitted: list[str] = []
-    spark_rows = {
-        tuple(r)
-        for r in tb.merge_upsert(
-            target, updates, "k", table_name="docs", emitted_sql=emitted
-        ).collect()
+    """The statements the store's merge-on-read writes emit — MERGE INTO
+    for documents and doc_stats, DELETE then INSERT for postings, DELETE
+    FROM for a delete, INSERT OVERWRITE for a compaction — replayed on a
+    DuckDB mirror over the very files the catalog staged, end in the rows
+    the store reads after every op."""
+    from collections import Counter
+
+    from goprowl_spark import store as store_mod
+    from goprowl_spark.session import local_df
+
+    store = store_mod.DocumentStore(spark, str(tmp_path))
+    store.catalog.emit_iceberg_sql = True
+    mirror = DuckDBMirror()
+    for name, schema in store_mod.SCHEMAS.items():
+        mirror.execute(tb.iceberg_create_table_sql(name, schema))
+    cols = {
+        store_mod.TABLE: "doc_id, title, content",
+        store_mod.POSTINGS: "term, doc_id, tf",
+        store_mod.DOC_STATS: "doc_id, doc_len",
     }
 
-    tpath, upath = str(tmp_path / "t"), str(tmp_path / "u")
-    target.write.parquet(tpath)
-    updates.write.parquet(upath)
-    mirror = DuckDBMirror()
-    mirror.con.execute(
-        "CREATE TABLE goprowl.docs AS "
-        f"SELECT * FROM parquet_scan('{tpath}/*.parquet')"
-    )
-    mirror.execute(emitted[0], sources={"updates": upath})
-    assert mirror.rows("docs") == spark_rows == {("a", 1), ("b", 2), ("c", 2), ("d", 4)}
+    def docs(rows):
+        return local_df(
+            spark,
+            [(d, [], d, t, None, None, None, None, None, None, None) for d, t in rows],
+            schemas.DOCUMENTS,
+        )
+
+    ops = [
+        lambda: store.batch_store(docs([("a", "x y"), ("b", "y z")])),
+        lambda: store.batch_store(docs([("b", "z z w"), ("c", "x")])),
+        lambda: store.delete("a"),
+        lambda: store.batch_store(docs([("a", "w")])),
+    ]
+    # enough deletes to pass MAX_DELTAS: the last write compacts
+    ops += [lambda: store.delete("zz")] * (store_mod.MAX_DELTAS - 6)
+    for op in ops:
+        n_before = len(store.catalog.emitted_sql)
+        op()
+        for stmt in store.catalog.emitted_sql[n_before:]:
+            name = re.search(r"goprowl\.(\w+)", stmt).group(1)
+            e = _latest_entry(tmp_path, name)
+            source = e["deletes"][-1] if stmt.startswith("DELETE") else e["paths"][-1]
+            mirror.execute(stmt, sources={"staged": source, "updates": source})
+        for name, c in cols.items():
+            got = Counter(mirror.con.execute(f"SELECT {c} FROM goprowl.{name}").fetchall())
+            want = Counter(tuple(r) for r in store.catalog.load(name).select(*c.split(", ")).collect())
+            assert got == want, (name, got, want)
+    kinds = Counter(stmt.split()[0] for stmt in store.catalog.emitted_sql)
+    assert set(kinds) == {"MERGE", "DELETE", "INSERT"}
+    assert store.catalog.delta_counts(store_mod.TABLE) == (1, 0)  # compacted
 
 
 def _replay_commit(mirror, stmts, tables, appends):
@@ -148,6 +182,9 @@ def test_translator_is_narrow():
         to_duckdb_sql("DROP TABLE spark_catalog.goprowl.seen")
     with pytest.raises(ValueError, match="rollback_to_snapshot"):
         to_duckdb_sql(tb.iceberg_rollback_sql("frontier", 7))
+    # a DELETE of any other shape must not silently translate
+    with pytest.raises(ValueError, match="unrecognized"):
+        to_duckdb_sql("DELETE FROM spark_catalog.goprowl.t\nWHERE k = 1")
     # MERGE with any other WHEN shape must not silently translate
     with pytest.raises(ValueError, match="unrecognized"):
         to_duckdb_sql(

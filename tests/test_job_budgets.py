@@ -6,8 +6,11 @@ the same change."""
 
 import pytest
 
-from goprowl_spark import corpus
+from goprowl_spark import corpus, schemas
 from goprowl_spark.crawl import CrawlConfig, CrawlEngine
+from goprowl_spark.engine import GoProwlSearchEngine
+from goprowl_spark.session import local_df
+from goprowl_spark.store import TABLE
 
 N = 300
 
@@ -54,3 +57,74 @@ def test_crawl_round_job_budget(spark, tmp_path, path, kind):
         spark, f"job-budget-crawl-{path}-{kind}", lambda: eng.crawl_round()
     )
     assert 0 < n <= CRAWL_ROUND_JOBS[(path, kind)], n
+
+
+# Spark jobs one warm store or engine op starts on a 40-page store, in the
+# order OPS runs them. A ranked read right after a write recomputes the
+# corpus stats and a suggest miss rebuilds the vocabulary; the "hit" reads
+# run on the same snapshot as the read before them.
+OP_JOBS = {
+    "index": 4,
+    "bm25_after_write": 9,
+    "bm25_hit": 7,
+    "tfidf_hit": 7,
+    "batch_index": 4,
+    "tfidf_after_write": 9,
+    "suggest_miss": 4,
+    "suggest_hit": 1,
+    "delete": 0,
+    "search": 2,
+    "get_total_results": 3,
+}
+
+
+def _pages(spark, ids):
+    return local_df(
+        spark,
+        [
+            (corpus.url(i), [("title", corpus.title(i), "", 0)], corpus.title(i),
+             " ".join(corpus.paragraphs(i)), "webpage", None, None, None, None,
+             None, None)
+            for i in ids
+        ],
+        schemas.DOCUMENTS,
+    )
+
+
+def _ops(spark, eng, rnd: int) -> dict:
+    """OPS of one pass; ``rnd`` picks fresh and existing doc ids."""
+    return {
+        "index": lambda: eng.index(corpus.url(100 + rnd), "t", "alpha beta"),
+        "bm25_after_write": lambda: eng.search_ranked("alpha beta", "bm25").collect(),
+        "bm25_hit": lambda: eng.search_ranked("alpha gamma", "bm25").collect(),
+        "tfidf_hit": lambda: eng.search_ranked("alpha gamma", "tfidf").collect(),
+        "batch_index": lambda: eng.batch_index(_pages(spark, [rnd, 41 + rnd, 50 + rnd])),
+        "tfidf_after_write": lambda: eng.search_ranked("alpha beta", "tfidf").collect(),
+        "suggest_miss": lambda: eng.suggest("a"),
+        "suggest_hit": lambda: eng.suggest("b"),
+        "delete": lambda: eng.delete(corpus.url(10 + rnd)),
+        "search": lambda: eng.search("alpha").collect(),
+        "get_total_results": lambda: eng.get_total_results("alpha"),
+    }
+
+
+@pytest.fixture(scope="module")
+def op_jobs(spark, tmp_path_factory):
+    """Jobs per op of the second of two passes over OPS (the first warms
+    every op up). Neither pass's writes compact: every write appends."""
+    eng = GoProwlSearchEngine(spark, str(tmp_path_factory.mktemp("ops")))
+    eng.batch_index(_pages(spark, range(40)))
+    for fn in _ops(spark, eng, 0).values():
+        fn()
+    counts = {
+        name: jobs_in_group(spark, f"job-budget-op-{name}", fn)
+        for name, fn in _ops(spark, eng, 1).items()
+    }
+    # build 2 directories, each pass 2 per upsert and 1 per delete
+    assert eng.store.catalog.delta_counts(TABLE)[0] == 2 + 2 * 5
+    return counts
+
+
+@pytest.mark.parametrize("op", list(OP_JOBS))
+def test_store_and_engine_op_job_budget(op_jobs, op):
+    assert op_jobs[op] <= OP_JOBS[op], op_jobs

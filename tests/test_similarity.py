@@ -4,7 +4,10 @@ brute-force exactness vs numpy, IVF/LSH candidate quality, blocked pairs."""
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from goprowl_spark.operators import similarity as SIM
 
@@ -126,6 +129,82 @@ def _recall_at_10(ids, mat, assigned_df, cents, probe_fn, qids, nprobe=2):
     return sum(rs) / len(rs)
 
 
+# ------------------------------------- legacy first-N-by-id IVF baseline
+
+
+def assign_clusters(
+    embeddings: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Assign each vector to its nearest centroid (max cosine; ties → the
+    first/lowest centroid id).
+
+    Dense argmax-over-C is linear algebra, not relational algebra — a
+    chained-CASE column expression blows up Catalyst codegen at C·dim
+    literals. An Arrow-batched pandas UDF doing one numpy matmul per batch
+    is the scale-correct shape (map-only, no shuffle; the centroid matrix
+    ships once per task like a broadcast)."""
+    order = sorted(centroids, key=lambda t: t[0])
+    cids = np.array([cid for cid, _ in order], dtype=np.int64)
+    cent = np.array([c for _, c in order], dtype=np.float64)
+    cn = np.linalg.norm(cent, axis=1, keepdims=True)
+    cn[cn == 0] = 1.0
+    cent_n = cent / cn
+
+    @F.pandas_udf("int")
+    def assign(vecs: pd.Series) -> pd.Series:
+        m = np.array(vecs.tolist(), dtype=np.float64)
+        mn = np.linalg.norm(m, axis=1, keepdims=True)
+        mn[mn == 0] = 1.0
+        sims = (m / mn) @ cent_n.T
+        return pd.Series(cids[np.argmax(sims, axis=1)].astype("int32"))
+
+    return embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
+        assign(F.col(vec_col)).alias("cluster"),
+    )
+
+
+def deterministic_centroids(
+    embeddings: DataFrame,
+    n_centroids: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[tuple[int, list[float]]]:
+    """Legacy coarse quantizer: the n lowest-id vectors serve as centroids.
+    Deterministic but data-blind — the baseline SIM.kmeans_centroids must
+    not fall behind."""
+    rows = (
+        embeddings.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
+        .orderBy("i")
+        .limit(n_centroids)
+        .collect()
+    )
+    return [(j, [float(x) for x in r["v"]]) for j, r in enumerate(rows)]
+
+
+def probe_clusters(
+    centroids: list[tuple[int, list[float]]],
+    query_vec: list[float],
+    nprobe: int,
+) -> list[int]:
+    """The ``nprobe`` centroid ids nearest the query (cosine; ties → lowest
+    id). Driver-side math over the tiny centroid list. Works for float or
+    quantized-integer centroids (cosine is scale-invariant)."""
+    qn = math.sqrt(sum(float(x) ** 2 for x in query_vec))
+
+    def cos_q(c: list[float]) -> float:
+        cn = math.sqrt(sum(float(x) ** 2 for x in c))
+        d = sum(float(x) * float(y) for x, y in zip(query_vec, c))
+        return d / (qn * cn) if qn and cn else -1.0
+
+    return [cid for cid, _ in sorted(centroids, key=lambda t: (-cos_q(t[1]), t[0]))[:nprobe]]
+
+
+
 def test_ivf_kmeans_recall_on_clustered_data(spark):
     """On cluster-structured data (the regime IVF exists for), k-means
     centroids give recall@10 ≥ 0.8 at nprobe=2 of 8, and beat the legacy
@@ -142,10 +221,10 @@ def test_ivf_kmeans_recall_on_clustered_data(spark):
     assigned, cents = SIM.build_ivf_index(emb, n_centroids=8, n_iter=4)
     km = _recall_at_10(ids, mat, assigned, cents, SIM.probe_clusters_quant, qids)
 
-    legacy_cents = SIM.deterministic_centroids(emb, 8)
-    legacy_assigned = SIM.assign_clusters(emb, legacy_cents)
+    legacy_cents = deterministic_centroids(emb, 8)
+    legacy_assigned = assign_clusters(emb, legacy_cents)
     legacy = _recall_at_10(
-        ids, mat, legacy_assigned, legacy_cents, SIM.probe_clusters, qids
+        ids, mat, legacy_assigned, legacy_cents, probe_clusters, qids
     )
 
     # (first-N also recalls well when clusters are cleanly separated — any

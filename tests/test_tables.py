@@ -2,7 +2,7 @@
 
 import pytest
 
-from goprowl_spark.tables import SnapshotCatalog, merge_upsert
+from goprowl_spark.tables import SnapshotCatalog
 
 
 def test_commit_load_roundtrip(spark, tmp_path):
@@ -37,11 +37,102 @@ def test_missing_table_with_schema_is_empty(spark, tmp_path):
     assert df.count() == 0
 
 
-def test_merge_upsert_replaces_by_key(spark):
-    target = spark.createDataFrame([("a", 1), ("b", 1)], "k string, v int")
+def _rows(df) -> set:
+    return {tuple(r) for r in df.collect()}
+
+
+def test_merge_upsert_replaces_by_key(spark, tmp_path):
+    """The store's upsert shape — append the updates plus a delete delta of
+    their keys — replaces same-key rows on load, and the parent snapshot
+    still reads the rows it had."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    cat.commit({"t": spark.createDataFrame([("a", 1), ("b", 1)], "k string, v int")})
     updates = spark.createDataFrame([("b", 2), ("c", 2)], "k string, v int")
-    got = {tuple(r) for r in merge_upsert(target, updates, "k").collect()}
-    assert got == {("a", 1), ("b", 2), ("c", 2)}
+    cat.commit(appends={"t": updates}, deletes={"t": updates.select("k")})
+    assert _rows(cat.load("t")) == {("a", 1), ("b", 2), ("c", 2)}
+    assert _rows(cat.load("t", snapshot_id=0)) == {("a", 1), ("b", 1)}
+
+
+def test_delete_log_hides_only_older_rows(spark, tmp_path):
+    """A delete hides its keys' rows in files committed before it: a key
+    re-appended later is live again, each snapshot sees only its own log,
+    one delete delta may serve two tables, and a replace empties the log."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    base = spark.createDataFrame([("a", 0), ("b", 0), ("c", 0)], "k string, v int")
+    cat.commit({"t": base, "u": base})
+    sid = cat.next_sid()
+    gone = cat.stage_path(sid, "gone")
+    spark.createDataFrame([("a",), ("b",)], "k string").write.parquet(gone)
+    cat.commit(deletes={"t": gone, "u": gone}, sid=sid)
+    assert _rows(cat.load("t")) == _rows(cat.load("u")) == {("c", 0)}
+    cat.commit(appends={"t": spark.createDataFrame([("a", 2)], "k string, v int")})
+    assert _rows(cat.load("t")) == {("a", 2), ("c", 0)}
+    assert _rows(cat.load("t", snapshot_id=0)) == _rows(base)
+    assert _rows(cat.load("t", snapshot_id=1)) == {("c", 0)}
+    assert cat.delta_counts("t") == (3, 2) and cat.delta_counts("nope") is None
+    cat.commit({"t": base})
+    assert _rows(cat.load("t")) == _rows(base) and cat.delta_counts("t") == (1, 0)
+    with pytest.raises(ValueError, match="not in snapshot"):
+        cat.commit(deletes={"nope": spark.createDataFrame([("a",)], "k string")})
+    with pytest.raises(ValueError, match="replaced and deleted"):
+        cat.commit({"t": base}, deletes={"t": gone})
+    with pytest.raises(ValueError, match="not staged for snapshot"):
+        cat.commit(deletes={"t": gone})
+
+
+def _plan(df) -> str:
+    import re
+
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().executedPlan().toString())
+
+
+def test_load_plans(spark, tmp_path):
+    """A table with an empty delete log loads with the bare parquet scan's
+    plan; one with a log adds a single Filter over the same scan — no join,
+    no exchange — and starts no more jobs than the bare load."""
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    df = spark.createDataFrame([("a", 1), ("b", 1)], "k string, v int")
+    cat.commit({"t": df, "d": df})
+    cat.commit(appends={"t": df, "d": df})
+    paths = [cat.stage_path(0, "t"), cat.stage_path(1, "t")]
+    assert _plan(cat.load("t")) == _plan(spark.read.parquet(*paths))
+
+    cat.commit(deletes={"d": df.select("k").where("k = 'a'")})
+    sc = spark.sparkContext
+
+    def jobs(group, table):
+        sc.setJobGroup(group, group)
+        try:
+            cat.load(table)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("load-with-log", "d") == jobs("load-without-log", "t")
+    plan = _plan(cat.load("d"))
+    nodes = [line.lstrip(" +-*()0123456789").split(" ")[0] for line in plan.splitlines()]
+    assert nodes.count("Filter") == 1 and nodes.count("FileScan") == 1
+    assert "Exchange" not in plan and "Join" not in plan
+    assert _rows(cat.load("d")) == {("b", 1)}
+
+
+def test_manifest_entry_without_deletes_reads_as_empty_log(spark, tmp_path):
+    """An entry written before delete logs existed loads, takes appends and
+    deletes, and gains the key on its next write."""
+    import json
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    df = spark.createDataFrame([("a", 1), ("b", 1)], "k string, v int")
+    cat.commit({"t": df})
+    with open(tmp_path / "manifest.json") as f:
+        manifest = json.load(f)
+    del manifest["snapshots"]["0"]["tables"]["t"]["deletes"]
+    with open(tmp_path / "manifest.json", "w") as f:
+        json.dump(manifest, f)
+    assert _rows(cat.load("t")) == {("a", 1), ("b", 1)}
+    assert cat.delta_counts("t") == (1, 0)
+    cat.commit(deletes={"t": df.select("k").where("k = 'b'")})
+    assert _rows(cat.load("t")) == {("a", 1)}
 
 
 def test_iceberg_sql_emission_goldens(spark, tmp_path):
@@ -54,17 +145,33 @@ def test_iceberg_sql_emission_goldens(spark, tmp_path):
 
     from goprowl_spark import tables as tb
 
-    # merge_upsert records its MERGE INTO when given a table name + sink
-    emitted: list[str] = []
-    target = spark.createDataFrame([("a", 1)], "k string, v int")
-    updates = spark.createDataFrame([("a", 2)], "k string, v int")
-    tb.merge_upsert(target, updates, "k", table_name="documents", emitted_sql=emitted)
-    assert emitted == [
+    # an upsert whose appended rows are unique by key is a MERGE INTO; one
+    # whose rows share keys (postings) is DELETE then INSERT; a delete alone
+    # is a DELETE
+    up = SnapshotCatalog(spark, str(tmp_path / "upsert"), emit_iceberg_sql=True)
+    docs = spark.createDataFrame([("a", 1)], "doc_id string, v int")
+    posts = spark.createDataFrame([("x", "a"), ("y", "a")], "term string, doc_id string")
+    up.commit({"documents": docs, "postings": posts})
+    sid = up.next_sid()
+    keys = up.stage_path(sid, "deleted")
+    docs.select("doc_id").write.parquet(keys)
+    up.commit(
+        appends={"documents": docs, "postings": posts},
+        deletes={"documents": keys, "postings": keys},
+        sid=sid,
+    )
+    up.commit(deletes={"documents": docs.select("doc_id")})
+    assert up.emitted_sql[2:] == [
         "MERGE INTO spark_catalog.goprowl.documents t\n"
         "USING updates u\n"
-        "ON t.k = u.k\n"
+        "ON t.doc_id = u.doc_id\n"
         "WHEN MATCHED THEN UPDATE SET *\n"
-        "WHEN NOT MATCHED THEN INSERT *"
+        "WHEN NOT MATCHED THEN INSERT *",
+        "DELETE FROM spark_catalog.goprowl.postings\n"
+        "WHERE doc_id IN (SELECT doc_id FROM staged)",
+        "INSERT INTO spark_catalog.goprowl.postings\nSELECT * FROM staged",
+        "DELETE FROM spark_catalog.goprowl.documents\n"
+        "WHERE doc_id IN (SELECT doc_id FROM staged)",
     ]
 
     # a staged commit with an append, a replace, and a projection entry
@@ -108,7 +215,10 @@ def test_iceberg_sql_emission_goldens(spark, tmp_path):
         "  url string,\n  depth int\n)\n"
         "USING iceberg\nPARTITIONED BY (depth)\n"
         "TBLPROPERTIES ('format-version' = '2', "
-        "'write.distribution-mode' = 'hash')"
+        "'write.distribution-mode' = 'hash', "
+        "'write.delete.mode' = 'merge-on-read', "
+        "'write.update.mode' = 'merge-on-read', "
+        "'write.merge.mode' = 'merge-on-read')"
     )
     assert tb.iceberg_rollback_sql("frontier", 7) == (
         "CALL spark_catalog.system.rollback_to_snapshot('goprowl.frontier', 7)"
@@ -179,7 +289,8 @@ def test_concurrent_commit_raises_and_keeps_the_winner(spark, tmp_path):
 
 def test_staged_commits_without_spark(tmp_path):
     """Path values need no Spark session. Replaces, appends, projections
-    and carried-over tables all land in one {paths, columns} entry form."""
+    and carried-over tables all land in one {paths, columns, deletes}
+    entry form."""
     import json
 
     cat = SnapshotCatalog(None, str(tmp_path))
@@ -213,14 +324,16 @@ def test_staged_commits_without_spark(tmp_path):
     ]
     assert len(entries) == 4 + 49 * 4
     for e in entries:
-        assert set(e) == {"paths", "columns"}
+        assert set(e) == {"paths", "columns", "deletes"} and e["deletes"] == []
         assert isinstance(e["paths"], list) and e["paths"]
     last = manifest["snapshots"]["49"]["tables"]
     assert last["seen"]["columns"] == ["url"]
     assert last["metrics"]["columns"] is None
     assert len(last["seen"]["paths"]) == len(last["metrics"]["paths"]) == 50
     assert last["frontier"] == {
-        "paths": [cat.stage_path(49, "delta")], "columns": ["url", "depth"]
+        "paths": [cat.stage_path(49, "delta")],
+        "columns": ["url", "depth"],
+        "deletes": [],
     }
     assert last["config"]["paths"] == [cat.stage_path(0, "config")]
 
