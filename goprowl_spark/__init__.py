@@ -12,4 +12,6 @@ built-ins cannot express the op (HTML parsing, URL canonicalization, Bloom
 probe).
 """
 
+from goprowl_spark import _zipimport  # noqa: F401  (see its docstring)
+
 __version__ = "0.1.0"

@@ -420,7 +420,9 @@ class CrawlEngine:
 
         if cfg.maintain_index:
             # drop the expired documents' index rows; the survivors are
-            # already tokenized (the rule DocumentStore._index_tables uses)
+            # already tokenized. The USING join puts doc_id first, so select
+            # the schema's order back: the emitted INSERT OVERWRITE … SELECT *
+            # is positional (the store's compaction does the same)
             expired_ids = urls_df.withColumnRenamed("url", "doc_id")
             for name, schema in (
                 ("postings", schemas.POSTINGS),
@@ -428,7 +430,7 @@ class CrawlEngine:
             ):
                 tables[name] = self._load(name, schema).join(
                     expired_ids, "doc_id", "left_anti"
-                )
+                ).select(*schema.fieldNames())
 
         n_frontier = int(props.get("frontier_count", 0))
         frontier_rest = frontier.join(urls_df, "url", "left_anti")

@@ -69,6 +69,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # The default 100-class codegen cache thrashes: a warm crawl_polite
+        # round (perfbench) compiled 59–81 classes at it and 5 at 1,024, the
+        # 5 being stages that hold a per-round literal. Static: only a new
+        # session reads it.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -113,6 +113,45 @@ def test_merge_upsert_sql_matches_spark_end_state(spark, tmp_path):
     assert store.catalog.delta_counts(store_mod.TABLE) == (1, 0)  # compacted
 
 
+def test_expire_urls_rewrites_index_tables_in_schema_order(spark, tmp_path):
+    """An expiry on an index-maintaining crawl replaces postings and
+    doc_stats with files in the tables' column order (read from the
+    footers, no job), so the positional INSERT OVERWRITE … SELECT * it
+    emits, replayed on DuckDB over those files, gives the rows the catalog
+    loads."""
+    import os
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from goprowl_spark import corpus
+    from goprowl_spark.crawl import CrawlConfig, CrawlEngine
+
+    cfg = CrawlConfig(seeds=[corpus.url(0)], max_depth=1, maintain_index=True)
+    eng = CrawlEngine(
+        spark, None, str(tmp_path), cfg, fetcher=corpus.make_fetcher(50)
+    )
+    eng.run()
+    gone = sorted(r["doc_id"] for r in eng.documents().collect())[0]
+    eng.catalog.emit_iceberg_sql = True
+    assert eng.expire_urls([gone]) == 1
+    mirror = DuckDBMirror()
+    for name, schema in (("postings", schemas.POSTINGS), ("doc_stats", schemas.DOC_STATS)):
+        path = _latest_entry(tmp_path, name)["paths"][-1]
+        for f in tb.parquet_data_files(path):
+            assert pq.read_schema(os.path.join(path, f)).names == schema.fieldNames()
+        (stmt,) = [
+            s for s in eng.catalog.emitted_sql
+            if s.startswith(f"INSERT OVERWRITE spark_catalog.goprowl.{name}\n")
+        ]
+        mirror.execute(tb.iceberg_create_table_sql(name, schema))
+        mirror.execute(stmt, sources={"staged": path})
+        got = Counter(mirror.con.execute(f"SELECT * FROM goprowl.{name}").fetchall())
+        want = Counter(tuple(r) for r in eng.catalog.load(name).collect())
+        assert got == want, name
+        assert gone not in {r[schema.fieldNames().index("doc_id")] for r in got}
+
+
 def _replay_commit(mirror, stmts, tables, appends):
     """Replay one commit's emitted statements, binding each statement's
     generic ``staged`` source to the path the catalog actually staged for

@@ -22,6 +22,10 @@ CRAWL_ROUND_JOBS = {
     ("corpus", "bloom"): 26,
     ("corpus", "cuckoo"): 26,
 }
+# Janino compiles of a third such round. The first two rounds leave every
+# class they compiled in the codegen cache, so only stages holding a
+# per-round literal (the round number) compile again.
+CRAWL_ROUND_COMPILES = {key: 13 for key in CRAWL_ROUND_JOBS}
 
 
 def jobs_in_group(spark, group: str, fn) -> int:
@@ -34,6 +38,12 @@ def jobs_in_group(spark, group: str, fn) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def compiles(spark) -> int:
+    """Whole-stage and expression classes Janino has compiled so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 @pytest.mark.parametrize("path, kind", sorted(CRAWL_ROUND_JOBS))
@@ -57,6 +67,10 @@ def test_crawl_round_job_budget(spark, tmp_path, path, kind):
         spark, f"job-budget-crawl-{path}-{kind}", lambda: eng.crawl_round()
     )
     assert 0 < n <= CRAWL_ROUND_JOBS[(path, kind)], n
+    before = compiles(spark)
+    assert eng.crawl_round()
+    n = compiles(spark) - before
+    assert n <= CRAWL_ROUND_COMPILES[(path, kind)], n
 
 
 # Spark jobs one warm store or engine op starts on a 40-page store, in the

@@ -71,3 +71,81 @@ def test_local_df_rejects_none_in_non_nullable_field(spark):
     column is an error, not a silently null value."""
     with pytest.raises(ValueError, match="'term'"):
         local_df(spark, [(None, "d1", 1)], schemas.POSTINGS)
+
+
+def test_invalidate_caches_rereads_a_zip_only_when_it_changed(tmp_path, monkeypatch):
+    """PySpark's worker calls importlib.invalidate_caches() before every
+    task; an unchanged zip on sys.path is not re-parsed, a rewritten one is
+    re-parsed once and its new module imports."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import goprowl_spark  # noqa: F401  (installs the zip stamps)
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("gp_zip_a.py", "A = 1\n")
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory", lambda p: reads.append(p) or real(p))
+    saved_path, saved_cache = list(sys.path), dict(sys.path_importer_cache)
+    sys.path.insert(0, archive)
+    try:
+        import gp_zip_a
+
+        assert gp_zip_a.A == 1
+        reads.clear()
+        for _ in range(3):
+            importlib.invalidate_caches()
+        assert reads.count(archive) == 0
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("gp_zip_a.py", "A = 1\n")
+            z.writestr("gp_zip_b.py", "B = 2\n")
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1
+        import gp_zip_b
+
+        assert gp_zip_b.B == 2
+    finally:
+        sys.path[:] = saved_path
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+        zipimport._zip_directory_cache.pop(archive, None)
+        for m in ("gp_zip_a", "gp_zip_b"):
+            sys.modules.pop(m, None)
+
+
+def test_python_worker_does_not_reread_pyspark_zip(spark):
+    """In a real UDF worker, once goprowl_spark is imported, a task's
+    invalidate_caches() re-parses no zip, pyspark.zip included."""
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        import goprowl_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        reads = []
+        real = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        has_zip = any(
+            isinstance(i, zipimport.zipimporter) and i.archive.endswith("pyspark.zip")
+            for i in sys.path_importer_cache.values()
+        )
+        yield pa.RecordBatch.from_pydict({"reads": [len(reads)], "has_zip": [has_zip]})
+
+    rows = local_df(spark, [(1,)], "x int").mapInArrow(
+        probe, "reads long, has_zip boolean"
+    ).collect()
+    assert [tuple(r) for r in rows] == [(0, True)]
