@@ -1,8 +1,10 @@
 """Deterministic synthetic web-graph corpus — the sandbox "internet".
 
-The fetch stage joins fetch batches against this table instead of doing HTTP
-(reference fetch: ``collector.Visit`` search/crawlers/colly.go:209-215; the
-30s-timeout HTTP transport config.go:67-74 is irrelevant in-sandbox).
+The crawl fetches from this corpus instead of doing HTTP, either per URL
+(:func:`make_fetcher`) or by joining fetch batches against the table
+(:func:`table_fetcher`) (reference fetch: ``collector.Visit``
+search/crawlers/colly.go:209-215; the 30s-timeout HTTP transport
+config.go:67-74 is irrelevant in-sandbox).
 
 Every attribute of page ``i`` is a pure integer-arithmetic function of ``i``
 and the page count ``N`` — no RNG, no wall clock — so three independent
@@ -341,7 +343,7 @@ def make_fetcher(n: int):
 
     Shaped exactly like the production HTTP fetcher
     (:func:`goprowl_spark.fetchers.make_http_fetcher`): both are
-    :func:`goprowl_spark.parse.fetch_and_parse` over the fetch-batch
+    :func:`goprowl_spark.parse.url_fetcher` over the fetch-batch
     DataFrame and differ only in how one URL is fetched, so schema,
     partitioning and batch shape are identical. Page content comes from
     the same pure Python functions the trace oracle uses, so
@@ -349,7 +351,7 @@ def make_fetcher(n: int):
     to a valid page index fetch-fail with status 0 (reference OnError path,
     colly.go:64-71).
     """
-    from goprowl_spark.parse import fetch_and_parse
+    from goprowl_spark.parse import url_fetcher
 
     def open_fetch():
         # canonical heads by host id: "https://hK.test" == url(i) up to
@@ -372,8 +374,43 @@ def make_fetcher(n: int):
 
         return fetch_page
 
-    def fetch(batch: DataFrame) -> DataFrame:
-        return fetch_and_parse(batch, open_fetch)
+    return url_fetcher(open_fetch)
+
+
+def table_fetcher(table: DataFrame):
+    """A page table (web-archive shape: url, status, fetch_latency_ms,
+    html — :func:`corpus_df` or a real archive scan) as a fetcher:
+    ``fetch(batch, max_urls=None)``.
+
+    The table is inner-joined to the batch, so a batch URL the table lacks
+    gets no row — a failed fetch under the fetcher contract. The batch side
+    broadcasts unless ``max_urls`` says it may exceed
+    ``crawl.BROADCAST_POP_LIMIT``; the table keeps its own partitioning, so
+    page payloads never shuffle. The hits are parsed in the same
+    :func:`goprowl_spark.parse.fetch_and_parse` pass every fetcher uses,
+    each row's stored fields standing in for the fetch."""
+    from goprowl_spark.crawl import BROADCAST_POP_LIMIT
+    from goprowl_spark.parse import fetch_and_parse
+
+    pages = table.select(
+        "url",
+        "status",
+        "fetch_latency_ms",
+        # only a status-200 page is parsed: ship no other html to Python
+        F.when(F.col("status") == 200, F.col("html")).alias("html"),
+    )
+
+    def open_fetch():
+        return lambda url, status, latency_ms, html: (status, latency_ms, html)
+
+    def fetch(batch: DataFrame, max_urls: int | None = None) -> DataFrame:
+        if max_urls is None or max_urls <= BROADCAST_POP_LIMIT:
+            batch = F.broadcast(batch)
+        hit = pages.join(batch, "url", "inner")
+        return fetch_and_parse(
+            hit.select("url", "depth", "status", "fetch_latency_ms", "html"),
+            open_fetch,
+        )
 
     return fetch
 

@@ -8,8 +8,8 @@ becomes an iterative round loop:
     frontier snapshot
       → pop batch        (per-host politeness top-k, host-salted, W1/W2)
       → robots filter    (broadcast join, J2/P5)
-      → fetch → spans    (fetcher: one Arrow pass per batch, HTTP in
-                          production, S1/S4; or join vs page corpus + parse UDF)
+      → fetch → spans    (fetcher: one Arrow pass per batch — HTTP in
+                          production, or a page-table join — S1/S4)
       → explode links    (S3) → candidates at depth+1 (P2)
       → seen-filter probe + exact anti-join vs seen (P4/J1/U7)
       → commit snapshot: documents ∪ new, seen ∪ new, frontier rewritten,
@@ -30,11 +30,7 @@ from pyspark.storagelevel import StorageLevel
 
 from goprowl_spark import schemas, seen_filter
 from goprowl_spark import tables as tables_mod
-from goprowl_spark.parse import (
-    extract_links,
-    parse_spans_udf,
-    with_document_columns,
-)
+from goprowl_spark.parse import extract_links, with_document_columns
 from goprowl_spark.politeness import apply_robots, pop_batch
 from goprowl_spark.session import local_df
 from goprowl_spark.tables import SnapshotCatalog
@@ -43,23 +39,12 @@ from goprowl_spark.tables import SnapshotCatalog
 # generation wins on read); every this-many rounds a compaction rewrites
 # the full table to bound read amplification.
 BLOOM_COMPACT_EVERY = 8
-# Fetch batches at or below this many URLs broadcast into the corpus join
-# (so page payloads never shuffle); larger batches fall back to a shuffle
-# join — at 10^10 scale use politeness budgets to bound batches. The same
-# limit bounds the exact dedup's maybe-seen broadcast and the budgeted
-# frontier's popped-url broadcast.
+# Driver-side broadcast bound, in rows: the exact dedup's maybe-seen set,
+# the budgeted frontier's popped urls and a page table's fetch batch
+# (corpus.table_fetcher) broadcast only at or below it; larger sets fall
+# back to a shuffle join — at 10^10 scale use politeness budgets to bound
+# batches.
 BROADCAST_POP_LIMIT = 2_000_000
-# Fetch-stage tasks per core (fetcher path): more than one smooths
-# stragglers in the Python fetch+parse map stage — with exactly one task
-# per core the slowest task gates the whole wave. The repartition shuffles
-# only (url, depth) rows, negligible next to the per-URL fetch/parse work.
-FETCH_TASKS_PER_CORE = 3
-# ...but task count never exceeds what the batch can fill: small early
-# rounds are BARRIER-bound, not straggler-bound (measured: a 75k-URL round 1
-# ran its fetch wave at 3.5x worse per-URL throughput than the 475k round 3
-# — pure per-task dispatch overhead), so tasks are capped at ~one per this
-# many URLs, floored at one task per core.
-FETCH_TARGET_URLS_PER_TASK = 10_000
 
 
 @dataclass
@@ -140,17 +125,22 @@ class CrawlEngine:
         fetcher=None,
         page_handler=None,
     ):
-        """``corpus``: page table the fetch stage joins against (web-archive
-        shape). ``fetcher``: batch→fetched callable (HTTP shape — work
-        proportional to the batch, nothing scanned); wins if both given.
+        """``fetcher``: ``fetch(batch, max_urls)`` → fetched rows, one per
+        URL it attempted (``parse.url_fetcher`` shape: HTTP or synthetic,
+        work proportional to the batch). ``corpus``: a page table
+        (web-archive shape), crawled through ``corpus.table_fetcher``; a
+        given ``fetcher`` wins.
         ``page_handler``: optional documents-DataFrame→DataFrame transform
         applied to each round's parsed docs before commit — the PageHandler
         callback (U1, reference: search/crawlers/types.go:49, wired
         cmd/crawl.go:113) as a declarative per-round stage."""
         if corpus is None and fetcher is None:
             raise ValueError("need a corpus table or a fetcher")
+        if fetcher is None:
+            from goprowl_spark.corpus import table_fetcher
+
+            fetcher = table_fetcher(corpus)
         self.spark = spark
-        self.corpus = corpus
         self.catalog = SnapshotCatalog(spark, workdir)
         self.config = config
         # Crash-recovery / resume guard. The seen_bloom blobs are encoded by
@@ -532,56 +522,20 @@ class CrawlEngine:
         popped = pop_batch(
             frontier, self.host_budget, cfg.default_budget, cfg.salt
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        batch = popped.select("url", "depth")
+        obs_pop = Observation(f"pop_r{r}_{sid}")
+        batch = popped.select("url", "depth").observe(
+            obs_pop, F.count(F.lit(1)).alias("n")
+        )
 
-        # S1+S4: fetch and parse into span sequences — a fetcher (HTTP
-        # shape, one mapInArrow pass), or a join against a corpus table
-        # (web-archive shape) whose status-200 rows go through the parse
-        # UDF. The batch side is bounded (politeness budgets) so it
-        # broadcasts; page payloads never shuffle.
-        if self.fetcher is not None:
-            par = self.spark.sparkContext.defaultParallelism
-            # n_frontier is the arithmetic pop-size estimate (exact for
-            # unbudgeted BFS; an upper bound under budgets)
-            want = min(
-                par * FETCH_TASKS_PER_CORE,
-                max(par, n_frontier // FETCH_TARGET_URLS_PER_TASK + 1),
-            )
-            fetched = self.fetcher(batch.repartition(want))
-        else:
-            bcast_ok = n_frontier <= BROADCAST_POP_LIMIT
-            hit = self.corpus.select(
-                "url", "status", "html", "fetch_latency_ms"
-            ).join(F.broadcast(batch) if bcast_ok else batch, on="url", how="inner")
-            missing = batch.join(
-                F.broadcast(hit.select("url")) if bcast_ok else hit.select("url"),
-                on="url",
-                how="left_anti",
-            ).select(
-                "url",
-                "depth",
-                F.lit(0).alias("status"),
-                F.lit(None).cast("int").alias("fetch_latency_ms"),
-                F.lit(None)
-                .cast(schemas.DOCUMENTS["spans"].dataType)
-                .alias("spans"),
-            )
-            fetched = hit.select(
-                "url",
-                "depth",
-                "status",
-                "fetch_latency_ms",
-                parse_spans_udf(
-                    F.when(F.col("status") == 200, F.col("html")), F.col("url")
-                ).alias("spans"),
-            ).unionByName(missing)
-
+        # S1+S4: fetch and parse into span sequences in one Arrow pass. A
+        # fetcher returns one row per URL it attempted; a batch URL with no
+        # row failed to fetch. n_frontier bounds the batch (exact for
+        # unbudgeted BFS): the fetcher sizes its stage from it.
+        fetched = self.fetcher(batch, n_frontier)
         obs_fetch = Observation(f"fetch_r{r}_{sid}")
         fetched = fetched.observe(
             obs_fetch,
-            F.count(F.lit(1)).alias("n"),
             F.sum((F.col("status") == 200).cast("long")).alias("ok"),
-            F.sum((F.col("status") != 200).cast("long")).alias("err"),
             F.percentile_approx("fetch_latency_ms", 0.5).alias("p50"),
             F.percentile_approx("fetch_latency_ms", 0.99).alias("p99"),
         )
@@ -611,7 +565,8 @@ class CrawlEngine:
         docs_new.write.mode("overwrite").parquet(docs_path)
         fstats = obs_fetch.get
         dstats = obs_docs.get
-        n_popped = int(fstats["n"] or 0)
+        n_popped = int(obs_pop.get["n"] or 0)
+        n_ok = int(fstats["ok"] or 0)
         mark("fetch_parse_write")
 
         # S3/P2/P3: expand links (from the just-written columnar docs — only
@@ -813,8 +768,8 @@ class CrawlEngine:
                     r,
                     n_frontier,
                     n_popped,
-                    int(fstats["ok"] or 0),
-                    int(fstats["err"] or 0),
+                    n_ok,
+                    n_popped - n_ok,
                     int(dstats["n_links"] or 0),
                     n_cand,
                     n_cand - n_new,

@@ -2,7 +2,7 @@
 
 The synthetic :func:`goprowl_spark.corpus.make_fetcher` computes pages from
 the URL; this module fetches them over HTTP. Both are
-:func:`goprowl_spark.parse.fetch_and_parse` with a different per-URL fetch,
+:func:`goprowl_spark.parse.url_fetcher` over a different per-URL fetch,
 so they share one output schema and ``CrawlEngine`` accepts either
 interchangeably. Reference behaviors mirrored:
 
@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
-
 
 def make_http_fetcher(
     timeout_s: float = 30.0,
@@ -33,14 +31,14 @@ def make_http_fetcher(
     user_agent: str = "goprowl-spark",
     backend: str = "auto",
 ):
-    """Build a fetcher callable: ``fetch(batch(url, depth)) -> DataFrame``
-    of ``url, depth, status, fetch_latency_ms, spans`` — the output of
-    ``corpus.make_fetcher``.
+    """Build a fetcher callable: ``fetch(batch(url, depth), max_urls=None)
+    -> DataFrame`` of ``url, depth, status, fetch_latency_ms, spans`` — the
+    output of ``corpus.make_fetcher``.
 
     ``backend``: ``auto`` uses requests when importable, else the stdlib
     urllib fallback; ``stdlib`` forces the fallback (both paths must record
     identical statuses — pinned by the loopback test)."""
-    from goprowl_spark.parse import fetch_and_parse
+    from goprowl_spark.parse import url_fetcher
 
     def open_fetch():
         try:
@@ -97,7 +95,4 @@ def make_http_fetcher(
 
         return fetch_page
 
-    def fetch(batch: DataFrame) -> DataFrame:
-        return fetch_and_parse(batch, open_fetch)
-
-    return fetch
+    return url_fetcher(open_fetch)

@@ -11,9 +11,12 @@ sequence: one ``title`` span, a ``text`` span per <p>, a ``link`` span per
 <img>/<video>/<audio>/<source> src, offsets in document order.
 
 Implementation: stdlib html.parser (selectolax/lxml are not in the sandbox
-image; the batch shape is identical if a faster parser is dropped in). The
-crawl parses inside the fetch stage (:func:`fetch_and_parse`, one Arrow
-pass per batch); :func:`parse_spans_udf` parses an html column of a table.
+image; the batch shape is identical if a faster parser is dropped in). Every
+fetcher — per-URL (:func:`url_fetcher`) or a page table
+(:func:`goprowl_spark.corpus.table_fetcher`) — parses inside its fetch
+stage (:func:`fetch_and_parse`, one Arrow pass per batch).
+:func:`parse_spans_udf` parses an html column of a table for the contract
+queries that read pages straight from a table, outside any crawl.
 """
 
 from __future__ import annotations
@@ -236,21 +239,25 @@ _FETCHED_ARROW = pa.schema(
 
 
 def fetch_and_parse(batch: DataFrame, open_fetch) -> DataFrame:
-    """``batch(url, depth)`` → ``(url, depth, status, fetch_latency_ms,
-    spans)`` in ONE ``mapInArrow`` pass: fetch each page, parse it into its
-    span sequence in the same Python pass, so page bytes never cross the
-    Arrow boundary (the fetch+parse wave pays one Python stage and ships
-    spans once).
+    """``batch(url, depth, *extra)`` → ``(url, depth, status,
+    fetch_latency_ms, spans)`` in ONE ``mapInArrow`` pass: fetch each page,
+    parse it into its span sequence in the same Python pass, so page bytes
+    never travel back across the Arrow boundary (the fetch+parse wave pays
+    one Python stage and ships spans once).
 
     ``open_fetch()`` runs once per task (a pooled HTTP session lives that
-    long) and returns ``fetch(url) -> (status, latency_ms, html)``; only a
-    status-200 page is parsed, every other row gets empty spans.
+    long) and returns ``fetch(url, *extra) -> (status, latency_ms, html)``,
+    where ``extra`` are the row's values of the batch columns other than
+    url and depth, in batch order (a page table hands over its own stored
+    fields; a per-URL fetch takes the url alone). Only a status-200 page is
+    parsed; every other row gets empty spans.
 
     The spans column is built as a ListArray/StructArray straight from flat
     Python lists: pandas object-dtype list-of-dict rows pay a per-element
     inference/convert on the way back to the JVM, measured ~2x costlier on
     the serialization half of the fetch wave (guide §4.2: hand whole
     batches to vectorized native code)."""
+    extra = [c for c in batch.columns if c not in ("url", "depth")]
 
     def gen(batches):
         fetch = open_fetch()
@@ -261,8 +268,9 @@ def fetch_and_parse(batch: DataFrame, open_fetch) -> DataFrame:
             refs: list[str] = []
             offs: list[int] = []
             offsets = [0]
-            for u in rb.column(0).to_pylist():
-                st, lat, page = fetch(u)
+            cols = [rb.column(i).to_pylist() for i in range(rb.num_columns) if i != 1]
+            for u, *args in zip(*cols):
+                st, lat, page = fetch(u, *args)
                 statuses.append(st)
                 lats.append(lat)
                 if st == 200:
@@ -296,8 +304,43 @@ def fetch_and_parse(batch: DataFrame, open_fetch) -> DataFrame:
             )
 
     return batch.select(
-        "url", F.col("depth").cast("int").alias("depth")
+        "url", F.col("depth").cast("int").alias("depth"), *extra
     ).mapInArrow(gen, schema=from_arrow_schema(_FETCHED_ARROW))
+
+
+# Fetch-stage tasks per core for a per-URL fetch: more than one smooths
+# stragglers in the Python fetch+parse map stage — with exactly one task
+# per core the slowest task gates the whole wave. The repartition shuffles
+# only (url, depth) rows, negligible next to the per-URL fetch/parse work.
+FETCH_TASKS_PER_CORE = 3
+# ...but task count never exceeds what the batch can fill: small early
+# rounds are BARRIER-bound, not straggler-bound (measured: a 75k-URL round 1
+# ran its fetch wave at 3.5x worse per-URL throughput than the 475k round 3
+# — pure per-task dispatch overhead), so tasks are capped at ~one per this
+# many URLs, floored at one task per core.
+FETCH_TARGET_URLS_PER_TASK = 10_000
+
+
+def url_fetcher(open_fetch):
+    """The fetcher over a per-URL fetch (``open_fetch`` as in
+    :func:`fetch_and_parse`): ``fetch(batch, max_urls=None)``.
+
+    Given ``max_urls``, an upper bound on the batch's row count, it first
+    spreads the batch over the fetch tasks that bound can fill; without one
+    it fetches the batch in its own partitioning."""
+
+    def fetch(batch: DataFrame, max_urls: int | None = None) -> DataFrame:
+        if max_urls is not None:
+            par = batch.sparkSession.sparkContext.defaultParallelism
+            batch = batch.repartition(
+                min(
+                    par * FETCH_TASKS_PER_CORE,
+                    max(par, max_urls // FETCH_TARGET_URLS_PER_TASK + 1),
+                )
+            )
+        return fetch_and_parse(batch, open_fetch)
+
+    return fetch
 
 
 def with_document_columns(fetched: DataFrame, round_no: int) -> DataFrame:

@@ -151,136 +151,3 @@ def stream_distinct_keys(
     q.awaitTermination()
     return spark.table(query_name)
 
-
-def sessionize_stream(
-    spark: SparkSession,
-    events_path: str,
-    gap_minutes: int = 30,
-    watermark: str = "30 minutes",
-    query_name: str = "goprowl_stream_sessions",
-    checkpoint_dir: str | None = None,
-    sink_dir: str | None = None,
-) -> DataFrame:
-    """Gap-based sessionization as a CUSTOM STATEFUL streaming operator
-    (``applyInPandasWithState`` + event-time timeouts) — the streaming twin
-    of :func:`operators.sessions.sessionize`.
-
-    Per user, open-session state (start, end, n_events, next session id)
-    lives in the state store; a session closes when a later event arrives
-    past the gap, or when the watermark passes ``session_end + gap``
-    (EventTimeTimeout — late data inside the watermark still extends the
-    session). Only closed sessions are emitted (append mode): sessions
-    still open when the stream pauses stay in state and survive restarts
-    via the checkpoint — exactly the behavior a 100 TB event firehose
-    needs. Batch-equivalence (flushed prefix == batch sessionize) AND
-    checkpointed restart (state stitches sessions across runs) are pinned
-    in tests/test_streaming.py.
-
-    Semantics notes: (1) gap decisions use second-truncated epochs — the
-    SAME truncation the batch sessionizer's ``cast("long")`` applies, so
-    the two agree at any timestamp precision; (2) an event so late it
-    belongs to an ALREADY-FLUSHED session starts a new session — the
-    unavoidable streaming/batch divergence, bounded by the watermark
-    (events inside the watermark merge correctly, extending the open
-    session in either direction); (3) after a timeout flush a tiny inert
-    marker row remains per user to keep session numbering stable across
-    idle periods and restarts — state grows with distinct users ever
-    seen, the deliberate price of batch-identical session ids (drop the
-    marker and ids restart after every idle gap).
-
-    ``events_path`` may be a single parquet file or a directory (new files
-    appearing in the directory are consumed on the next run — the restart
-    path). With ``checkpoint_dir``/``sink_dir`` the query writes durable
-    parquet + checkpoint (restartable); otherwise an in-memory sink.
-    """
-    import pandas as pd
-
-    gap_s = gap_minutes * 60
-    out_schema = (
-        "user_id bigint, session_id bigint, n_events bigint, "
-        "session_start string, session_end string"
-    )
-    state_schema = "start bigint, end bigint, n bigint, sid bigint"
-
-    def fmt(epoch: int) -> str:
-        return pd.Timestamp(epoch, unit="s").strftime("%Y-%m-%d %H:%M:%S")
-
-    def fn(key, pdfs, state):
-        user = key[0]
-        closed = []
-        if state.hasTimedOut:
-            start, end, n, sid = state.get
-            if n:
-                closed.append((user, sid, n, fmt(start), fmt(end)))
-            # keep an empty marker carrying the NEXT session id — removing
-            # the state would reset numbering after a restart (the id
-            # counter must survive flushes; no further timeout is set, so
-            # the marker is inert until the user's next event)
-            state.update((0, 0, 0, sid + 1))
-        else:
-            ts = sorted(
-                int(t)
-                for pdf in pdfs
-                for t in pdf["ts"].astype("int64") // 10**9
-            )
-            if state.exists:
-                start, end, n, sid = state.get
-                if n == 0:  # empty marker left by a timeout flush
-                    start = end = ts[0]
-            else:
-                start = end = ts[0]
-                n = 0
-                sid = 1
-            for t in ts:
-                if n and t - end > gap_s:
-                    closed.append((user, sid, n, fmt(start), fmt(end)))
-                    sid += 1
-                    start, n = t, 0
-                n += 1
-                # late events inside the watermark merge into the open
-                # session and may extend it in EITHER direction
-                start = min(start, t)
-                end = max(end, t)
-            state.update((start, end, n, sid))
-            state.setTimeoutTimestamp((end + gap_s) * 1000)
-        yield pd.DataFrame(
-            closed,
-            columns=[
-                "user_id", "session_id", "n_events",
-                "session_start", "session_end",
-            ],
-        )
-
-    stream = _event_stream(spark, events_path)
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
-    )
-    writer = sessions.writeStream.outputMode("append").trigger(availableNow=True)
-    if sink_dir is not None:
-        if checkpoint_dir is None:
-            raise ValueError(
-                "sink_dir requires checkpoint_dir: an append-mode parquet "
-                "sink is only restartable (and exactly-once) through its "
-                "checkpoint"
-            )
-        q = (
-            writer.format("parquet")
-            .option("path", sink_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-        q.awaitTermination()
-        # explicit schema — a run that closes zero sessions leaves the sink
-        # with no data files (see windowed_event_counts)
-        return spark.read.schema(sessions.schema).parquet(sink_dir)
-    q = writer.format("memory").queryName(query_name).start()
-    q.awaitTermination()
-    return spark.table(query_name)

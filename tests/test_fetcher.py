@@ -9,23 +9,36 @@ N = 300
 
 
 def test_fetcher_crawl_equals_join_crawl(spark, tmp_path):
-    cfg = CrawlConfig(seeds=[corpus.url(0)], max_depth=4)
-    join_eng = CrawlEngine(
-        spark, corpus.corpus_df(spark, N), str(tmp_path / "join"), cfg
-    )
-    join_eng.run()
-    fetch_eng = CrawlEngine(
-        spark,
-        None,
-        str(tmp_path / "fetch"),
-        cfg,
-        fetcher=corpus.make_fetcher(N),
-    )
-    fetch_eng.run()
-    for table in ("seen", "documents", "frontier"):
-        a = sorted(getattr(join_eng, table)().toJSON().collect())
-        b = sorted(getattr(fetch_eng, table)().toJSON().collect())
-        assert a == b, table
+    """Seeds include a URL the corpus lacks: the table fetcher returns no
+    row for it and make_fetcher a status-0 row, and both count it as a
+    fetch error — crawl_metrics agree row for row, budgeted or not."""
+    seeds = [corpus.url(0), corpus.url(5), "https://missing.test/p/1"]
+    for budget in (None, 3):
+        cfg = CrawlConfig(seeds=seeds, max_depth=4, default_budget=budget)
+        join_eng = CrawlEngine(
+            spark, corpus.corpus_df(spark, N), str(tmp_path / f"join{budget}"), cfg
+        )
+        join_eng.run()
+        fetch_eng = CrawlEngine(
+            spark,
+            None,
+            str(tmp_path / f"fetch{budget}"),
+            cfg,
+            fetcher=corpus.make_fetcher(N),
+        )
+        fetch_eng.run()
+        for table in ("seen", "documents", "frontier"):
+            a = sorted(getattr(join_eng, table)().toJSON().collect())
+            b = sorted(getattr(fetch_eng, table)().toJSON().collect())
+            assert a == b, (budget, table)
+        a, b = (
+            sorted(e.metrics().drop("round_wall_sec").toJSON().collect())
+            for e in (join_eng, fetch_eng)
+        )
+        assert a == b, budget
+        # round 1 pops the three seeds; only the missing one fails
+        first = join_eng.metrics().where("round = 1").first()
+        assert (first["popped"], first["fetched_err"]) == (3, 1), budget
 
 
 def test_fetcher_invalid_urls_fail_fetch(spark):

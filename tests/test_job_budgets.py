@@ -19,8 +19,8 @@ N = 300
 CRAWL_ROUND_JOBS = {
     ("fetcher", "bloom"): 22,
     ("fetcher", "cuckoo"): 22,
-    ("corpus", "bloom"): 26,
-    ("corpus", "cuckoo"): 26,
+    ("corpus", "bloom"): 22,
+    ("corpus", "cuckoo"): 22,
 }
 # Janino compiles of a third such round. The first two rounds leave every
 # class they compiled in the codegen cache, so only stages holding a

@@ -68,17 +68,46 @@ def test_column_pruning_reaches_scan(spark):
     assert "ReadSchema: struct<doc_id:bigint,lang:string>" in plan_of(df)
 
 
-def test_fetch_parse_is_one_python_stage(spark):
-    """Fetch and parse run in ONE mapInArrow pass: page bytes never cross
-    the Arrow boundary, and no second Python stage parses them."""
+def _fetcher(spark, kind: str, tmp_path):
+    from goprowl_spark import corpus
+
+    if kind == "make_fetcher":
+        return corpus.make_fetcher(300)
+    # a parquet-backed page table, as a real archive scan plans
+    path = str(tmp_path / "pages")
+    corpus.corpus_df(spark, 300).write.parquet(path)
+    return corpus.table_fetcher(spark.read.parquet(path))
+
+
+@pytest.mark.parametrize("kind", ["make_fetcher", "table_fetcher"])
+def test_fetch_parse_is_one_python_stage(spark, tmp_path, kind):
+    """Fetch and parse run in ONE mapInArrow pass for every fetcher: no
+    second Python stage parses the pages. A page table joins the batch as
+    the broadcast side, so its html never crosses an exchange."""
     from goprowl_spark import corpus
     from goprowl_spark.parse import with_document_columns
 
-    batch = spark.createDataFrame(
-        [(corpus.url(i), 1) for i in range(8)], "url string, depth int"
-    )
-    plan = plan_of(with_document_columns(corpus.make_fetcher(300)(batch), 1))
-    tree = plan.split("\n\n(")[0]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    # below the table's size, as for a real archive
+    spark.conf.set(key, "1024")
+    try:
+        batch = spark.createDataFrame(
+            [(corpus.url(i), 1) for i in range(8)], "url string, depth int"
+        )
+        fetch = _fetcher(spark, kind, tmp_path)
+        plan = plan_of(with_document_columns(fetch(batch), 1))
+    finally:
+        spark.conf.set(key, old)
+    tree, *details = plan.split("\n\n(")
     assert tree.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan, plan
     assert "MapInPandas" not in plan, plan
+    if kind == "table_fetcher":
+        assert "BroadcastHashJoin" in tree, plan
+        assert "SortMergeJoin" not in plan, plan
+        exchanges = [d for d in details if "Exchange" in d.split("\n")[0]]
+        assert exchanges, plan
+        for d in exchanges:
+            inputs = [ln for ln in d.split("\n") if ln.startswith("Input")]
+            assert inputs and "html#" not in inputs[0], d

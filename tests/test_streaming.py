@@ -1,84 +1,12 @@
-"""Structured Streaming operators: the custom stateful sessionizer must
-agree with the batch window-algebra sessionizer on every session the
-watermark has flushed (§2.10; applyInPandasWithState + EventTimeTimeout)."""
+"""Structured Streaming operators: the streaming dedup and watermarked
+window counts must agree with their batch forms, and restart from their
+checkpoints (§2.10)."""
 
 from pyspark.sql import functions as F
 
 from goprowl_spark import streaming
-from goprowl_spark.operators import sessions
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_stream_sessionize_matches_batch_flushed_prefix(spark):
-    path = f"{SF_DIR}/events.parquet"
-    got = streaming.sessionize_stream(
-        spark, path, gap_minutes=30, watermark="30 minutes",
-        query_name="t_sessions",
-    )
-    batch = sessions.sessionize(
-        spark.read.parquet(path), gap_minutes=30
-    )
-    # the stream can only have flushed sessions whose (end + gap) the final
-    # watermark passed; everything it DID emit must match batch exactly
-    got_rows = {
-        (r["user_id"], r["session_id"]): (r["n_events"], r["session_start"], r["session_end"])
-        for r in got.collect()
-    }
-    assert got_rows, "stream emitted no sessions — watermark never advanced?"
-    batch_rows = {
-        (r["user_id"], r["session_id"]): (r["n_events"], r["session_start"], r["session_end"])
-        for r in batch.collect()
-    }
-    for k, v in got_rows.items():
-        assert k in batch_rows, f"stream emitted session {k} unknown to batch"
-        assert batch_rows[k] == v, f"session {k}: stream {v} != batch {batch_rows[k]}"
-    # and it must have flushed a meaningful share (events span >> watermark)
-    assert len(got_rows) >= 0.5 * len(batch_rows)
-
-
-def test_stream_sessionize_checkpoint_restart(spark, tmp_path):
-    """Open-session state must survive a stop/restart: sessions spanning
-    the restart boundary are stitched by the checkpointed state store, so
-    every emitted session still matches the batch sessionizer exactly."""
-    src = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    lo, hi = src.agg(
-        F.min(F.col("ts").cast("timestamp").cast("long")),
-        F.max(F.col("ts").cast("timestamp").cast("long"))
-    ).collect()[0]
-    cut = (lo + hi) // 2
-    events_dir = str(tmp_path / "events")
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-
-    src.where(F.col("ts").cast("timestamp").cast("long") <= cut).write.parquet(events_dir)
-    streaming.sessionize_stream(
-        spark, events_dir, gap_minutes=30, watermark="30 minutes",
-        checkpoint_dir=ckpt, sink_dir=sink,
-    )
-    n_first = spark.read.parquet(sink).count()
-
-    # "restart": new files land, same checkpoint — state carries over
-    src.where(F.col("ts").cast("timestamp").cast("long") > cut).write.mode("append").parquet(
-        events_dir
-    )
-    got = streaming.sessionize_stream(
-        spark, events_dir, gap_minutes=30, watermark="30 minutes",
-        checkpoint_dir=ckpt, sink_dir=sink,
-    )
-    got_rows = {
-        (r["user_id"], r["session_id"]): (r["n_events"], r["session_start"], r["session_end"])
-        for r in got.collect()
-    }
-    assert len(got_rows) > n_first, "second run emitted nothing"
-    batch_rows = {
-        (r["user_id"], r["session_id"]): (r["n_events"], r["session_start"], r["session_end"])
-        for r in sessions.sessionize(src, gap_minutes=30).collect()
-    }
-    # sessions spanning the restart cut exist; if state had NOT carried
-    # over they would be emitted split/renumbered and mismatch batch
-    for k, v in got_rows.items():
-        assert k in batch_rows and batch_rows[k] == v, f"session {k} wrong: {v}"
 
 
 def test_stream_distinct_keys_equals_batch_distinct(spark):
@@ -203,8 +131,3 @@ def test_windowed_counts_sink_edge_cases(spark, tmp_path):
     assert got.columns == [
         "window_start", "event_type", "n_events", "sum_value",
     ]
-
-    with pytest.raises(ValueError, match="checkpoint_dir"):
-        streaming.sessionize_stream(
-            spark, f"{SF_DIR}/events.parquet", sink_dir=str(tmp_path / "s1")
-        )
