@@ -551,7 +551,6 @@ class CrawlEngine:
         obs_docs = Observation(f"docs_r{r}_{sid}")
         docs_new = docs_new.observe(
             obs_docs,
-            F.count(F.lit(1)).alias("n_docs"),
             F.coalesce(
                 F.sum(
                     F.size(

@@ -2,7 +2,8 @@
 engine turns driver-side rows into a DataFrame.
 
 Local sandbox runs use ``local[N]``; on a real cluster the same settings apply
-(AQE, skew-join handling, Arrow). ``shuffle_partitions`` should track total
+(AQE, skew-join handling, Arrow); the driver JVM also gets a JIT policy fitted
+to short-lived, planning-bound processes (see :func:`get_spark`). ``shuffle_partitions`` should track total
 cores locally and ~2-3x total cores on a cluster.
 
 Driver-side rows (a query's terms, an indexed document, a seed list) become
@@ -37,6 +38,36 @@ def get_spark(
     are part of the scale design (hot-host skew, SURVEY.md §4). Arrow is on:
     all Python interop (pandas UDFs, driver rows via :func:`local_df`) is
     Arrow-batched — the engine has no row-at-a-time Python anywhere.
+
+    The driver JVM gets one JIT policy: C2 compiles what is hot by its
+    loops, not what is merely called often. Every JVM this engine starts
+    is short-lived and planning-bound (a CLI command, a benchmark run, a
+    test session). At the JDK 17 defaults its C1/C2 threads burned more
+    CPU than the tasks did (``tools/cpu_split.py``, local[4]): 2.3–7.9 s
+    of a warm ``search_mixed`` block's 8.2–13.9 s against 1.1–1.7 s of
+    executor tasks, and 2.7–7.0 s of a warm ``crawl_polite`` round
+    against 3.0–3.8 s. The policy raises C2's *invocation* thresholds
+    (4–10x), so the planner's many small methods stay in C1, and leaves
+    the *back-edge* (OSR) threshold at its default, so the data loops
+    (whole-stage-codegen ``processNext``, Arrow and parquet decode)
+    reach C2 as soon as before; in ``local[N]`` tasks run in this JVM.
+    With it the JIT took 1.9–3.1 s a block and 1.3–3.8 s a round, task
+    CPU rose 7–8 %, and perfbench's ``cpu_ms_per_item`` fell x0.81 on
+    ``search_mixed`` and x0.83 on ``crawl_polite``. Warm sf0.1 headline
+    queries kept their speed; a fresh JVM's first heavy queries wait
+    longer for C2 (cold pass ~10 % slower). Rejected variants, measured:
+    C1 only (``TieredStopAtLevel=1``) cut ``search_mixed`` CPU further
+    but slowed warm sf0.1 headline queries by ~40 %; also raising
+    ``Tier4BackEdgeThreshold`` (400000) raised crawl task CPU 14–29 %;
+    ``CICompilerCount=2`` changed nothing.
+
+    The policy is driver-only (executors on a cluster keep the JVM
+    defaults) and only applies when this call launches the JVM, i.e. for
+    a process's first session. It is set as
+    ``spark.driver.defaultJavaOptions``, which Spark prepends to
+    ``spark.driver.extraJavaOptions``, so a caller's extra Java options
+    keep it; a caller that passes its own
+    ``spark.driver.defaultJavaOptions`` in ``extra_conf`` replaces it.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -74,6 +105,17 @@ def get_spark(
         # 5 being stages that hold a per-round literal. Static: only a new
         # session reads it.
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        # JIT policy (see the docstring): C2 invocation thresholds raised
+        # from the JDK 17 defaults 5000/600/15000; Tier4BackEdgeThreshold
+        # (40000) deliberately untouched. defaultJavaOptions, not
+        # extraJavaOptions: callers (perfbench) pass their own extra
+        # options through extra_conf, which would silently replace these.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:Tier4InvocationThreshold=50000"
+            " -XX:Tier4MinInvocationThreshold=6000"
+            " -XX:Tier4CompileThreshold=60000",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,4 +1,10 @@
-"""spread_narrow_scan's metadata-only split estimate, and local_df."""
+"""spread_narrow_scan's metadata-only split estimate, local_df, and the
+driver JVM's JIT policy."""
+
+import json
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -149,3 +155,47 @@ def test_python_worker_does_not_reread_pyspark_zip(spark):
         probe, "reads long, has_zip boolean"
     ).collect()
     assert [tuple(r) for r in rows] == [(0, True)]
+
+
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=60000",
+)
+
+
+def test_driver_jvm_runs_the_jit_policy(spark):
+    """get_spark launched the session's JVM with C2's invocation thresholds
+    raised and its back-edge (OSR) threshold left at the default."""
+    bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    args = list(bean.getInputArguments())
+    for flag in JIT_POLICY:
+        assert flag in args, args
+    assert not any("Tier4BackEdgeThreshold" in a for a in args), args
+
+
+def test_jit_policy_survives_callers_extra_java_options(tmp_path):
+    """A caller's spark.driver.extraJavaOptions (perfbench passes its own
+    java.io.tmpdir) adds to the policy instead of replacing it. Needs a
+    fresh JVM: the policy only applies when get_spark launches one."""
+    script = (
+        "import json\n"
+        "from goprowl_spark.session import get_spark\n"
+        "s = get_spark('jit-probe', cores=1, extra_conf="
+        "{'spark.driver.extraJavaOptions': '-Dgoprowl.probe=1'})\n"
+        "bean = s._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()\n"
+        "print('ARGS ' + json.dumps(list(bean.getInputArguments())))\n"
+        "s.stop()\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g", TMPDIR=str(tmp_path))
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (root, env.get("PYTHONPATH")) if p)
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("ARGS ")]
+    assert out.returncode == 0 and lines, out.stderr[-2000:]
+    args = json.loads(lines[-1][len("ARGS "):])
+    for flag in (*JIT_POLICY, "-Dgoprowl.probe=1"):
+        assert flag in args, args
