@@ -3,8 +3,8 @@ engine turns driver-side rows into a DataFrame.
 
 Local sandbox runs use ``local[N]``; on a real cluster the same settings apply
 (AQE, skew-join handling, Arrow); the driver JVM also gets a JIT policy fitted
-to short-lived, planning-bound processes (see :func:`get_spark`). ``shuffle_partitions`` should track total
-cores locally and ~2-3x total cores on a cluster.
+to planning-bound processes (see :func:`get_spark`). ``shuffle_partitions``
+should track total cores locally and ~2-3x total cores on a cluster.
 
 Driver-side rows (a query's terms, an indexed document, a seed list) become
 DataFrames through :func:`local_df`, never ``spark.createDataFrame`` over a
@@ -40,29 +40,25 @@ def get_spark(
     Arrow-batched — the engine has no row-at-a-time Python anywhere.
 
     The driver JVM gets one JIT policy: C2 compiles what is hot by its
-    loops, not what is merely called often. Every JVM this engine starts
-    is short-lived and planning-bound (a CLI command, a benchmark run, a
-    test session). At the JDK 17 defaults its C1/C2 threads burned more
-    CPU than the tasks did (``tools/cpu_split.py``, local[4]): 2.3–7.9 s
-    of a warm ``search_mixed`` block's 8.2–13.9 s against 1.1–1.7 s of
-    executor tasks, and 2.7–7.0 s of a warm ``crawl_polite`` round
-    against 3.0–3.8 s. The policy raises C2's *invocation* thresholds
-    (4–10x), so the planner's many small methods stay in C1, and leaves
-    the *back-edge* (OSR) threshold at its default, so the data loops
-    (whole-stage-codegen ``processNext``, Arrow and parquet decode)
-    reach C2 as soon as before; in ``local[N]`` tasks run in this JVM.
-    With it the JIT took 1.9–3.1 s a block and 1.3–3.8 s a round, task
-    CPU rose 7–8 %, and perfbench's ``cpu_ms_per_item`` fell x0.81 on
-    ``search_mixed`` and x0.83 on ``crawl_polite``. Warm sf0.1 headline
-    queries kept their speed; a fresh JVM's first heavy queries wait
-    longer for C2 (cold pass ~10 % slower). Rejected variants, measured:
-    C1 only (``TieredStopAtLevel=1``) cut ``search_mixed`` CPU further
-    but slowed warm sf0.1 headline queries by ~40 %; also raising
-    ``Tier4BackEdgeThreshold`` (400000) raised crawl task CPU 14–29 %;
-    ``CICompilerCount=2`` changed nothing.
+    loops, not what is merely called often. At the JDK 17 defaults the
+    C1/C2 threads of a planning-bound JVM (a perfbench run, a test
+    session) burned more CPU than its tasks did, most of it compiling the
+    planner's many small methods. The policy raises C2's *invocation*
+    thresholds, so those stay in C1, and leaves the *back-edge* (OSR)
+    threshold at its default: in ``local[N]`` the tasks run in this JVM,
+    and the data loops (whole-stage-codegen ``processNext``, Arrow and
+    parquet decode) must reach C2 as soon as before. The trade: a fresh
+    JVM's first heavy work waits longer for C2, so a cold pass over the
+    sf0.1 headline queries (``bench.py``'s ``headline_queries_total``)
+    and one-shot CLI commands take longer. Warm queries, ``bench.py``'s
+    crawl legs and perfbench's ``cpu_ms_per_item`` do not. Measured, and
+    rejected: C1 only (``TieredStopAtLevel=1``) slowed warm heavy queries
+    by ~40 %; also raising ``Tier4BackEdgeThreshold`` raised crawl task
+    CPU 14–29 %; ``CICompilerCount=2`` changed nothing. The numbers are
+    in CHANGES.md (ISSUE 13).
 
     The policy is driver-only (executors on a cluster keep the JVM
-    defaults) and only applies when this call launches the JVM, i.e. for
+    defaults) and applies only when this call launches the JVM, i.e. for
     a process's first session. It is set as
     ``spark.driver.defaultJavaOptions``, which Spark prepends to
     ``spark.driver.extraJavaOptions``, so a caller's extra Java options

@@ -108,8 +108,12 @@ def search_blocks(h, spark, codegen, seed: int, blocks: int) -> None:
     from goprowl_spark import corpus
     from goprowl_spark.engine import GoProwlSearchEngine
 
-    # set-up and warm-up as wl_search.run: FIXTURES store builds, the last
-    # one serving the blocks, then one block's reads on the first store
+    # A copy of wl_search.run's "# fixture" and "# warm-up" blocks
+    # (perfbench/wl_search.py:159-183, untimed here): FIXTURES store builds,
+    # the last one serving the blocks, then one block's reads on the first
+    # store. perfbench is not edited for this tool, so a change to those
+    # lines must be copied here, or this splits a different workload from
+    # the one cpu_ms_per_item measures.
     p = common.search_params(seed)
     pages = [(corpus.url(i), *wl_search._page_doc(i)) for i in p["doc_pages"]]
     engines = []
