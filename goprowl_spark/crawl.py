@@ -22,10 +22,12 @@ reference trace exactly and resumes from any snapshot (north_rule).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from goprowl_spark import schemas, seen_filter
@@ -54,8 +56,8 @@ class CrawlConfig:
     allowed_hosts: list[str] | None = None  # None = all; reference P1: colly.go:174
     default_budget: int | None = None  # None = unlimited (plain BFS)
     # seen-filter kind: "bloom" (bit-array blobs) or "cuckoo" (fingerprint
-    # tables — same shard/delta contract, and deletable via
-    # seen_filter.delete_cuckoos); crawl traces are identical either way.
+    # tables, same shard/delta contract); crawl traces are identical
+    # either way.
     # A workdir keeps its kind and shard count for life: every commit
     # records both and CrawlEngine refuses to resume with others.
     filter_kind: str = "bloom"
@@ -320,19 +322,26 @@ class CrawlEngine:
           their rows from documents (and the maintained index), and their
           entries from the seen FILTER, so organic re-discovery crawls
           them again. The filter edit rebuilds ONLY the touched shards
-          from the surviving seen rows — exact for both backends, and
-          bounded by the touched shards' membership (seen/n_buckets rows
-          per shard), never the whole filter. The cuckoo backend's
-          O(expired) fingerprint delete (delete_cuckoos) is deliberately
-          NOT used here: it is only sound when the deleted key shares no
-          fingerprint+bucket ambiguity with another live member (see its
-          contract), a condition the engine cannot verify cheaply.
+          from the surviving seen rows — exact for both filter kinds (a
+          cuckoo fingerprint delete is not: keys sharing a fingerprint
+          and a bucket share one entry), and bounded by the touched
+          shards' membership (seen/n_buckets rows per shard), never the
+          whole filter.
         * ``reenqueue=True`` (forced refetch): drop the stale document
           rows and push the urls back into the frontier at their original
           depth. Seen set and filter stay intact — the frontier ⊆ seen
           invariant holds, and a pop never consults the seen set, so the
           refetch happens next round without re-admitting the urls'
           already-seen links.
+
+        Rows leave through the catalog's delete log, as the document
+        store's do: one ``doc_id`` key file for documents, postings and
+        doc_stats and one ``url`` key file for seen and frontier, written
+        on the driver and committed as delete deltas, so the write tracks
+        the expired keys, not the corpus. A requeue appends its frontier
+        rows and deletes their keys in the same commit, which keeps them
+        live (the store's upsert rule). A table whose log is full
+        (``SnapshotCatalog.room``) is rewritten without the keys instead.
 
         Commits one snapshot; returns the number of urls actually expired.
         """
@@ -346,8 +355,8 @@ class CrawlEngine:
         )
         seen = self.seen()
         expired = seen.join(urls_df, "url", "inner").persist()
-        n_expired = expired.count()
-        if n_expired == 0:
+        gone = [row["url"] for row in expired.select("url").collect()]
+        if not gone:
             expired.unpersist()
             return 0
         # the urls may still be frontier-resident (mid-crawl expiry): both
@@ -355,32 +364,42 @@ class CrawlEngine:
         # (a popped-but-unseen url would re-document under the same
         # doc_id), reenqueue to avoid a second frontier row popping the
         # url twice in one unbudgeted round
-        frontier = self.frontier()
-        n_in_frontier = frontier.join(urls_df, "url", "left_semi").count()
+        n_in_frontier = self.frontier().join(urls_df, "url", "left_semi").count()
 
         sid = self.catalog.next_sid()
-        docs_path = self.catalog.stage_path(sid, "documents")
-        self.documents().join(
-            urls_df.withColumnRenamed("url", "doc_id"), "doc_id", "left_anti"
-        ).write.mode("overwrite").parquet(docs_path)
-        tables = {"documents": docs_path}
+        tables: dict = {}
+        appends: dict = {}
+        deletes: dict = {}
 
+        def drop(names: list[str], key: str, deltas: int = 1) -> None:
+            """Delete the expired keys from ``names`` through one delete
+            delta, or rewrite the tables without them when a log is full."""
+            if not names:
+                return
+            room = self.catalog.room(names, deltas, create=False)
+            if room is not None and room >= len(gone):
+                path = self.catalog.stage_path(sid, f"deleted_{key}s")
+                if not os.path.exists(path):
+                    key_schema = T.StructType([T.StructField(key, T.StringType(), False)])
+                    tables_mod.write_local_parquet([(u,) for u in gone], key_schema, path)
+                deletes.update(dict.fromkeys(names, path))
+            else:
+                keys = urls_df.withColumnRenamed("url", key)
+                tables.update({n: self.catalog.without(n, keys) for n in names})
+
+        # an index table is absent until the first round writes one
+        drop(
+            [n for n in ("documents", "postings", "doc_stats") if self.catalog.has_table(n)],
+            "doc_id",
+        )
         if not reenqueue:
-            seen_path = self.catalog.stage_path(sid, "seen")
-            seen.join(urls_df, "url", "left_anti").write.mode(
-                "overwrite"
-            ).parquet(seen_path)
-            tables["seen"] = seen_path
+            drop(["seen"], "url")
             # Rebuild ONLY the touched shards from the surviving seen rows —
-            # exact by construction for BOTH backends. A bare fingerprint
-            # delete (delete_cuckoos) is O(expired) but unsound whenever the
-            # deleted key shares fingerprint+bucket ambiguity with another
-            # live member (see delete_cuckoos' contract and the property
-            # tests in tests/test_properties.py);
-            # a Bloom bit can never be cleared at all. Shard-scoped rebuild
-            # costs O(seen rows hashing to touched shards) — at 4096 shards
-            # and a handful of expired urls that is seen/4096 per shard, not
-            # a 10^10-row filter rebuild.
+            # exact by construction for both filter kinds (a Bloom bit can
+            # never be cleared at all). Shard-scoped rebuild costs O(seen
+            # rows hashing to touched shards) — at 4096 shards and a handful
+            # of expired urls that is seen/4096 per shard, not a 10^10-row
+            # filter rebuild.
             blobs = self._load("seen_bloom", schemas.SEEN_BLOOM)
             latest = (
                 blobs.groupBy("bucket")
@@ -394,7 +413,7 @@ class CrawlEngine:
             touched_buckets = expired.select(
                 seen_filter.shard_of(cfg.n_buckets).alias("bucket")
             ).distinct()
-            surviving = self.spark.read.schema(schemas.SEEN).parquet(seen_path)
+            surviving = seen.join(urls_df, "url", "left_anti")
             surviving_touched = surviving.join(
                 F.broadcast(touched_buckets),
                 seen_filter.shard_of(cfg.n_buckets) == F.col("bucket"),
@@ -408,28 +427,16 @@ class CrawlEngine:
             # in the new table — probes there answer definitively unseen
             tables["seen_bloom"] = untouched.unionByName(rebuilt)
 
-        if cfg.maintain_index:
-            # drop the expired documents' index rows; the survivors are
-            # already tokenized. The USING join puts doc_id first, so select
-            # the schema's order back: the emitted INSERT OVERWRITE … SELECT *
-            # is positional (the store's compaction does the same)
-            expired_ids = urls_df.withColumnRenamed("url", "doc_id")
-            for name, schema in (
-                ("postings", schemas.POSTINGS),
-                ("doc_stats", schemas.DOC_STATS),
-            ):
-                tables[name] = self._load(name, schema).join(
-                    expired_ids, "doc_id", "left_anti"
-                ).select(*schema.fieldNames())
-
         n_frontier = int(props.get("frontier_count", 0))
-        frontier_rest = frontier.join(urls_df, "url", "left_anti")
         if reenqueue:
+            # the requeued rows carry the round delta's columns, as every
+            # other row under the frontier's projection does
             requeued = expired.select(
                 "url",
                 "url_hash",
                 F.parse_url("url", F.lit("HOST")).alias("host"),
                 "depth",
+                "first_seen_round",
             ).select(
                 "url",
                 "url_hash",
@@ -437,18 +444,27 @@ class CrawlEngine:
                 "depth",
                 self._priority().alias("priority"),
                 F.lit(r).alias("discovered_round"),
+                "first_seen_round",
             )
-            tables["frontier"] = frontier_rest.unionByName(requeued)
-            n_frontier += n_expired - n_in_frontier
+            drop(["frontier"], "url", deltas=2)
+            if "frontier" in tables:
+                tables["frontier"] = tables["frontier"].unionByName(
+                    requeued.select(*schemas.FRONTIER.fieldNames())
+                )
+            else:
+                appends["frontier"] = requeued
+            n_frontier += len(gone) - n_in_frontier
         elif n_in_frontier:
-            tables["frontier"] = frontier_rest
+            drop(["frontier"], "url")
             n_frontier -= n_in_frontier
 
         seen_count = int(props.get("seen_count", 0))
         if not reenqueue:
-            seen_count -= n_expired
+            seen_count -= len(gone)
         self.catalog.commit(
             tables,
+            appends=appends,
+            deletes=deletes,
             properties={
                 "round": r,
                 "seen_count": seen_count,
@@ -458,7 +474,7 @@ class CrawlEngine:
             sid=sid,
         )
         expired.unpersist()
-        return n_expired
+        return len(gone)
 
     # ------------------------------------------------------------ one round
 
@@ -486,7 +502,6 @@ class CrawlEngine:
 
         then one atomic manifest swing (Iceberg-commit analog).
         """
-        import os
         import sys
         import time
 

@@ -19,11 +19,11 @@ one node; at the 10^10-URL design point the rebuild uses:
    exact join (zero false drops by construction).
 
 Two filter kinds share that shape: "bloom" (bit arrays) and "cuckoo"
-(fingerprint tables, which can also delete). Each kind's blob format lives
-in one module-private **shard codec** (``_BloomShard``, ``_CuckooShard``):
-build a fresh shard, decode a blob, ``contains``, ``insert``, ``encode``,
-and for cuckoo ``delete``. ``_codec`` is the only place a kind is looked
-up; the Spark-facing functions are kind-agnostic drivers over a codec.
+(fingerprint tables). Each kind's blob format lives in one module-private
+**shard codec** (``_BloomShard``, ``_CuckooShard``): build a fresh shard,
+decode a blob, ``contains``, ``insert``, ``encode``. ``_codec`` is the
+only place a kind is looked up; the Spark-facing functions are
+kind-agnostic drivers over a codec.
 
 A stored blob is the authority on its own geometry, for both kinds: a
 Bloom blob has ``8·len(blob)`` bits and a cuckoo blob's header records its
@@ -33,10 +33,11 @@ every stored shard correctly. ``n_buckets`` is different: it addresses the
 shards (``pmod(url_hash, n_buckets)``), so a workdir must keep it (the
 crawl engine checks it on resume).
 
-There are three cogroups: the shard merge (``update_blooms`` inserting,
-``delete_cuckoos`` deleting), the probe (``probe_blooms``, the split-path
-reference) and the fused probe + update of a crawl round
-(``probe_and_update``).
+There are three cogroups: the shard merge (``update_blooms``), the probe
+(``probe_blooms``, the split-path reference) and the fused probe + update
+of a crawl round (``probe_and_update``). Neither kind deletes: the crawl's
+expiry rebuilds the touched shards from the exact seen table
+(``CrawlEngine.expire_urls``).
 
 At 10^10 URLs with ~1% fpp this is ~12 GB of blobs across all buckets —
 a few MB per bucket at n_buckets=4096, each comfortably a single Arrow
@@ -93,12 +94,12 @@ def _test_bits(blob: np.ndarray, hashes: np.ndarray, m_bits: int) -> np.ndarray:
 #   table   uint16[inner_buckets * slot_cap]  (0 = empty slot)
 #   stash   uint64[stash_len]  (canonical (min_bucket << 16 | fp) overflow)
 #
-# Why a second backend: a Bloom bit-array cannot DELETE (clearing a bit
-# un-sees every URL sharing it), so recrawl/expiry — "this URL's content
-# aged out, fetch it again" — forces a full filter rebuild. A cuckoo
-# filter stores per-entry fingerprints, so delete_cuckoos removes exactly
-# one entry. Same 128 KiB per shard as the default Bloom blob
-# (16384 buckets x 4 slots x 2 bytes) at a ~0.01% fingerprint FPR.
+# Why a second backend: the cuckoo table is the other filter the north
+# rule names, with an exact per-shard member count (n_items) and a slot
+# cap that grows in place. Same 128 KiB per shard as the default Bloom
+# blob (16384 buckets x 4 slots x 2 bytes) at a ~0.01% fingerprint FPR.
+# Neither kind deletes: keys sharing a fingerprint and a candidate bucket
+# share one entry, so removing one could un-see another.
 #
 # Vectorization discipline (input_hint: no per-row Python): probe is pure
 # numpy (gather + compare); insert places the bulk with two vectorized
@@ -170,7 +171,7 @@ def _cuckoo_parts(h: np.ndarray, nb: int) -> tuple[np.ndarray, np.ndarray, np.nd
 
 def _cuckoo_canon(fp: np.ndarray, b1: np.ndarray, b2: np.ndarray) -> np.ndarray:
     """Canonical stash key: (min candidate bucket << 16) | fp — derivable
-    from either bucket via the XOR pair, so probe and delete agree."""
+    from either bucket via the XOR pair, so a probe finds it from either."""
     lo = np.minimum(b1, b2).astype(np.uint64)
     return (lo << np.uint64(16)) | fp.astype(np.uint64)
 
@@ -354,56 +355,11 @@ def _cuckoo_insert(
     return table, stash, cap, int(len(h))
 
 
-def _cuckoo_delete(
-    table: np.ndarray, stash: np.ndarray, nb: int, cap: int, h: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, int]:
-    """Remove one entry per hash (the operation Bloom cannot do). The
-    member test is vectorized; only actual removals touch Python, and a
-    delete batch is a maintenance op (recrawl/expiry), not the hot path.
-
-    CONTRACT (standard cuckoo-filter caveat, Fan et al. 2014 §3.2):
-    deletion is exact only for keys that hold their OWN entry. Keys
-    sharing a fingerprint and a candidate bucket form an ambiguity class
-    that this deduplicating filter may serve with one physical entry —
-    deleting ANY class member (or a never-inserted look-alike) removes
-    the shared entry and orphans the rest into false negatives, in either
-    direction (tests/test_properties.py pins both the invariant and the
-    caveat). Inherent to every fingerprint filter, not a bug. The crawl's
-    expiry path (CrawlEngine.expire_urls) therefore does NOT call this at
-    all — it rebuilds the touched shards from the exact seen table. Use
-    this primitive when ambiguity is acceptable (a rare spurious
-    re-crawl) or provably absent. A true non-member (no fingerprint match
-    anywhere) is a safe no-op."""
-    h = np.unique(h)
-    member = _cuckoo_contains(table, stash, nb, cap, h)
-    h = h[member]
-    if len(h) == 0:
-        return table, stash, 0
-    fp, b1, b2 = _cuckoo_parts(h, nb)
-    canon = _cuckoo_canon(fp, b1, b2)
-    t = table.reshape(nb, cap)
-    removed = 0
-    stash_list = stash.tolist()
-    for i in range(len(h)):
-        hit = False
-        for b in (int(b1[i]), int(b2[i])):
-            slots = np.flatnonzero(t[b] == fp[i])
-            if len(slots):
-                t[b, slots[0]] = 0
-                hit = True
-                break
-        if not hit and canon[i] in stash_list:
-            stash_list.remove(canon[i])
-            hit = True
-        removed += int(hit)
-    return table, np.array(stash_list, dtype=np.uint64), removed
-
-
 # --------------------------------------------------------------------------
 # Shard codecs: everything that knows a blob format. A shard is opened
 # fresh (at the caller's fresh-shard geometry) or decoded from a stored blob
-# (at the geometry the blob records), then mutated in place by insert /
-# delete, which return the change in the shard's member count.
+# (at the geometry the blob records), then mutated in place by insert,
+# which returns the change in the shard's member count.
 
 
 class _BloomShard:
@@ -460,12 +416,6 @@ class _CuckooShard:
             self.table, self.stash, self.nb, self.cap, h
         )
         return n
-
-    def delete(self, h: np.ndarray) -> int:
-        self.table, self.stash, n = _cuckoo_delete(
-            self.table, self.stash, self.nb, self.cap, h
-        )
-        return -n
 
     def encode(self) -> bytes:
         return _cuckoo_encode(self.table, self.stash, self.nb, self.cap)
@@ -537,24 +487,20 @@ def _merge_shards(
     emit_untouched: bool,
     decode,
     fresh,
-    op: str,
 ) -> DataFrame:
     """Shard-merge cogroup: each bucket's latest shard takes its hashes
-    through the codec's ``op`` ("insert" or "delete") and is emitted
-    stamped ``gen``. A bucket without a shard starts from
-    ``fresh()``, or is skipped when ``fresh`` is None. A bucket without
+    through the codec's ``insert`` and is emitted stamped ``gen``. A
+    bucket without a shard starts from ``fresh()``. A bucket without
     hashes is emitted only under ``emit_untouched``."""
     hashed = hashes.select(shard_of(n_buckets).alias("bucket"), "url_hash")
     out = to_arrow_schema(schemas.SEEN_BLOOM)
 
     def merge(key, blobs: pa.Table, hashes: pa.Table) -> pa.Table:
-        if (blobs.num_rows == 0 and (hashes.num_rows == 0 or fresh is None)) or (
-            hashes.num_rows == 0 and not emit_untouched
-        ):
+        if hashes.num_rows == 0 and (blobs.num_rows == 0 or not emit_untouched):
             return out.empty_table()
         shard, n = _latest(decode, blobs) if blobs.num_rows else (fresh(), 0)
         if hashes.num_rows:
-            n += getattr(shard, op)(hashes.column("url_hash").to_numpy())
+            n += shard.insert(hashes.column("url_hash").to_numpy())
         return pa.Table.from_pydict(
             {"bucket": [key[0].as_py()], "filter_blob": [shard.encode()],
              "n_items": [n], "gen": [gen]},
@@ -597,24 +543,7 @@ def update_blooms(
     """
     decode, fresh = _codec(kind, bits_per_bucket, inner_buckets, slot_cap)
     return _merge_shards(
-        seen_bloom, new_hashes, n_buckets, gen, emit_untouched, decode, fresh,
-        "insert",
-    )
-
-
-def delete_cuckoos(
-    seen_cuckoo: DataFrame,
-    del_hashes: DataFrame,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    gen: int = 0,
-) -> DataFrame:
-    """Remove url hashes from their shard's cuckoo filter — the
-    recrawl/expiry primitive Bloom cannot offer (see _cuckoo_delete's
-    ambiguity contract). Emits only touched shards stamped ``gen`` (append,
-    latest wins), exactly like a delta update round."""
-    return _merge_shards(
-        seen_cuckoo, del_hashes, n_buckets, gen, False, _CuckooShard.decode,
-        None, "delete",
+        seen_bloom, new_hashes, n_buckets, gen, emit_untouched, decode, fresh
     )
 
 

@@ -21,9 +21,11 @@ travel / resume story, and a write appends instead of rewriting
 appends the batch's documents, postings and doc_stats rows plus one delete
 delta of the batch's ``doc_id``s that all three tables' delete logs share;
 a delete appends only a one-key delete delta, written on the driver (no
-Spark job). Reads hide the superseded rows. A write that would take a
-table past MAX_DELTAS or MAX_DELETED_KEYS compacts instead: it replaces all
-three tables with their live rows plus the batch, which empties the logs.
+Spark job). Reads hide the superseded rows. The catalog owns the log's
+bounds (see tables.py): a write that
+``SnapshotCatalog.room`` turns away compacts instead, replacing all three
+tables with ``SnapshotCatalog.without`` the keys plus the batch, which
+empties the logs.
 
 The batch is read by each table write, so no input may be a PythonRDD: a
 ``createDataFrame`` over a Python list (``Scan ExistingRDD``) costs ~0.35 s
@@ -62,18 +64,6 @@ SCHEMAS = {
 # a delete delta: the doc_ids whose older rows it hides
 KEY_SCHEMA = T.StructType([T.StructField("doc_id", T.StringType(), False)])
 
-# A store table stays merge-on-read while its manifest entry lists at most
-# this many directories (data deltas plus delete deltas). Every read lists
-# each directory and adds a CASE branch per delete delta to its filter, so
-# its fixed cost grows with the count; past it a write compacts instead.
-MAX_DELTAS = 16
-# ... and while its delete log holds at most this many keys. Every read
-# loads the whole log on the driver and plans it as literal hash sets of
-# keys and of (file, key) pairs — up to MAX_DELTAS pairs a key, ~20 us of
-# planning each — so a read's fixed cost grows with it; a batch with more
-# keys than this compacts on its own.
-MAX_DELETED_KEYS = 4096
-
 
 class DocumentStore:
     def __init__(self, spark: SparkSession, workdir: str, maintain_index: bool = True):
@@ -99,35 +89,6 @@ class DocumentStore:
 
     # ---------------------------------------------------------- writes
 
-    def _room(self, deltas: int, create: bool) -> int | None:
-        """How many more deleted keys every store table's log can take in a
-        write that adds ``deltas`` directories to each; None when the write
-        would take a table past MAX_DELTAS, or a table is absent and the
-        write cannot ``create`` it."""
-        room = MAX_DELETED_KEYS
-        for name in self._tables():
-            counts = self.catalog.delta_counts(name)
-            if counts is None and not create:
-                return None
-            dirs, keys = counts or (0, 0)
-            if dirs + deltas > MAX_DELTAS:
-                return None
-            room = min(room, MAX_DELETED_KEYS - keys)
-        return room
-
-    def _compact(self, keys: DataFrame, new: dict[str, DataFrame]) -> int:
-        """Replace every store table with its live rows minus ``keys``,
-        plus the ``new`` rows — the full rewrite, and an empty delete log."""
-        tables = {}
-        for name in self._tables():
-            # a USING join puts doc_id first; keep the table's column order,
-            # which the emitted INSERT ... SELECT * relies on
-            live = self._load(name).join(keys, "doc_id", "left_anti").select(
-                *SCHEMAS[name].fieldNames()
-            )
-            tables[name] = live.unionByName(new[name]) if name in new else live
-        return self.catalog.commit(tables)
-
     def batch_store(self, docs: DataFrame) -> int:
         """Upsert by doc_id (S5/S6: bleve MERGE semantics, one snapshot per
         batch — the reference's per-crawl bleve batch). Index tables update
@@ -147,7 +108,7 @@ class DocumentStore:
             if self.maintain_index:
                 new[POSTINGS] = ranking.build_postings(docs)
                 new[DOC_STATS] = ranking.build_doc_stats(docs)
-            room = self._room(deltas=2, create=True)
+            room = self.catalog.room(self._tables(), deltas=2, create=True)
             if room is not None:
                 # the documents delta is staged first: its footers count the
                 # batch's keys, and the keys are read back on the driver, so
@@ -167,16 +128,23 @@ class DocumentStore:
                         sid=sid,
                     )
                 shutil.rmtree(staged)
-            return self._compact(docs.select("doc_id"), new)
+            keys = docs.select("doc_id")
+            return self.catalog.commit({
+                n: self.catalog.without(n, keys, SCHEMAS[n]).unionByName(new[n])
+                for n in self._tables()
+            })
         finally:
             if not caller_cached:
                 docs.unpersist()
 
     def delete(self, doc_id: str) -> int:
         """S10: row-level delete (DELETE FROM documents WHERE url = ?)."""
-        room = self._room(deltas=1, create=False)
+        room = self.catalog.room(self._tables(), deltas=1, create=False)
         if room is None or room < 1:
-            return self._compact(local_df(self.spark, [(doc_id,)], KEY_SCHEMA), {})
+            keys = local_df(self.spark, [(doc_id,)], KEY_SCHEMA)
+            return self.catalog.commit(
+                {n: self.catalog.without(n, keys, SCHEMAS[n]) for n in self._tables()}
+            )
         sid = self.catalog.next_sid()
         deleted = self.catalog.stage_path(sid, "deleted")
         write_local_parquet([(doc_id,)], KEY_SCHEMA, deleted)

@@ -31,6 +31,12 @@ contract over plain parquet + a JSON manifest:
   whose sid is greater than the sid of the directory the row's file sits
   in — a key deleted and re-appended in one commit stays live. Replacing
   a table starts it with an empty log;
+* the catalog owns the log's bounds, MAX_DELTAS and MAX_DELETED_KEYS, for
+  every writer that deletes (the document store's upserts and deletes, the
+  crawl's ``expire_urls``): :meth:`SnapshotCatalog.room` says whether a
+  write may still log its keys, and :meth:`SnapshotCatalog.without` gives
+  the live rows minus those keys for the compacting rewrite it does
+  instead;
 * :meth:`load` reads any table at any snapshot → the crawl resumes exactly
   from a checkpoint (north_rule requirement). A table with a delete log is
   read through one filter (see :func:`_live_rows`): no join, no extra
@@ -56,6 +62,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from goprowl_spark.session import arrow_table, local_df
+
+# The delete log's bounds. A table stays merge-on-read while its manifest
+# entry lists at most MAX_DELTAS directories, data deltas plus delete
+# deltas: every load lists each of them, and _live_rows opens each delete
+# delta on the driver, so a read's fixed cost grows with the count.
+MAX_DELTAS = 16
+# ... and while its delete log holds at most MAX_DELETED_KEYS keys: every
+# load reads the whole log on the driver and plans it as two padded IN hash
+# sets, one of keys and one of (file sid, key) pairs — a pair per older
+# data directory a key, ~20 us of planning each. A write past either bound
+# compacts instead (SnapshotCatalog.room, SnapshotCatalog.without).
+MAX_DELETED_KEYS = 4096
 
 
 class SnapshotCatalog:
@@ -225,9 +243,14 @@ class SnapshotCatalog:
                     **old, "deletes": old.get("deletes", []) + [deletes[name]]
                 }
                 if self.emit_iceberg_sql:
+                    # a projected entry's rows live in its base table
+                    view = projections.get(name)
+                    target = f"{name}_base" if old["columns"] else name
                     stmts.extend(
-                        _row_delta_sql(name, deletes[name], appends.get(name))
+                        _row_delta_sql(target, deletes[name], appends.get(name))
                     )
+                    if view:
+                        stmts.append(iceberg_projection_view_sql(name, target, view))
             manifest["snapshots"][str(sid)] = {
                 "tables": entries,
                 "properties": properties or {},
@@ -283,6 +306,36 @@ class SnapshotCatalog:
         deletes = e.get("deletes", [])
         keys = sum(n for p in deletes for _, n in parquet_file_rows(p))
         return len(e["paths"]) + len(deletes), keys
+
+    def room(self, names: list[str], deltas: int, create: bool) -> int | None:
+        """How many more deleted keys the log of every table in ``names``
+        can take in a commit that adds ``deltas`` directories to each; None
+        when that commit would take a table past MAX_DELTAS, or a table is
+        absent and the commit cannot ``create`` it. A writer told None, or
+        less room than it has keys, compacts through :meth:`without`."""
+        room = MAX_DELETED_KEYS
+        for name in names:
+            counts = self.delta_counts(name)
+            if counts is None and not create:
+                return None
+            dirs, keys = counts or (0, 0)
+            if dirs + deltas > MAX_DELTAS:
+                return None
+            room = min(room, MAX_DELETED_KEYS - keys)
+        return room
+
+    def without(
+        self, name: str, keys: DataFrame, schema: T.StructType | None = None
+    ) -> DataFrame:
+        """The live rows of ``name`` (empty of ``schema`` when absent, as
+        :meth:`load`) minus those whose key is in ``keys``, a one-column
+        frame named for the key. Committed as a replace, this is the
+        compaction: one file set and an empty delete log. The rows keep the
+        loaded table's column order, which a USING join would otherwise
+        lead with the key; the emitted INSERT OVERWRITE … SELECT * is
+        positional."""
+        live = self.load(name, schema=schema)
+        return live.join(keys, keys.columns[0], "left_anti").select(*live.columns)
 
     def files(self, table: str, snapshot_id: int | None = None) -> list[str]:
         """The ``*.parquet`` data files of ``table`` at ``snapshot_id``

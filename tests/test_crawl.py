@@ -412,9 +412,9 @@ def test_expire_forced_refetch(spark, tmp_path, kind):
 @pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
 def test_expire_forget_organic_rediscovery(spark, tmp_path, kind):
     """reenqueue=False: the url vanishes from seen, documents AND the
-    seen filter (per-shard fingerprint delete on cuckoo; full rebuild on
-    Bloom), so when its parent refetches, the link is rediscovered as a
-    brand-new candidate and recrawled organically."""
+    seen filter (its touched shards rebuilt from the surviving seen rows),
+    so when its parent refetches, the link is rediscovered as a brand-new
+    candidate and recrawled organically."""
     from goprowl_spark import schemas, seen_filter
 
     seeds = [corpus.url(0)]
@@ -430,9 +430,9 @@ def test_expire_forget_organic_rediscovery(spark, tmp_path, kind):
     assert engine.seen().where(F.col("url") == x).count() == 0
     assert engine.documents().where(F.col("doc_id") == x).count() == 0
     # the filter genuinely forgot x: a direct probe answers unseen
-    # (cuckoo deletes the fingerprint; bloom rebuilt from surviving seen —
-    # x's bits may survive via collisions on bloom, so only assert there
-    # when the probe CAN be definitive)
+    # (both kinds rebuild x's shard from surviving seen — x's bits may
+    # survive via collisions on bloom, so only assert there when the
+    # probe CAN be definitive)
     xdf = engine.seen().sparkSession.createDataFrame([(x,)], "url string").select(
         "url", F.xxhash64("url").alias("url_hash")
     )
@@ -486,11 +486,20 @@ def test_priority_fn_drives_budgeted_pop_order(spark, tmp_path):
 
 
 @pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
-def test_expire_mid_crawl_keeps_frontier_consistent(spark, tmp_path, kind):
+@pytest.mark.parametrize("bound", ["log", "compact"])
+def test_expire_mid_crawl_keeps_frontier_consistent(
+    spark, tmp_path, monkeypatch, kind, bound
+):
     """Expiring a url that is still FRONTIER-RESIDENT (mid-crawl) must
     drop its frontier row too: forget mode would otherwise pop an unseen
     url (duplicate doc_id after organic rediscovery), and reenqueue mode
-    would pop the url twice in one unbudgeted round."""
+    would pop the url twice in one unbudgeted round. Holds both when the
+    expiry logs delete deltas and when full logs make it rewrite the
+    tables instead."""
+    from goprowl_spark import tables
+
+    if bound == "compact":
+        monkeypatch.setattr(tables, "MAX_DELTAS", 1)
     seeds = [corpus.url(0)]
     cfg = CrawlConfig(seeds=seeds, max_depth=3, filter_kind=kind)
     engine = make_engine(spark, tmp_path / kind, cfg)
@@ -515,6 +524,46 @@ def test_expire_mid_crawl_keeps_frontier_consistent(spark, tmp_path, kind):
     # every document's url is in the seen set (frontier ⊆ seen held)
     missing = docs.join(engine.seen(), docs["doc_id"] == F.col("url"), "left_anti")
     assert missing.count() == 0
+
+
+@pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
+def test_expire_urls_writes_track_the_keys(spark, tmp_path, kind):
+    """Within the delete log's bounds an expiry rewrites no table: in both
+    modes documents, postings and doc_stats keep their data directories
+    and gain one delete delta holding the expired doc_id; seen gains one
+    holding the url in forget mode only; a requeue appends its frontier
+    row and deletes its key in the same commit."""
+    import pyarrow.parquet as pq
+
+    cfg = CrawlConfig(
+        seeds=[corpus.url(0)], max_depth=3, filter_kind=kind, maintain_index=True
+    )
+    engine = make_engine(spark, tmp_path, cfg)
+    engine.run()
+    docs = sorted(r["doc_id"] for r in engine.documents().collect())
+    names = ("documents", "postings", "doc_stats", "seen", "frontier")
+
+    def entries():
+        return {n: engine.catalog._entry(n, None)[1] for n in names}
+
+    for reenqueue, x in ((False, docs[0]), (True, docs[1])):
+        before = entries()
+        assert engine.expire_urls([x], reenqueue=reenqueue) == 1
+        after = entries()
+        logged = {"documents", "postings", "doc_stats"}
+        logged |= {"frontier"} if reenqueue else {"seen"}
+        for name in names:
+            old, new = before[name], after[name]
+            grew = name == "frontier" and reenqueue
+            assert new["paths"][: len(old["paths"])] == old["paths"], name
+            assert len(new["paths"]) == len(old["paths"]) + grew, name
+            assert new["deletes"][: len(old["deletes"])] == old["deletes"], name
+            assert len(new["deletes"]) == len(old["deletes"]) + (name in logged), name
+            if name in logged:
+                keys = pq.read_table(new["deletes"][-1]).column(0).to_pylist()
+                assert keys == [x], name
+    assert engine.frontier().where(F.col("url") == docs[1]).count() == 1
+    assert engine.seen().where(F.col("url") == docs[0]).count() == 0
 
 
 def test_round_jobs_all_carry_the_callers_job_group(spark, tmp_path):

@@ -95,7 +95,7 @@ def test_merge_upsert_sql_matches_spark_end_state(spark, tmp_path):
         lambda: store.batch_store(docs([("a", "w")])),
     ]
     # enough deletes to pass MAX_DELTAS: the last write compacts
-    ops += [lambda: store.delete("zz")] * (store_mod.MAX_DELTAS - 6)
+    ops += [lambda: store.delete("zz")] * (tb.MAX_DELTAS - 6)
     for op in ops:
         n_before = len(store.catalog.emitted_sql)
         op()
@@ -113,12 +113,14 @@ def test_merge_upsert_sql_matches_spark_end_state(spark, tmp_path):
     assert store.catalog.delta_counts(store_mod.TABLE) == (1, 0)  # compacted
 
 
-def test_expire_urls_rewrites_index_tables_in_schema_order(spark, tmp_path):
-    """An expiry on an index-maintaining crawl replaces postings and
-    doc_stats with files in the tables' column order (read from the
-    footers, no job), so the positional INSERT OVERWRITE … SELECT * it
-    emits, replayed on DuckDB over those files, gives the rows the catalog
-    loads."""
+def test_expire_urls_sql_matches_catalog(spark, tmp_path, monkeypatch):
+    """A crawl with index upkeep, replayed on a DuckDB mirror commit by
+    commit, through expiries in both modes — delete deltas on documents,
+    postings, doc_stats and the projected seen and frontier entries, and a
+    requeue's MERGE into the frontier's base table — and a round after
+    them: after each op the mirror holds the rows the catalog loads. Past
+    MAX_DELTAS an expiry rewrites the tables instead, and the files its
+    INSERT OVERWRITE … SELECT * reads keep the tables' column order."""
     import os
     from collections import Counter
 
@@ -127,29 +129,72 @@ def test_expire_urls_rewrites_index_tables_in_schema_order(spark, tmp_path):
     from goprowl_spark import corpus
     from goprowl_spark.crawl import CrawlConfig, CrawlEngine
 
-    cfg = CrawlConfig(seeds=[corpus.url(0)], max_depth=1, maintain_index=True)
+    cfg = CrawlConfig(seeds=[corpus.url(0)], max_depth=2, maintain_index=True)
     eng = CrawlEngine(
         spark, None, str(tmp_path), cfg, fetcher=corpus.make_fetcher(50)
     )
-    eng.run()
-    gone = sorted(r["doc_id"] for r in eng.documents().collect())[0]
     eng.catalog.emit_iceberg_sql = True
-    assert eng.expire_urls([gone]) == 1
     mirror = DuckDBMirror()
-    for name, schema in (("postings", schemas.POSTINGS), ("doc_stats", schemas.DOC_STATS)):
-        path = _latest_entry(tmp_path, name)["paths"][-1]
-        for f in tb.parquet_data_files(path):
-            assert pq.read_schema(os.path.join(path, f)).names == schema.fieldNames()
-        (stmt,) = [
-            s for s in eng.catalog.emitted_sql
-            if s.startswith(f"INSERT OVERWRITE spark_catalog.goprowl.{name}\n")
-        ]
+    index = {"documents": schemas.DOCUMENTS, "postings": schemas.POSTINGS,
+             "doc_stats": schemas.DOC_STATS}
+    for name, schema in index.items():
         mirror.execute(tb.iceberg_create_table_sql(name, schema))
-        mirror.execute(stmt, sources={"staged": path})
-        got = Counter(mirror.con.execute(f"SELECT * FROM goprowl.{name}").fetchall())
-        want = Counter(tuple(r) for r in eng.catalog.load(name).collect())
-        assert got == want, name
-        assert gone not in {r[schema.fieldNames().index("doc_id")] for r in got}
+    cols = {
+        "documents": "doc_id, fetched_round, title",
+        "postings": "term, doc_id, tf",
+        "doc_stats": "doc_id, doc_len",
+        "seen": "url_hash, url, depth, first_seen_round",
+        "frontier": "url, url_hash, host, depth, priority, discovered_round",
+    }
+
+    def replay(op, only=None):
+        n_before = len(eng.catalog.emitted_sql)
+        op()
+        for stmt in eng.catalog.emitted_sql[n_before:]:
+            name = re.search(r"goprowl\.(\w+)", stmt).group(1)
+            if only is not None and name not in only:
+                continue
+            if stmt.startswith("CREATE OR REPLACE VIEW"):
+                mirror.execute(stmt)
+                continue
+            e = _latest_entry(tmp_path, re.sub("_base$", "", name))
+            source = e["deletes"][-1] if stmt.startswith("DELETE") else e["paths"][-1]
+            mirror.execute(stmt, sources={"staged": source, "updates": source})
+        for name in only or cols:
+            c = cols[name]
+            got = Counter(mirror.con.execute(f"SELECT {c} FROM goprowl.{name}").fetchall())
+            table = eng.catalog.load(name, schema=index.get(name))
+            want = Counter(tuple(r) for r in table.select(*c.split(", ")).collect())
+            assert got == want, name
+        return eng.catalog.emitted_sql[n_before:]
+
+    replay(eng.start)
+    for _ in range(2):
+        replay(eng.crawl_round)
+    docs = sorted(r["doc_id"] for r in eng.documents().collect())
+    queued = sorted(r["url"] for r in eng.frontier().collect())
+    assert len(docs) >= 3 and len(queued) >= 2
+
+    forget = replay(lambda: eng.expire_urls([docs[0], queued[0]]))
+    requeue = replay(lambda: eng.expire_urls([docs[1], queued[1]], reenqueue=True))
+    targets = {s.split("\n")[0] for s in forget + requeue if s.startswith(("DELETE", "MERGE"))}
+    assert targets == {
+        *(f"DELETE FROM spark_catalog.goprowl.{n}" for n in ("documents", "postings", "doc_stats")),
+        "DELETE FROM spark_catalog.goprowl.seen_base",
+        "DELETE FROM spark_catalog.goprowl.frontier_base",
+        "MERGE INTO spark_catalog.goprowl.frontier_base t",
+    }, targets
+    replay(eng.crawl_round)
+
+    monkeypatch.setattr(tb, "MAX_DELTAS", 1)
+    replay(lambda: eng.expire_urls([docs[2]]), only=index)
+    for name, schema in index.items():
+        e = _latest_entry(tmp_path, name)
+        assert e["deletes"] == [] and len(e["paths"]) == 1
+        for f in tb.parquet_data_files(e["paths"][0]):
+            path = os.path.join(e["paths"][0], f)
+            assert pq.read_schema(path).names == schema.fieldNames()
+    assert not eng.documents().where(f"doc_id = '{docs[2]}'").count()
 
 
 def _replay_commit(mirror, stmts, tables, appends):

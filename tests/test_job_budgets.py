@@ -142,3 +142,41 @@ def op_jobs(spark, tmp_path_factory):
 @pytest.mark.parametrize("op", list(OP_JOBS))
 def test_store_and_engine_op_job_budget(op_jobs, op):
     assert op_jobs[op] <= OP_JOBS[op], op_jobs
+
+
+# Spark jobs one warm expire_urls of a single fetched url starts, by mode,
+# on a cuckoo crawl with index upkeep whose delete logs have room. The
+# rows leave through driver-written delete deltas; the jobs are the loads,
+# the expired-url collect, the frontier probe count, and the forget mode's
+# shard rebuild or the requeue's frontier append.
+EXPIRE_JOBS = {"forget": 16, "reenqueue": 9}
+
+
+@pytest.fixture(scope="module")
+def expire_jobs(spark, tmp_path_factory):
+    """Jobs per expire_urls mode on the second of two passes (the first
+    warms both modes up), each pass expiring a fresh document."""
+    cfg = CrawlConfig(
+        seeds=[corpus.url(0)], max_depth=3, filter_kind="cuckoo", maintain_index=True
+    )
+    eng = CrawlEngine(
+        spark, None, str(tmp_path_factory.mktemp("expire")), cfg,
+        fetcher=corpus.make_fetcher(N),
+    )
+    eng.run()
+    docs = iter(sorted(r["doc_id"] for r in eng.documents().collect()))
+    modes = {"forget": False, "reenqueue": True}
+    for reenqueue in modes.values():
+        assert eng.expire_urls([next(docs)], reenqueue=reenqueue) == 1
+    return {
+        mode: jobs_in_group(
+            spark, f"job-budget-expire-{mode}",
+            lambda: eng.expire_urls([next(docs)], reenqueue=reenqueue),
+        )
+        for mode, reenqueue in modes.items()
+    }
+
+
+@pytest.mark.parametrize("mode", list(EXPIRE_JOBS))
+def test_expire_urls_job_budget(expire_jobs, mode):
+    assert 0 < expire_jobs[mode] <= EXPIRE_JOBS[mode], expire_jobs

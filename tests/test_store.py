@@ -132,11 +132,11 @@ def test_store_matches_a_dict_model_over_random_ops(spark, tmp_path, monkeypatch
     import random
     from collections import Counter
 
-    from goprowl_spark import ranking
+    from goprowl_spark import ranking, tables
     from goprowl_spark import store as store_mod
     from goprowl_spark.session import local_df
 
-    monkeypatch.setattr(store_mod, "MAX_DELETED_KEYS", 8)
+    monkeypatch.setattr(tables, "MAX_DELETED_KEYS", 8)
     rng = random.Random(7)
     words = ["alpha", "beta", "gamma", "delta", "eps"]
     store = DocumentStore(spark, str(tmp_path))
