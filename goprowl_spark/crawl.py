@@ -27,7 +27,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from goprowl_spark import schemas, seen_filter
@@ -37,10 +36,6 @@ from goprowl_spark.politeness import apply_robots, pop_batch
 from goprowl_spark.session import local_df
 from goprowl_spark.tables import SnapshotCatalog
 
-# Bloom commits are per-round DELTAS (only touched buckets, latest
-# generation wins on read); every this-many rounds a compaction rewrites
-# the full table to bound read amplification.
-BLOOM_COMPACT_EVERY = 8
 # Driver-side broadcast bound, in rows: the exact dedup's maybe-seen set,
 # the budgeted frontier's popped urls and a page table's fetch batch
 # (corpus.table_fetcher) broadcast only at or below it; larger sets fall
@@ -334,14 +329,15 @@ class CrawlEngine:
           refetch happens next round without re-admitting the urls'
           already-seen links.
 
-        Rows leave through the catalog's delete log, as the document
+        Rows leave through ``SnapshotCatalog.remove``, as the document
         store's do: one ``doc_id`` key file for documents, postings and
-        doc_stats and one ``url`` key file for seen and frontier, written
-        on the driver and committed as delete deltas, so the write tracks
-        the expired keys, not the corpus. A requeue appends its frontier
-        rows and deletes their keys in the same commit, which keeps them
-        live (the store's upsert rule). A table whose log is full
-        (``SnapshotCatalog.room``) is rewritten without the keys instead.
+        doc_stats, one ``url`` key file for seen and frontier and, in
+        forget mode, one ``bucket`` key file for seen_bloom, written on
+        the driver and committed as delete deltas, so the write tracks the
+        expired keys and their shards, not the corpus. The rebuilt shards
+        and a requeue's frontier rows are appended in the same commit as
+        their keys' delete, which keeps them live (the store's upsert
+        rule). A table whose log is full is compacted instead.
 
         Commits one snapshot; returns the number of urls actually expired.
         """
@@ -355,7 +351,7 @@ class CrawlEngine:
         )
         seen = self.seen()
         expired = seen.join(urls_df, "url", "inner").persist()
-        gone = [row["url"] for row in expired.select("url").collect()]
+        gone = expired.select("url", "url_hash").collect()
         if not gone:
             expired.unpersist()
             return 0
@@ -367,104 +363,50 @@ class CrawlEngine:
         n_in_frontier = self.frontier().join(urls_df, "url", "left_semi").count()
 
         sid = self.catalog.next_sid()
-        tables: dict = {}
-        appends: dict = {}
-        deletes: dict = {}
-
-        def drop(names: list[str], key: str, deltas: int = 1) -> None:
-            """Delete the expired keys from ``names`` through one delete
-            delta, or rewrite the tables without them when a log is full."""
-            if not names:
-                return
-            room = self.catalog.room(names, deltas, create=False)
-            if room is not None and room >= len(gone):
-                path = self.catalog.stage_path(sid, f"deleted_{key}s")
-                if not os.path.exists(path):
-                    key_schema = T.StructType([T.StructField(key, T.StringType(), False)])
-                    tables_mod.write_local_parquet([(u,) for u in gone], key_schema, path)
-                deletes.update(dict.fromkeys(names, path))
-            else:
-                keys = urls_df.withColumnRenamed("url", key)
-                tables.update({n: self.catalog.without(n, keys) for n in names})
-
+        keys = [row["url"] for row in gone]
         # an index table is absent until the first round writes one
-        drop(
-            [n for n in ("documents", "postings", "doc_stats") if self.catalog.has_table(n)],
-            "doc_id",
-        )
-        if not reenqueue:
-            drop(["seen"], "url")
-            # Rebuild ONLY the touched shards from the surviving seen rows —
-            # exact by construction for both filter kinds (a Bloom bit can
-            # never be cleared at all). Shard-scoped rebuild costs O(seen
-            # rows hashing to touched shards) — at 4096 shards and a handful
-            # of expired urls that is seen/4096 per shard, not a 10^10-row
-            # filter rebuild.
-            blobs = self._load("seen_bloom", schemas.SEEN_BLOOM)
-            latest = (
-                blobs.groupBy("bucket")
-                .agg(
-                    F.max_by(
-                        F.struct("filter_blob", "n_items", "gen"), "gen"
-                    ).alias("s")
-                )
-                .select("bucket", "s.filter_blob", "s.n_items", "s.gen")
+        index = [n for n in ("documents", "postings", "doc_stats") if self.catalog.has_table(n)]
+        plans = [self.catalog.remove(sid, index, schemas.DOC_ID_KEY, keys)] if index else []
+        n_frontier = int(props.get("frontier_count", 0))
+        seen_count = int(props.get("seen_count", 0))
+        if reenqueue:
+            # the requeued rows carry the round delta's columns, as every
+            # other row under the frontier's projection does
+            requeued = expired.withColumn("host", F.parse_url("url", F.lit("HOST"))).select(
+                "url", "url_hash", "host", "depth", self._priority().alias("priority"),
+                F.lit(r).alias("discovered_round"), "first_seen_round",
             )
-            touched_buckets = expired.select(
-                seen_filter.shard_of(cfg.n_buckets).alias("bucket")
-            ).distinct()
-            surviving = seen.join(urls_df, "url", "left_anti")
-            surviving_touched = surviving.join(
-                F.broadcast(touched_buckets),
+            plans.append(
+                self.catalog.remove(
+                    sid, ["frontier"], schemas.URL_KEY, keys, rows={"frontier": requeued}
+                )
+            )
+            n_frontier += len(gone) - n_in_frontier
+        else:
+            names = ["seen", "frontier"] if n_in_frontier else ["seen"]
+            plans.append(self.catalog.remove(sid, names, schemas.URL_KEY, keys))
+            # Rebuild ONLY the touched shards from the surviving seen rows
+            # (exact for both kinds: a Bloom bit can never be cleared) and
+            # upsert them by bucket. A shard whose members all expired has
+            # no rebuilt row: its key alone deletes it, so probes there
+            # answer definitively unseen.
+            touched = sorted({row["url_hash"] % cfg.n_buckets for row in gone})
+            surviving_touched = seen.join(urls_df, "url", "left_anti").join(
+                F.broadcast(local_df(self.spark, [(b,) for b in touched], schemas.BUCKET_KEY)),
                 seen_filter.shard_of(cfg.n_buckets) == F.col("bucket"),
                 "left_semi",
             )
             rebuilt = self._fresh_filter(surviving_touched, gen=r)
-            untouched = latest.join(
-                F.broadcast(touched_buckets), "bucket", "left_anti"
-            )
-            # a touched shard whose members all expired simply has no row
-            # in the new table — probes there answer definitively unseen
-            tables["seen_bloom"] = untouched.unionByName(rebuilt)
-
-        n_frontier = int(props.get("frontier_count", 0))
-        if reenqueue:
-            # the requeued rows carry the round delta's columns, as every
-            # other row under the frontier's projection does
-            requeued = expired.select(
-                "url",
-                "url_hash",
-                F.parse_url("url", F.lit("HOST")).alias("host"),
-                "depth",
-                "first_seen_round",
-            ).select(
-                "url",
-                "url_hash",
-                "host",
-                "depth",
-                self._priority().alias("priority"),
-                F.lit(r).alias("discovered_round"),
-                "first_seen_round",
-            )
-            drop(["frontier"], "url", deltas=2)
-            if "frontier" in tables:
-                tables["frontier"] = tables["frontier"].unionByName(
-                    requeued.select(*schemas.FRONTIER.fieldNames())
+            plans.append(
+                self.catalog.remove(
+                    sid, ["seen_bloom"], schemas.BUCKET_KEY, touched, rows={"seen_bloom": rebuilt}
                 )
-            else:
-                appends["frontier"] = requeued
-            n_frontier += len(gone) - n_in_frontier
-        elif n_in_frontier:
-            drop(["frontier"], "url")
+            )
             n_frontier -= n_in_frontier
-
-        seen_count = int(props.get("seen_count", 0))
-        if not reenqueue:
             seen_count -= len(gone)
+        parts = ("tables", "appends", "deletes")
         self.catalog.commit(
-            tables,
-            appends=appends,
-            deletes=deletes,
+            **{k: {n: v for p in plans for n, v in p[k].items()} for k in parts},
             properties={
                 "round": r,
                 "seen_count": seen_count,
@@ -493,10 +435,11 @@ class CrawlEngine:
           3. frontier   — only under budgets: remainder ∪ new entries
                           (unbudgeted BFS needs no write at all — the
                           frontier IS the round delta)
-          4. seen_bloom — delta of touched buckets appended (latest gen
-                          wins on read; full rewrite only on compaction
-                          rounds), produced by the SAME fused cogroup pass
-                          as the probe — no second Python/Arrow pass
+          4. seen_bloom — the touched shards, upserted by bucket through
+                          the catalog's delete log (the whole table only
+                          when the log is full), produced by the SAME
+                          fused cogroup pass as the probe — no second
+                          Python/Arrow pass
           5. lineage    — per-partition row counters (north_star)
           6. metrics    — the round's counter row (from the observations)
 
@@ -619,7 +562,6 @@ class CrawlEngine:
         # the round pays a single candidates shuffle-by-bucket and a single
         # Python/Arrow pass for both the membership test and the blob
         # delta, instead of the two passes the split design cost.
-        compact = r % BLOOM_COMPACT_EVERY == 0
         # host is a pure function of url (parse_url above) and the
         # cogroup doesn't consult it — dropping it here keeps the
         # host STRING out of the bucket shuffle AND the Python/Arrow
@@ -633,16 +575,16 @@ class CrawlEngine:
             cfg.n_buckets,
             cfg.bits_per_bucket,
             gen=r,
-            emit_untouched=compact,
             dedup=True,
             kind=cfg.filter_kind,
             inner_buckets=cfg.cuckoo_inner_buckets,
         ).persist(StorageLevel.MEMORY_AND_DISK)
         # ONE aggregate materializes the cogroup into the cache and
-        # yields both counters the round needs: the post-dedup
-        # candidate count (from the blob rows — this job used to run
-        # AFTER the delta write) and the maybe-seen count, which picks
-        # the exact-join strategy below BEFORE the write job plans.
+        # yields what the round needs of it: the post-dedup candidate
+        # count (from the blob rows — this job used to run AFTER the
+        # delta write), the maybe-seen count, which picks the exact-join
+        # strategy below BEFORE the write job plans, and the touched
+        # buckets, the keys of the filter's upsert.
         stats = fused.agg(
             F.coalesce(
                 F.sum(
@@ -660,6 +602,9 @@ class CrawlEngine:
                 ),
                 F.lit(0),
             ).alias("n_maybe"),
+            F.collect_list(
+                F.when(F.col("filter_blob").isNotNull(), F.col("__bucket"))
+            ).alias("touched"),
         ).collect()[0]
         n_cand = int(stats["n_cand"])
         n_maybe = int(stats["n_maybe"])
@@ -751,8 +696,6 @@ class CrawlEngine:
                 new_entries.select(*schemas.FRONTIER.fieldNames())
             )
             frontier_path = self.catalog.stage_path(sid, "frontier")
-        bloom_path = self.catalog.stage_path(sid, "seen_bloom")
-
         # wave 5: per-partition lineage counters (north_star requirement;
         # also the skew-diagnosis signal — a hot host shows up as one
         # partition dwarfing the rest). Both the lineage and the metrics
@@ -814,12 +757,19 @@ class CrawlEngine:
             tail.append((stats_path, ranking.build_doc_stats(docs_stored)))
         if new_frontier is not None:
             tail.append((frontier_path, new_frontier))
-        # the blob rows of the fused pass ARE this round's filter delta
-        # (only touched buckets; full set on compaction rounds)
-        bloom_delta = fused.where(F.col("filter_blob").isNotNull()).select(
+        # the blob rows of the fused pass ARE this round's filter upsert;
+        # the tail writes them, or the compacted table when the log is full
+        delta = fused.where(F.col("filter_blob").isNotNull()).select(
             F.col("__bucket").alias("bucket"), "filter_blob", "n_items", "gen"
         )
-        tail.append((bloom_path, bloom_delta))
+        bloom = self.catalog.remove(
+            sid, ["seen_bloom"], schemas.BUCKET_KEY, sorted(stats["touched"]),
+            rows={"seen_bloom": delta},
+        )
+        written = bloom["tables"] or bloom["appends"]
+        bloom_path = self.catalog.stage_path(sid, "seen_bloom")
+        tail.append((bloom_path, written["seen_bloom"]))
+        written["seen_bloom"] = bloom_path
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark import inheritable_thread_target
@@ -849,11 +799,10 @@ class CrawlEngine:
         if postings_path is not None:
             appends["postings"] = postings_path
             appends["doc_stats"] = stats_path
-        # filter delta append per round; table replace on compaction rounds
-        (tables if compact else appends)["seen_bloom"] = bloom_path
         self.catalog.commit(
-            tables,
-            appends=appends,
+            {**tables, **bloom["tables"]},
+            appends={**appends, **bloom["appends"]},
+            deletes=bloom["deletes"],
             projections=projections,
             properties={
                 "round": r,

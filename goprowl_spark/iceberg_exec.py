@@ -28,6 +28,7 @@ Statement classes (all from goprowl_spark/tables.py):
   DELETE FROM t WHERE k IN (SELECT k FROM src)
   INSERT INTO t SELECT * FROM src
   INSERT OVERWRITE t SELECT * FROM src
+  INSERT OVERWRITE t (cols) SELECT cols FROM src
   CREATE OR REPLACE VIEW v AS SELECT cols FROM src
   CALL ...rollback_to_snapshot  — no DuckDB analog; raises with guidance
   (time travel is exercised against SnapshotCatalog directly).
@@ -120,7 +121,10 @@ _MERGE_RE = re.compile(
 _DELETE_RE = re.compile(
     r"^DELETE FROM (\S+)\nWHERE (\w+) IN \(SELECT (\w+) FROM (\w+)\)$"
 )
-_INSERT_RE = re.compile(r"^INSERT (INTO|OVERWRITE) (\S+)\nSELECT \* FROM (\w+)$")
+# SELECT *, or a projected entry's replace: one column list on both sides
+_INSERT_RE = re.compile(
+    r"^INSERT (INTO|OVERWRITE) (\S+)(?: \(([\w, ]+)\)\nSELECT \3|\nSELECT \*) FROM (\w+)$"
+)
 _VIEW_RE = re.compile(
     r"^CREATE OR REPLACE VIEW (\S+) AS\nSELECT ([\w, ]+) FROM (\S+)$"
 )
@@ -165,9 +169,11 @@ def to_duckdb_sql(stmt: str) -> list[str]:
         ]
     m = _INSERT_RE.match(stmt)
     if m:
-        mode, target, source = m.groups()
+        mode, target, cols, source = m.groups()
         t = _name(target)
-        out = [f"INSERT INTO {t} SELECT * FROM {source}"]
+        # a column list leaves the target's other columns null
+        into = f"{t} ({cols}) SELECT {cols}" if cols else f"{t} SELECT *"
+        out = [f"INSERT INTO {into} FROM {source}"]
         if mode == "OVERWRITE":
             # whole-table overwrite (the only overwrite the catalog emits)
             out.insert(0, f"DELETE FROM {t}")

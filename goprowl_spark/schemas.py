@@ -68,11 +68,11 @@ SEEN = T.StructType(
     ]
 )
 
-# Per-bucket Bloom filter blobs over seen url_hash values. Commits are
-# DELTAS: a round appends only the buckets it touched, stamped with a
-# generation (= round); readers resolve latest-generation-wins per bucket.
-# Periodic compaction (crawl.BLOOM_COMPACT_EVERY) rewrites the full
-# table to bound read amplification.
+# Per-bucket seen-filter shards (Bloom or cuckoo blobs) over seen url_hash
+# values, one live row per bucket. A round upserts the buckets it touched,
+# stamped with a generation (= round): it appends their rows and deletes
+# their keys through the catalog's delete log, which compacts the table
+# when the log is full (tables.SnapshotCatalog.remove).
 SEEN_BLOOM = T.StructType(
     [
         T.StructField("bucket", T.IntegerType(), False),
@@ -81,6 +81,12 @@ SEEN_BLOOM = T.StructType(
         T.StructField("gen", T.IntegerType(), False),
     ]
 )
+
+# The one-column keys of delete deltas: documents and the index tables are
+# keyed by doc_id, seen and frontier by url, seen_bloom by bucket.
+DOC_ID_KEY = T.StructType([T.StructField("doc_id", T.StringType(), False)])
+URL_KEY = T.StructType([T.StructField("url", T.StringType(), False)])
+BUCKET_KEY = T.StructType([T.StructField("bucket", T.IntegerType(), False)])
 
 # Synthetic page corpus — the sandbox "internet" the fetch stage joins
 # against instead of HTTP (reference fetch: collector.Visit colly.go:209).

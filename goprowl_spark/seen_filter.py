@@ -35,9 +35,11 @@ crawl engine checks it on resume).
 
 There are three cogroups: the shard merge (``update_blooms``), the probe
 (``probe_blooms``, the split-path reference) and the fused probe + update
-of a crawl round (``probe_and_update``). Neither kind deletes: the crawl's
-expiry rebuilds the touched shards from the exact seen table
-(``CrawlEngine.expire_urls``).
+of a crawl round (``probe_and_update``). A round's touched shards are
+upserted by bucket through the catalog's delete log, one live shard per
+bucket; several rows of a bucket (a union of deltas) resolve to the
+latest ``gen``. Neither kind deletes: the crawl's expiry rebuilds the
+touched shards from the exact seen table (``CrawlEngine.expire_urls``).
 
 At 10^10 URLs with ~1% fpp this is ~12 GB of blobs across all buckets —
 a few MB per bucket at n_buckets=4096, each comfortably a single Arrow
@@ -439,8 +441,8 @@ def _codec(
 
 
 def _latest(decode, blobs: pa.Table) -> tuple:
-    """Resolve latest-generation-wins over a bucket's blob rows (delta
-    commits append one row per touched bucket per round): the decoded shard
+    """Resolve latest-generation-wins over a bucket's blob rows (one from
+    a crawl's live load; several in a union of deltas): the decoded shard
     and its n_items."""
     i = int(np.argmax(blobs.column("gen").to_numpy()))
     return decode(blobs.column("filter_blob")[i].as_py()), blobs.column("n_items")[i].as_py()
@@ -533,9 +535,9 @@ def update_blooms(
     By default the result is a FULL merged table (safe to chain / commit
     as a replacement — no bucket is ever silently dropped). Pass
     ``emit_untouched=False`` for the delta form: only buckets receiving
-    new hashes are emitted, stamped ``gen``, to be APPENDED to the prior
-    table (latest generation wins on read — the crawl's per-round commit
-    shape, see probe_and_update). ``n_items`` counts hashes inserted for
+    new hashes are emitted, stamped ``gen``: an upsert by bucket, or a
+    delta to union with the prior table (latest generation wins; see
+    probe_and_update). ``n_items`` counts hashes inserted for
     Bloom (an upper bound on distinct members) and live entries for
     cuckoo (exact: fingerprints are stored individually, and a member's
     re-insert is a no-op). ``bits_per_bucket`` (Bloom) and
@@ -592,7 +594,6 @@ def probe_and_update(
     n_buckets: int = DEFAULT_N_BUCKETS,
     bits_per_bucket: int = DEFAULT_BITS_PER_BUCKET,
     gen: int = 0,
-    emit_untouched: bool = False,
     dedup: bool = False,
     kind: str = "bloom",
     inner_buckets: int = CUCKOO_INNER_BUCKETS,
@@ -612,7 +613,9 @@ def probe_and_update(
     * candidate rows — original columns + ``maybe_seen`` (the probe);
     * one blob row per touched bucket — the bucket's blob with ALL the
       bucket's candidate hashes inserted, stamped ``gen`` and carrying
-      ``n_cands`` (the bucket's candidate count after dedup).
+      ``n_cands`` (the bucket's candidate count after dedup). A bucket
+      without candidates emits nothing: the blob rows are the round's
+      upsert of ``seen_bloom``, keyed by bucket.
 
     With ``dedup`` the per-url min-depth reduction ALSO happens inside
     this pass: a url's rows always land in one bucket, so the bucket
@@ -662,7 +665,6 @@ def probe_and_update(
             if shard is None:
                 shard = fresh()
             n += shard.insert(arr)
-        if shard is not None and (cand.num_rows or emit_untouched):
             # the bucket's blob row, with null candidate columns
             row = {f.name: [None] for f in out}
             row.update(__bucket=[key[0].as_py()], filter_blob=[shard.encode()],

@@ -20,19 +20,19 @@ travel / resume story, and a write appends instead of rewriting
 (merge-on-read, Iceberg v2 equality deletes — see tables.py): an upsert
 appends the batch's documents, postings and doc_stats rows plus one delete
 delta of the batch's ``doc_id``s that all three tables' delete logs share;
-a delete appends only a one-key delete delta, written on the driver (no
-Spark job). Reads hide the superseded rows. The catalog owns the log's
-bounds (see tables.py): a write that
-``SnapshotCatalog.room`` turns away compacts instead, replacing all three
-tables with ``SnapshotCatalog.without`` the keys plus the batch, which
-empties the logs.
+a delete is ``SnapshotCatalog.remove`` of its key, as a crawl expiry's
+is: a one-key delete delta, written on the driver (no Spark job). Reads
+hide the superseded rows. The catalog owns the log's bounds (see
+tables.py): a write that ``SnapshotCatalog.room`` turns away compacts
+instead, replacing all three tables with ``SnapshotCatalog.without`` the
+keys (plus the batch), which empties the logs.
 
 The batch is read by each table write, so no input may be a PythonRDD: a
 ``createDataFrame`` over a Python list (``Scan ExistingRDD``) costs ~0.35 s
 of JVM plus ~0.9 s of Python-worker CPU per execution on a 4-core box.
-Driver-side rows (a compacting delete's key, a clear's empty tables) are
-built with session.local_df (a LocalRelation), and batch_store persists
-the caller's batch for the length of the commit.
+Driver-side rows (a clear's empty tables; the catalog's compacting
+delete keys) are built with session.local_df (a LocalRelation), and
+batch_store persists the caller's batch for the length of the commit.
 """
 
 from __future__ import annotations
@@ -43,7 +43,6 @@ import shutil
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from goprowl_spark import ranking, schemas
 from goprowl_spark.session import local_df
@@ -61,8 +60,6 @@ SCHEMAS = {
     POSTINGS: schemas.POSTINGS,
     DOC_STATS: schemas.DOC_STATS,
 }
-# a delete delta: the doc_ids whose older rows it hides
-KEY_SCHEMA = T.StructType([T.StructField("doc_id", T.StringType(), False)])
 
 
 class DocumentStore:
@@ -120,7 +117,7 @@ class DocumentStore:
                     keys = pq.read_table(staged, columns=["doc_id"]).column(0)
                     deleted = self.catalog.stage_path(sid, "deleted")
                     write_local_parquet(
-                        [(k,) for k in keys.to_pylist()], KEY_SCHEMA, deleted
+                        [(k,) for k in keys.to_pylist()], schemas.DOC_ID_KEY, deleted
                     )
                     return self.catalog.commit(
                         appends={**new, TABLE: staged},
@@ -139,18 +136,9 @@ class DocumentStore:
 
     def delete(self, doc_id: str) -> int:
         """S10: row-level delete (DELETE FROM documents WHERE url = ?)."""
-        room = self.catalog.room(self._tables(), deltas=1, create=False)
-        if room is None or room < 1:
-            keys = local_df(self.spark, [(doc_id,)], KEY_SCHEMA)
-            return self.catalog.commit(
-                {n: self.catalog.without(n, keys, SCHEMAS[n]) for n in self._tables()}
-            )
         sid = self.catalog.next_sid()
-        deleted = self.catalog.stage_path(sid, "deleted")
-        write_local_parquet([(doc_id,)], KEY_SCHEMA, deleted)
-        return self.catalog.commit(
-            deletes=dict.fromkeys(self._tables(), deleted), sid=sid
-        )
+        plan = self.catalog.remove(sid, self._tables(), schemas.DOC_ID_KEY, [doc_id], SCHEMAS)
+        return self.catalog.commit(**plan, sid=sid)
 
     def clear(self) -> int:
         """S11: truncate (reference recreates the index dir,

@@ -25,18 +25,22 @@ contract over plain parquet + a JSON manifest:
   delete log (an entry written before delete logs existed reads as
   ``"deletes": []``);
 * the delete log is Iceberg v2's equality deletes (merge-on-read): each
-  delete delta is a one-column parquet directory of keys, staged in the
+  delete delta is a one-column parquet directory of keys (strings, or
+  ``seen_bloom``'s integer ``bucket``), staged in the
   deleting commit's own directory, so its sequence number is that
   commit's ``<sid>``. A data row is dead when its key is in a delete delta
   whose sid is greater than the sid of the directory the row's file sits
   in — a key deleted and re-appended in one commit stays live. Replacing
   a table starts it with an empty log;
 * the catalog owns the log's bounds, MAX_DELTAS and MAX_DELETED_KEYS, for
-  every writer that deletes (the document store's upserts and deletes, the
-  crawl's ``expire_urls``): :meth:`SnapshotCatalog.room` says whether a
-  write may still log its keys, and :meth:`SnapshotCatalog.without` gives
-  the live rows minus those keys for the compacting rewrite it does
-  instead;
+  every writer that deletes (the document store's upserts and deletes, a
+  crawl round's ``seen_bloom`` upsert, the crawl's ``expire_urls``):
+  :meth:`SnapshotCatalog.room` says whether a write may still log its
+  keys, and :meth:`SnapshotCatalog.without` gives the live rows minus
+  those keys for the compacting rewrite it does instead;
+  :meth:`SnapshotCatalog.remove` makes that choice for a delete or an
+  upsert whose keys are on the driver (the store's upsert, whose keys
+  are known once its batch is staged, asks ``room`` itself);
 * :meth:`load` reads any table at any snapshot → the crawl resumes exactly
   from a checkpoint (north_rule requirement). A table with a delete log is
   read through one filter (see :func:`_live_rows`): no join, no extra
@@ -168,7 +172,9 @@ class SnapshotCatalog:
         per-table column list applied on load — lets TWO logical tables
         share ONE physical delta file (the crawl's seen/frontier delta is
         written once per round), the manifest-level equivalent of an
-        Iceberg metadata-only view; an append keeps its table's projection.
+        Iceberg metadata-only view; an append or a replace keeps its table's
+        projection, and a projected table's replacement holds only the
+        projected columns.
 
         ``deletes`` add a delete delta — one key column — to an existing
         table's delete log, hiding the rows with those keys in files
@@ -209,27 +215,24 @@ class SnapshotCatalog:
             parent = manifest["snapshots"].get(str(manifest["current"]))
             entries = dict(parent["tables"]) if parent else {}
             stmts = []
-            for values, keep, emit in (
-                (tables, False, iceberg_overwrite_sql),
-                (appends, True, iceberg_append_sql),
-            ):
+            for values, keep in ((tables, False), (appends, True)):
                 for name in sorted(values):
-                    old = entries.get(name) if keep else None
-                    paths, cols, dels = (
-                        (old["paths"], old["columns"], old.get("deletes", []))
-                        if old
-                        else ([], None, [])
-                    )
-                    view = projections.get(name)
+                    old = entries.get(name) or {"paths": [], "columns": None}
+                    view = projections.get(name) or old["columns"]
                     entries[name] = {
-                        "paths": paths + [values[name]],
-                        "columns": view or cols,
-                        "deletes": dels,
+                        "paths": (old["paths"] if keep else []) + [values[name]],
+                        "columns": view,
+                        "deletes": old.get("deletes", []) if keep else [],
                     }
                     if name in deletes:
                         continue  # emitted with its delete below
+                    # a projected entry's rows live in its base table
                     target = f"{name}_base" if view else name
-                    stmts.append(emit(target))
+                    stmts.append(
+                        iceberg_append_sql(target)
+                        if keep
+                        else iceberg_overwrite_sql(target, columns=view)
+                    )
                     if view:
                         stmts.append(iceberg_projection_view_sql(name, target, view))
             for name in sorted(deletes):
@@ -337,6 +340,34 @@ class SnapshotCatalog:
         live = self.load(name, schema=schema)
         return live.join(keys, keys.columns[0], "left_anti").select(*live.columns)
 
+    def remove(
+        self,
+        sid: int,
+        names: list[str],
+        key: T.StructType,
+        keys: list,
+        schemas: dict[str, T.StructType] | None = None,
+        rows: dict[str, DataFrame] | None = None,
+    ) -> dict[str, dict]:
+        """The ``tables``, ``appends`` and ``deletes`` of snapshot ``sid``'s
+        commit that deletes ``keys`` (of the one-column schema ``key``)
+        from every table in ``names`` and appends ``rows`` to those it
+        names, which stay live (an upsert). While :meth:`room` allows, the
+        keys go in one driver-written delete delta the tables share;
+        otherwise each table is replaced by :meth:`without` the keys (of
+        ``schemas[name]`` when absent) plus its ``rows``: a compaction."""
+        rows = rows or {}
+        room = self.room(names, 2 if rows else 1, create=False)
+        if room is not None and room >= len(keys):
+            path = self.stage_path(sid, f"deleted_{key.names[0]}")
+            write_local_parquet([(k,) for k in keys], key, path)
+            return {"tables": {}, "appends": rows, "deletes": dict.fromkeys(names, path)}
+        gone = local_df(self.spark, [(k,) for k in keys], key)
+        tables = {n: self.without(n, gone, (schemas or {}).get(n)) for n in names}
+        for name, df in rows.items():
+            tables[name] = tables[name].unionByName(df.select(*tables[name].columns))
+        return {"tables": tables, "appends": {}, "deletes": {}}
+
     def files(self, table: str, snapshot_id: int | None = None) -> list[str]:
         """The ``*.parquet`` data files of ``table`` at ``snapshot_id``
         (default: current); none for an absent table. A projected table
@@ -379,10 +410,13 @@ def _live_rows(df: DataFrame, paths: list[str], deletes: list[str]) -> DataFrame
     sid>:<key>"`` pairs it hides, and applied as one filter: a hash-set
     ``key IN (...)`` probe first, so a row outside the log pays one lookup;
     only a row inside it reads its file's sid from ``_metadata.file_path``
-    and probes the pair set.
+    and probes the pair set. A string key is matched as it is; an integer
+    key (``seen_bloom``'s ``bucket``) is matched as its decimal text, so
+    both sets stay string sets and take the same padding.
 
     The filter is SQL text, parsed in the JVM: a literal per key built
     through py4j costs ~0.5 ms, seconds for a large log."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     file_sids = sorted({_committed_sid(p) for p in paths})  # raises on a file of unknown age
@@ -390,8 +424,8 @@ def _live_rows(df: DataFrame, paths: list[str], deletes: list[str]) -> DataFrame
     for p in deletes:
         for f in parquet_data_files(p):
             keys = pq.ParquetFile(os.path.join(p, f)).read()
-            key = keys.column_names[0]
-            latest.update(dict.fromkeys(keys.column(0).to_pylist(), _committed_sid(p)))
+            key, key_type = keys.column_names[0], keys.schema.types[0]
+            latest.update(dict.fromkeys(map(str, keys.column(0).to_pylist()), _committed_sid(p)))
     if not latest:
         return df
     hidden = {k: [s for s in file_sids if s < d] for k, d in latest.items() if d > file_sids[0]}
@@ -404,6 +438,8 @@ def _live_rows(df: DataFrame, paths: list[str], deletes: list[str]) -> DataFrame
     pad = [f"-{i}:" for i in range(threshold + 1)]
     pairs = [f"{s}:{k}" for k, sids in hidden.items() for s in sids]
     col = "`" + key.replace("`", "``") + "`"
+    if not pa.types.is_string(key_type):
+        col = f"CAST({col} AS STRING)"
     return df.where(
         F.expr(
             f"NOT coalesce({col} IN ({', '.join(map(_sql_string, list(hidden) + pad))}) "
@@ -416,9 +452,11 @@ def _live_rows(df: DataFrame, paths: list[str], deletes: list[str]) -> DataFrame
 def _row_delta_sql(name: str, deleted: str, appended: str | None) -> list[str]:
     """The Iceberg statements for one table's delete delta in a commit,
     with its append, if any. An upsert is ``MERGE INTO`` when the appended
-    rows are unique by key (a document, its doc_stats row); MERGE rejects
-    a target row that several source rows match, so an upsert of rows that
-    share keys (a document's postings) is ``DELETE`` then ``INSERT``."""
+    rows are unique by key (a document, its doc_stats row, a filter shard)
+    and cover every deleted key. MERGE rejects a target row that several
+    source rows match, and leaves a target row no source row matches, so
+    any other upsert (a document's postings, an expiry that deletes a
+    shard whose members all expired) is ``DELETE`` then ``INSERT``."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -428,7 +466,8 @@ def _row_delta_sql(name: str, deleted: str, appended: str | None) -> list[str]:
     if appended is None:
         return [iceberg_delete_sql(name, key)]
     keys = pq.read_table(appended, columns=[key]).column(0)
-    if pc.count_distinct(keys).as_py() == len(keys):
+    covered = pc.all(pc.is_in(pq.read_table(deleted).column(0), value_set=keys))
+    if pc.count_distinct(keys).as_py() == len(keys) and covered.as_py():
         return [iceberg_merge_upsert_sql(name, key)]
     return [iceberg_delete_sql(name, key), iceberg_append_sql(name)]
 
@@ -499,11 +538,17 @@ def iceberg_append_sql(
 
 
 def iceberg_overwrite_sql(
-    name: str, source: str = "staged", catalog: str = "spark_catalog"
+    name: str,
+    source: str = "staged",
+    catalog: str = "spark_catalog",
+    columns: list[str] | None = None,
 ) -> str:
-    return (
-        f"INSERT OVERWRITE {_qualified(name, catalog)}\nSELECT * FROM {source}"
-    )
+    """A whole-table replace. With ``columns`` (a projected entry's base
+    table, whose staged files hold only the projection) it fills just
+    those columns and leaves the base table's others null."""
+    cols = ", ".join(columns or ["*"])
+    target = _qualified(name, catalog) + (f" ({cols})" if columns else "")
+    return f"INSERT OVERWRITE {target}\nSELECT {cols} FROM {source}"
 
 
 def iceberg_projection_view_sql(

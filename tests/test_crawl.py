@@ -378,6 +378,34 @@ def test_cuckoo_backend_trace_equal(spark, tmp_path):
 
 
 @pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
+def test_seen_bloom_keeps_one_live_row_per_bucket(spark, tmp_path, kind):
+    """A round upserts its touched filter shards through the catalog's
+    delete log: at every snapshot of a ten-round budgeted crawl a load
+    holds exactly one row per bucket that has members, the entry stays
+    within MAX_DELTAS, and the catalog's bound first replaces the table at
+    round 8 (start leaves one directory, each round adds a data and a
+    delete delta), the cadence of the crawl's old every-8-rounds rewrite."""
+    from goprowl_spark import tables
+
+    seeds = [corpus.url(0)]
+    cfg = CrawlConfig(seeds=seeds, max_depth=3, default_budget=1, filter_kind=kind)
+    engine = make_engine(spark, tmp_path, cfg)
+    engine.run()
+    assert_trace_equal(engine, crawl_oracle(N, seeds, 3, default_budget=1))
+    cat = engine.catalog
+    assert cat.snapshot_ids() == list(range(11))
+    dirs = []
+    for sid in cat.snapshot_ids():
+        buckets = [r["bucket"] for r in cat.load("seen_bloom", sid).select("bucket").collect()]
+        members = {r["url_hash"] % cfg.n_buckets for r in cat.load("seen", sid).collect()}
+        assert sorted(buckets) == sorted(members), sid
+        n, _ = cat.delta_counts("seen_bloom", sid)
+        assert n <= tables.MAX_DELTAS, sid
+        dirs.append(n)
+    assert dirs == [1, 3, 5, 7, 9, 11, 13, 15, 1, 3, 5]
+
+
+@pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
 def test_expire_forced_refetch(spark, tmp_path, kind):
     """reenqueue=True: the stale document drops, the url refetches next
     round with identical spans, and the seen set (depths, rounds) is
@@ -531,8 +559,9 @@ def test_expire_urls_writes_track_the_keys(spark, tmp_path, kind):
     """Within the delete log's bounds an expiry rewrites no table: in both
     modes documents, postings and doc_stats keep their data directories
     and gain one delete delta holding the expired doc_id; seen gains one
-    holding the url in forget mode only; a requeue appends its frontier
-    row and deletes its key in the same commit."""
+    holding the url in forget mode only, and seen_bloom one holding the
+    url's bucket, with the bucket's rebuilt shard appended; a requeue
+    appends its frontier row and deletes its key in the same commit."""
     import pyarrow.parquet as pq
 
     cfg = CrawlConfig(
@@ -541,7 +570,8 @@ def test_expire_urls_writes_track_the_keys(spark, tmp_path, kind):
     engine = make_engine(spark, tmp_path, cfg)
     engine.run()
     docs = sorted(r["doc_id"] for r in engine.documents().collect())
-    names = ("documents", "postings", "doc_stats", "seen", "frontier")
+    names = ("documents", "postings", "doc_stats", "seen", "frontier", "seen_bloom")
+    bucket = {r["url"]: r["url_hash"] % cfg.n_buckets for r in engine.seen().collect()}
 
     def entries():
         return {n: engine.catalog._entry(n, None)[1] for n in names}
@@ -551,17 +581,17 @@ def test_expire_urls_writes_track_the_keys(spark, tmp_path, kind):
         assert engine.expire_urls([x], reenqueue=reenqueue) == 1
         after = entries()
         logged = {"documents", "postings", "doc_stats"}
-        logged |= {"frontier"} if reenqueue else {"seen"}
+        logged |= {"frontier"} if reenqueue else {"seen", "seen_bloom"}
         for name in names:
             old, new = before[name], after[name]
-            grew = name == "frontier" and reenqueue
+            grew = name == ("frontier" if reenqueue else "seen_bloom")
             assert new["paths"][: len(old["paths"])] == old["paths"], name
             assert len(new["paths"]) == len(old["paths"]) + grew, name
             assert new["deletes"][: len(old["deletes"])] == old["deletes"], name
             assert len(new["deletes"]) == len(old["deletes"]) + (name in logged), name
             if name in logged:
                 keys = pq.read_table(new["deletes"][-1]).column(0).to_pylist()
-                assert keys == [x], name
+                assert keys == [bucket[x] if name == "seen_bloom" else x], name
     assert engine.frontier().where(F.col("url") == docs[1]).count() == 1
     assert engine.seen().where(F.col("url") == docs[0]).count() == 0
 

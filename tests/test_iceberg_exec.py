@@ -116,10 +116,12 @@ def test_merge_upsert_sql_matches_spark_end_state(spark, tmp_path):
 def test_expire_urls_sql_matches_catalog(spark, tmp_path, monkeypatch):
     """A crawl with index upkeep, replayed on a DuckDB mirror commit by
     commit, through expiries in both modes — delete deltas on documents,
-    postings, doc_stats and the projected seen and frontier entries, and a
-    requeue's MERGE into the frontier's base table — and a round after
-    them: after each op the mirror holds the rows the catalog loads. Past
-    MAX_DELTAS an expiry rewrites the tables instead, and the files its
+    postings, doc_stats, the projected seen and frontier entries and
+    seen_bloom, and a requeue's MERGE into the frontier's base table — and
+    a budgeted round after them: after each op the mirror holds the rows
+    the catalog loads, the filter's shards included. Past MAX_DELTAS an
+    expiry rewrites every table instead: a projected entry's INSERT
+    OVERWRITE fills its base table's projected columns, and the files an
     INSERT OVERWRITE … SELECT * reads keep the tables' column order."""
     import os
     from collections import Counter
@@ -145,26 +147,27 @@ def test_expire_urls_sql_matches_catalog(spark, tmp_path, monkeypatch):
         "doc_stats": "doc_id, doc_len",
         "seen": "url_hash, url, depth, first_seen_round",
         "frontier": "url, url_hash, host, depth, priority, discovered_round",
+        "seen_bloom": "bucket, filter_blob, n_items, gen",
     }
 
-    def replay(op, only=None):
+    def replay(op):
         n_before = len(eng.catalog.emitted_sql)
         op()
         for stmt in eng.catalog.emitted_sql[n_before:]:
             name = re.search(r"goprowl\.(\w+)", stmt).group(1)
-            if only is not None and name not in only:
-                continue
             if stmt.startswith("CREATE OR REPLACE VIEW"):
                 mirror.execute(stmt)
                 continue
             e = _latest_entry(tmp_path, re.sub("_base$", "", name))
             source = e["deletes"][-1] if stmt.startswith("DELETE") else e["paths"][-1]
             mirror.execute(stmt, sources={"staged": source, "updates": source})
-        for name in only or cols:
-            c = cols[name]
+        for name, c in cols.items():
             got = Counter(mirror.con.execute(f"SELECT {c} FROM goprowl.{name}").fetchall())
             table = eng.catalog.load(name, schema=index.get(name))
-            want = Counter(tuple(r) for r in table.select(*c.split(", ")).collect())
+            want = Counter(
+                tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+                for r in table.select(*c.split(", ")).collect()
+            )
             assert got == want, name
         return eng.catalog.emitted_sql[n_before:]
 
@@ -183,12 +186,25 @@ def test_expire_urls_sql_matches_catalog(spark, tmp_path, monkeypatch):
         "DELETE FROM spark_catalog.goprowl.seen_base",
         "DELETE FROM spark_catalog.goprowl.frontier_base",
         "MERGE INTO spark_catalog.goprowl.frontier_base t",
+        # an expired url's shard with no other member has no row to merge
+        "DELETE FROM spark_catalog.goprowl.seen_bloom",
     }, targets
-    replay(eng.crawl_round)
+    # a budgeted round replaces the frontier: its base table's projected
+    # columns, not the six-column file's positions
+    eng.config.default_budget = 1
+    budgeted = replay(eng.crawl_round)
+    assert (
+        "INSERT OVERWRITE spark_catalog.goprowl.frontier_base "
+        f"({cols['frontier']})\nSELECT {cols['frontier']} FROM staged"
+    ) in budgeted
 
     monkeypatch.setattr(tb, "MAX_DELTAS", 1)
-    replay(lambda: eng.expire_urls([docs[2]]), only=index)
-    for name, schema in index.items():
+    compacted = replay(lambda: eng.expire_urls([docs[2]]))
+    assert {s.split("\n")[0] for s in compacted if s.startswith("INSERT OVERWRITE")} == {
+        *(f"INSERT OVERWRITE spark_catalog.goprowl.{n}" for n in (*index, "seen_bloom")),
+        f"INSERT OVERWRITE spark_catalog.goprowl.seen_base ({cols['seen']})",
+    }
+    for name, schema in {**index, "seen_bloom": schemas.SEEN_BLOOM}.items():
         e = _latest_entry(tmp_path, name)
         assert e["deletes"] == [] and len(e["paths"]) == 1
         for f in tb.parquet_data_files(e["paths"][0]):
@@ -203,7 +219,7 @@ def _replay_commit(mirror, stmts, tables, appends):
     that statement's target table."""
     paths = {**tables, **appends}
     for stmt in stmts:
-        m = re.search(r"INSERT (?:INTO|OVERWRITE) \S+\.(\w+)\n", stmt)
+        m = re.search(r"INSERT (?:INTO|OVERWRITE) \S+\.(\w+)[ \n]", stmt)
         if m:
             logical = re.sub(r"_base$", "", m.group(1))
             mirror.execute(stmt, sources={"staged": paths[logical]})

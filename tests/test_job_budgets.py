@@ -148,8 +148,9 @@ def test_store_and_engine_op_job_budget(op_jobs, op):
 # on a cuckoo crawl with index upkeep whose delete logs have room. The
 # rows leave through driver-written delete deltas; the jobs are the loads,
 # the expired-url collect, the frontier probe count, and the forget mode's
-# shard rebuild or the requeue's frontier append.
-EXPIRE_JOBS = {"forget": 16, "reenqueue": 9}
+# rebuild and append of the touched shards or the requeue's frontier
+# append.
+EXPIRE_JOBS = {"forget": 12, "reenqueue": 9}
 
 
 @pytest.fixture(scope="module")

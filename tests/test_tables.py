@@ -53,10 +53,16 @@ def test_merge_upsert_replaces_by_key(spark, tmp_path):
     assert _rows(cat.load("t", snapshot_id=0)) == {("a", 1), ("b", 1)}
 
 
-def test_delete_log_hides_only_older_rows(spark, tmp_path):
+def test_delete_log_hides_only_older_rows(spark, tmp_path, monkeypatch):
     """A delete hides its keys' rows in files committed before it: a key
     re-appended later is live again, each snapshot sees only its own log,
-    one delete delta may serve two tables, and a replace empties the log."""
+    one delete delta may serve two tables, and a replace empties the log.
+    A string key's filter is the same SQL text it always was; an integer
+    key (seen_bloom's bucket) deleted and re-appended in one commit keeps
+    the appended row and hides the older one."""
+    from goprowl_spark import schemas
+    from goprowl_spark import tables as tb
+
     cat = SnapshotCatalog(spark, str(tmp_path))
     base = spark.createDataFrame([("a", 0), ("b", 0), ("c", 0)], "k string, v int")
     cat.commit({"t": base, "u": base})
@@ -64,7 +70,23 @@ def test_delete_log_hides_only_older_rows(spark, tmp_path):
     gone = cat.stage_path(sid, "gone")
     spark.createDataFrame([("a",), ("b",)], "k string").write.parquet(gone)
     cat.commit(deletes={"t": gone, "u": gone}, sid=sid)
+    texts = []
+    expr = tb.F.expr
+    monkeypatch.setattr(tb.F, "expr", lambda text: texts.append(text) or expr(text))
     assert _rows(cat.load("t")) == _rows(cat.load("u")) == {("c", 0)}
+    pad = ", ".join(f"'-{i}:'" for i in range(11))
+    assert texts[0] == (
+        f"NOT coalesce(`k` IN ('a', 'b', {pad}) AND concat(regexp_extract("
+        "_metadata.file_path, '.*/snapshots/([0-9]+)-[0-9a-f]+/', 1), ':', `k`) "
+        f"IN ('0:a', '0:b', {pad}), false)"
+    )
+    cat.commit({"s": spark.createDataFrame([(1, 0), (2, 0)], "bucket int, v int")})
+    sid = cat.next_sid()
+    shard = {"s": spark.createDataFrame([(2, 1)], "bucket int, v int")}
+    cat.commit(**cat.remove(sid, ["s"], schemas.BUCKET_KEY, [2], rows=shard), sid=sid)
+    assert _rows(cat.load("s")) == {(1, 0), (2, 1)}
+    assert "CAST(`bucket` AS STRING) IN ('2', " in texts[-1]
+    monkeypatch.undo()
     cat.commit(appends={"t": spark.createDataFrame([("a", 2)], "k string, v int")})
     assert _rows(cat.load("t")) == {("a", 2), ("c", 0)}
     assert _rows(cat.load("t", snapshot_id=0)) == _rows(base)
@@ -194,7 +216,9 @@ def test_iceberg_sql_emission_goldens(spark, tmp_path):
         sid=sid,
     )
     assert cat.emitted_sql == [
-        "INSERT OVERWRITE spark_catalog.goprowl.frontier_base\nSELECT * FROM staged",
+        # a projected entry's replace writes only the projection's columns
+        "INSERT OVERWRITE spark_catalog.goprowl.frontier_base (url, url_hash, depth)\n"
+        "SELECT url, url_hash, depth FROM staged",
         "CREATE OR REPLACE VIEW spark_catalog.goprowl.frontier AS\n"
         "SELECT url, url_hash, depth FROM spark_catalog.goprowl.frontier_base",
         "INSERT INTO spark_catalog.goprowl.crawl_metrics\nSELECT * FROM staged",
